@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line on stdout. Per-query
   * progress goes to stderr so slow queries are visible live. */
@@ -48,34 +46,13 @@ object Bench {
     }
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: the generated-class LRU is far too small
-      // for a 180+-query suite — one window-heavy detector plan alone
-      // compiles ~145 projections per action, so mid-suite every action
-      // recompiles its whole codegen set (~15-30 ms each). This, not JIT
-      // pressure, is the measured suite-context distortion mechanism
-      // (round 12): q134 spent ~10 of its 14.4 s in CodeGenerator.
-      // 10000 since r15 (was 5000, sized for 186 queries in r12; the
-      // suite is 293+). The r15 SPARK_GRAFT_DIAG census cleared the OTHER
-      // suspect: CodeHeap peaks at 176 MB of the reserved 512 MB and
-      // metaspace at 222 MB across all 293 queries, so the JIT code cache
-      // is NOT saturating and ReservedCodeCacheSize stays as-is.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      // The bench exercises the 100 TB plan: percentile thresholds run
-      // the approx (Greenwald–Khanna) path a production deployment would
-      // ship — the exact form stays ONLY for the sf0.01 oracle gate,
-      // where cross-engine hash parity needs true order statistics.
-      // SPARK_GRAFT_PCTL=exact restores the gate behavior for A/B runs.
-      .config(graft.ops.Quantiles.ModeConf,
-        sys.env.getOrElse("SPARK_GRAFT_PCTL", "approx"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cores()
+    // The bench exercises the 100 TB plan: percentile thresholds run
+    // the approx (Greenwald–Khanna) path a production deployment would
+    // ship — the exact form stays ONLY for the sf0.01 oracle gate,
+    // where cross-engine hash parity needs true order statistics.
+    // SPARK_GRAFT_PCTL=exact restores the gate behavior for A/B runs.
+    val spark = Harness.session(cpus, sys.env.getOrElse("SPARK_GRAFT_PCTL", "approx"))
     // Warm-up outside the timed section: JVM/codegen classloading + file
     // metadata caches, so per-query numbers measure the queries. The
     // second statement exercises the suite's hot operator shapes (window
@@ -102,8 +79,9 @@ object Bench {
     // Scalar-kernel warm-up: one small driver-side solve per kernel family
     // compiles the pure-Scala hot loops (cvxEDA, FFT, IIR, detectors, FSM)
     // up front so `cold_total` is less compiler-noise-dominated. Suite-
-    // context honesty comes from the codegen-cache sizing above plus the
-    // median-of-3 protocol below, not from this block.
+    // context honesty comes from the codegen-cache sizing in
+    // Harness.session plus the median-of-3 protocol below, not from this
+    // block.
     locally {
       val n = 4096
       val sig = Array.tabulate(n)(i =>
@@ -123,19 +101,40 @@ object Bench {
       try graft.core.Tables.table(spark, sfDir, t).count()
       catch { case _: Throwable => }
     }
-    // Optional comma-separated query-name filter and repeat count for
-    // targeted profiling. Default 3: single cold runs are codegen/JIT-
-    // dominated and swing ±2x on the kernel queries run-to-run (rounds 5/6
-    // chased phantom regressions from exactly this), so the reported
-    // per-query number is the MEDIAN of 3 back-to-back runs (the warm
-    // plateau) and the first-run sum is kept as `cold_total`.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // Optional repeat count for targeted profiling (SPARK_GRAFT_ONLY
+    // narrows the query set, see Harness.selected). Default 3: single
+    // cold runs are codegen/JIT-dominated and swing ±2x on the kernel
+    // queries run-to-run (rounds 5/6 chased phantom regressions from
+    // exactly this), so the reported per-query number is the MEDIAN of 3
+    // back-to-back runs (the warm plateau) and the first-run sum is kept
+    // as `cold_total`.
     val repeat = sys.env.getOrElse("SPARK_GRAFT_REPEAT", "3").toInt
+    // Unrecorded warm-up repeats (fresh-JVM child only): the child's
+    // "warm median" otherwise starts from a cold JIT and reads
+    // JIT-dominated numbers (r16: q290 8.38 s fresh vs 3.85 s suite,
+    // ratio 0.46) — meaningless in BOTH directions as a suite-state
+    // check. Tolerant parse: a malformed value must not kill the child
+    // JVM before any measurement — but it must degrade LOUDLY: 0 warmups
+    // silently turns the fresh-JVM medians into JIT readings (the r17
+    // distortion).
+    val warmups = sys.env.get("SPARK_GRAFT_WARMUP_REPEATS") match {
+      case None => 0
+      case Some(v) => scala.util.Try(v.trim.toInt).getOrElse {
+        System.err.println(
+          s"[bench] WARN ignoring malformed SPARK_GRAFT_WARMUP_REPEATS='$v'" +
+            " — running 0 warm-ups; fresh medians may read JIT time")
+        0
+      }
+    }
     // SPARK_GRAFT_DIAG=1: per-query JVM-state line (GC time delta, code
     // cache / metaspace occupancy, loaded-class count, block-manager
-    // memory) — the instrumentation that localizes suite-context
-    // inflation to its mechanism instead of guessing.
+    // files) plus the last repeat's query-function build time and its
+    // engine counters (jobs, stages, tasks, task time, task GC, shuffle)
+    // — the instrumentation that localizes suite-context inflation to its
+    // mechanism instead of guessing.
     val diag = sys.env.contains("SPARK_GRAFT_DIAG")
+    val metrics = new Harness.QueryMetrics
+    if (diag) spark.sparkContext.addSparkListener(metrics)
     def gcMillis(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -147,7 +146,7 @@ object Bench {
         .filter(_.getName.startsWith(prefix)).map(_.getUsage.getUsed).sum >> 20
     }
     var lastGc = gcMillis()
-    def diagLine(name: String): Unit = if (diag) {
+    def diagLine(name: String, buildMs: Double): Unit = if (diag) {
       val gc = gcMillis(); val dGc = gc - lastGc; lastGc = gc
       val cc = poolUsedMb("CodeHeap")
       val meta = poolUsedMb("Metaspace")
@@ -170,93 +169,52 @@ object Bench {
       }
       System.err.println(
         f"[diag]  $name%-22s gc+${dGc}ms codeheap=${cc}MB " +
-          f"metaspace=${meta}MB classes=$classes blockfiles=$bm")
+          f"metaspace=${meta}MB classes=$classes blockfiles=$bm " +
+          f"build=$buildMs%.1fms $metrics")
     }
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .map { case (name, fn) =>
-        if (sys.env.contains("SPARK_GRAFT_EXPLAIN"))
-          System.err.println(s"== $name ==\n" + fn(spark, sfDir)
-            .queryExecution.explainString(
-              org.apache.spark.sql.execution.FormattedMode))
-        val cachedBefore = spark.sparkContext.getPersistentRDDs.keySet
-        // Unrecorded warm-up repeats (fresh-JVM child only): the child's
-        // "warm median" otherwise starts from a cold JIT and reads
-        // JIT-dominated numbers (r16: q290 8.38 s fresh vs 3.85 s suite,
-        // ratio 0.46) — meaningless in BOTH directions as a suite-state
-        // check. Same between-repeat cleanup as the measured loop so the
-        // first measured repeat starts from the same persist state.
-        // Tolerant parse: a malformed value must not kill the child JVM
-        // before any measurement (it runs outside the per-repeat catch)
-        // — but it must degrade LOUDLY: 0 warmups silently turns the
-        // fresh-JVM medians into JIT readings (the r17 distortion).
-        val warmups = sys.env.get("SPARK_GRAFT_WARMUP_REPEATS") match {
-          case None => 0
-          case Some(v) => scala.util.Try(v.trim.toInt).getOrElse {
-            System.err.println(
-              s"[bench] WARN ignoring malformed SPARK_GRAFT_WARMUP_REPEATS='$v'" +
-                " — running 0 warm-ups; fresh medians may read JIT time")
-            0
-          }
-        }
-        (1 to warmups).foreach { _ =>
-          val beforeWarm = spark.sparkContext.getPersistentRDDs.keySet
+    // Every run below (EXPLAIN, warm-up, measured repeat, recheck) is
+    // Harness.isolated: checkpoint-heavy queries (q59 cvxEDA) create
+    // localCheckpoint blocks per run, and dropping them only after the
+    // repeat loop left later repeats running with earlier repeats'
+    // blocks resident (round-15 verdict #1).
+    val results = Harness.selected().map { case (name, fn) =>
+      if (sys.env.contains("SPARK_GRAFT_EXPLAIN")) Harness.isolated(spark) {
+        System.err.println(s"== $name ==\n" + fn(spark, sfDir)
+          .queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+      }
+      (1 to warmups).foreach { _ =>
+        Harness.isolated(spark) {
           try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.collect {
-            case (id, rdd) if !beforeWarm.contains(id) => rdd.unpersist(true)
-          }
         }
-        val times = (1 to repeat).map { r =>
-          // Snapshot BEFORE the repeat: the RDD-loop half of the cleanup
-          // below is scoped to this repeat's own delta (never a persist
-          // that predates the query). The clearCache half is global by
-          // design — see the post-query cleanup comment.
-          val beforeRepeat = spark.sparkContext.getPersistentRDDs.keySet
+      }
+      var buildMs = 0.0
+      val times = (1 to repeat).map { _ =>
+        metrics.reset()
+        Harness.isolated(spark) {
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch {
+          try {
+            val df = fn(spark, sfDir)
+            buildMs = (System.nanoTime() - t0) / 1e6
+            df.count()
+          } catch {
             case e: Throwable => System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           }
-          val dt = (System.nanoTime() - t0) / 1e9
-          // BETWEEN-repeat cleanup (round-15 verdict #1): checkpoint-heavy
-          // queries (q59 cvxEDA) create localCheckpoint blocks per run;
-          // dropping them only after the 3-repeat loop left repeats 2-3
-          // running with repeats 1-2's blocks resident — q59's warm median
-          // read 3.8x its own cold first run. Blocking unpersist of the
-          // repeat's own delta restores repeat-to-repeat independence.
-          if (r < repeat) {
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.collect {
-              case (id, rdd) if !beforeRepeat.contains(id) => rdd.unpersist(true)
-            }
-          }
-          dt
+          (System.nanoTime() - t0) / 1e9
         }
-        val dt = times.sorted.apply((times.length - 1) / 2) // lower median
-        System.err.println(
-          f"[bench] $name%-22s $dt%8.2f s  (cold ${times.head}%.2f)")
-        // Spark's ContextCleaner reclaims broadcast blocks and shuffle state
-        // only when the JVM GCs their references; across 60+ sequential
-        // queries in one local JVM the accumulated state degrades later
-        // queries (observed: q23/q24 4-6x slower mid-suite than isolated).
-        // An explicit GC between queries keeps each measurement honest.
-        // clearCache drops CacheManager-registered persists (the shared
-        // edit-frame memo re-persists on demand, so the next query that
-        // needs it starts cold — same as isolation); the RDD loop drops
-        // localCheckpoint state, which the CacheManager does not track.
-        spark.catalog.clearCache()
-        // BLOCKING unpersist: the async form returns while block removal
-        // is still in flight, and a heavy previous query's checkpoint
-        // blocks then drain DURING the next query's first repeat
-        // (observed: q273 1.87x slower in-suite than rerun, with
-        // q272's corpus-row checkpoint as its neighbor).
-        spark.sparkContext.getPersistentRDDs.collect {
-          case (id, rdd) if !cachedBefore.contains(id) => rdd.unpersist(true)
-        }
-        System.gc()
-        diagLine(name)
-        (name, dt, times.head)
       }
+      val dt = Harness.lowerMedian(times)
+      System.err.println(
+        f"[bench] $name%-22s $dt%8.2f s  (cold ${times.head}%.2f)")
+      // Spark's ContextCleaner reclaims broadcast blocks and shuffle state
+      // only when the JVM GCs their references; across 60+ sequential
+      // queries in one local JVM the accumulated state degrades later
+      // queries (observed: q23/q24 4-6x slower mid-suite than isolated).
+      // An explicit GC between queries keeps each measurement honest.
+      System.gc()
+      diagLine(name, buildMs)
+      (name, dt, times.head)
+    }
     // Measurement-credibility self-check (round-14 verdict #1): re-run
     // the 5 slowest queries in a FRESH FORKED JVM and compare their
     // fresh-process warm medians against the in-suite medians. The r13
@@ -299,7 +257,7 @@ object Bench {
         pb.environment().put("SPARK_GRAFT_FRESH_CHECK", "0")
         pb.environment().put("SPARK_GRAFT_DETAIL_OUT", childDetail.toString)
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+        pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
         pb.environment().put("SPARK_GRAFT_REPEAT", repeat.toString)
         // 2 unrecorded warm-ups before the child's measured median: a
         // cold child JVM reads JIT time, not suite-state inflation, and
@@ -409,17 +367,14 @@ object Bench {
           var rep = 0
           while (rep < repeat && !failed) {
             rep += 1
-            val before = spark.sparkContext.getPersistentRDDs.keySet
-            val t0 = System.nanoTime()
-            try { fn(spark, sfDir).count() } catch {
-              case e: Throwable =>
-                failed = true
-                System.err.println(s"[bench] recheck $name FAILED: ${e.getMessage}")
-            }
-            val dt = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            spark.sparkContext.getPersistentRDDs.collect {
-              case (id, rdd) if !before.contains(id) => rdd.unpersist(true)
+            val dt = Harness.isolated(spark) {
+              val t0 = System.nanoTime()
+              try { fn(spark, sfDir).count() } catch {
+                case e: Throwable =>
+                  failed = true
+                  System.err.println(s"[bench] recheck $name FAILED: ${e.getMessage}")
+              }
+              (System.nanoTime() - t0) / 1e9
             }
             System.gc()
             if (!failed) times += dt
@@ -429,7 +384,7 @@ object Bench {
               "from recheck_queries (verdict on this miss: unknown)")
             None
           } else {
-            val med = times.sorted.apply((times.length - 1) / 2)
+            val med = Harness.lowerMedian(times.toSeq)
             val rr = med / fresh
             System.err.println(
               f"[bench] recheck $name%-22s fresh=$fresh%.2f sweep-ratio=$r0%.2f " +

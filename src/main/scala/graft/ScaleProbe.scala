@@ -66,16 +66,7 @@ object ScaleProbe {
       .filter(col("src") =!= col("dst"))
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores(), "exact")
     val scales = sys.env.getOrElse("SPARK_GRAFT_PROBE_SCALES", "1,10")
       .split(",").map(_.trim.toInt).toSeq
     val baseDocs = sys.env.getOrElse("SPARK_GRAFT_PROBE_DOCS", "5000").toLong
@@ -134,6 +125,7 @@ object ScaleProbe {
 
     val baseNodes = sys.env.getOrElse("SPARK_GRAFT_PROBE_NODES", "20000").toLong
     val onlyOps = sys.env.get("SPARK_GRAFT_PROBE_OPS").map(_.split(",").toSet)
+    val needEdges = onlyOps.forall(_.exists(Set("pagerank", "hits", "hyperball")))
     val results = scales.map { sc =>
       // materialize to parquet first so the ops time their own work,
       // not the generator expressions
@@ -141,41 +133,35 @@ object ScaleProbe {
         .write.mode("overwrite").parquet(s"$tmp/docs_$sc")
       synthEmb(spark, baseVecs * sc)
         .write.mode("overwrite").parquet(s"$tmp/emb_$sc")
-      synthEdges(spark, baseNodes * sc)
-        .write.mode("overwrite").parquet(s"$tmp/edges_$sc")
       val d = spark.read.parquet(s"$tmp/docs_$sc")
       val e = spark.read.parquet(s"$tmp/emb_$sc")
-      val g = spark.read.parquet(s"$tmp/edges_$sc")
+      val g = Option.when(needEdges) {
+        synthEdges(spark, baseNodes * sc)
+          .write.mode("overwrite").parquet(s"$tmp/edges_$sc")
+        spark.read.parquet(s"$tmp/edges_$sc")
+      }
       System.err.println(s"[probe] scale ${sc}x: ${d.count()} docs, " +
-        s"${e.count()} vectors, ${g.count()} edges")
-      val times = ops(d, e, g, s"s$sc")
+        s"${e.count()} vectors" + g.fold("")(x => s", ${x.count()} edges"))
+      // no edges table when no graph op is selected: only the graph
+      // ops' thunks read it, and the filter below drops them
+      val times = ops(d, e, g.orNull, s"s$sc")
         .filter { case (name, _) => onlyOps.forall(_.contains(name)) }
         .map { case (name, mk) =>
         // one unrecorded warm-up per op: the FIRST scale otherwise pays
         // every op's one-time codegen/JIT cost and the exponent reads
         // systematically low (the first probe run showed ivf_cell_split
         // at a NEGATIVE exponent purely from this)
-        locally {
-          val before = spark.sparkContext.getPersistentRDDs.keySet
-          mk().count()
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.collect {
-            case (id, rdd) if !before.contains(id) => rdd.unpersist(true)
-          }
-        }
+        Harness.isolated(spark)(mk().count())
         val ts = (1 to repeat).map { _ =>
-          val before = spark.sparkContext.getPersistentRDDs.keySet
-          val t0 = System.nanoTime()
-          mk().count()
-          val dt = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.collect {
-            case (id, rdd) if !before.contains(id) => rdd.unpersist(true)
+          val dt = Harness.isolated(spark) {
+            val t0 = System.nanoTime()
+            mk().count()
+            (System.nanoTime() - t0) / 1e9
           }
           System.gc()
           dt
         }
-        val med = ts.sorted.apply((ts.length - 1) / 2)
+        val med = Harness.lowerMedian(ts)
         System.err.println(f"[probe] ${sc}x $name%-20s $med%8.2f s")
         name -> med
       }

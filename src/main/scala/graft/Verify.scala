@@ -1,42 +1,30 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // static conf, default 100: far too small for a 168-query surface —
-      // window-heavy plans alone compile ~145 projections per action, so
-      // the LRU thrashes and every action recompiles (round-12 root cause
-      // of the kernel-class suite distortion)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cores(), "exact")
     new java.io.File(outDir).mkdirs()
-    // Optional name filter for fast local iteration on a few queries
-    // (tools/check.py fails on any missing dump, so the SQL map is
-    // filtered too). The driver sets no environment: full run.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
+    // Optional SPARK_GRAFT_ONLY name filter for fast local iteration on
+    // a few queries (tools/check.py fails on any missing dump, so the SQL
+    // map is filtered too). The driver sets no environment: full run.
+    val pending = Harness.selected()
+    val names = pending.map(_._1)
     // Loud, unmissable marker when the filter is active: a filtered dump
     // must never be mistaken for a full verification run.
-    only match {
-      case Some(names) =>
-        System.err.println(
-          s"[verify] *** PARTIAL RUN: SPARK_GRAFT_ONLY=${names.toSeq.sorted.mkString(",")} " +
-            s"(${names.size} of ${SparkEntry.queries.size} queries) — NOT a full verification ***")
-        Files.writeString(Paths.get(s"$outDir/PARTIAL_RUN.txt"),
-          s"SPARK_GRAFT_ONLY=${names.toSeq.sorted.mkString(",")}\n")
-      case None =>
-        // A full run clears any stale marker: per-query dumps overwrite in
-        // place, so a reused outDir is a complete verification again.
-        Files.deleteIfExists(Paths.get(s"$outDir/PARTIAL_RUN.txt"))
+    val partial = names.size < SparkEntry.queries.size
+    if (partial) {
+      System.err.println(
+        s"[verify] *** PARTIAL RUN: SPARK_GRAFT_ONLY=${names.mkString(",")} " +
+          s"(${names.size} of ${SparkEntry.queries.size} queries) — NOT a full verification ***")
+      Files.writeString(Paths.get(s"$outDir/PARTIAL_RUN.txt"),
+        s"SPARK_GRAFT_ONLY=${names.mkString(",")}\n")
+    } else {
+      // A full run clears any stale marker: per-query dumps overwrite in
+      // place, so a reused outDir is a complete verification again.
+      Files.deleteIfExists(Paths.get(s"$outDir/PARTIAL_RUN.txt"))
     }
     // oracle_sql.json is written BEFORE the query dumps (r17): it used
     // to be written last, so a wedged or externally-killed run left NO
@@ -44,7 +32,7 @@ object Verify {
     // though most dumps were on disk. Written first, a partial run
     // still adjudicates every completed query (check.py counts the
     // missing ones as not-run).
-    writeOracleJson(outDir, only)
+    writeOracleJson(outDir, Option.when(partial)(names.toSet))
     // Deadlock watchdog (r17): the lazy-checkpoint ABBA (see
     // PlanContractSpec's ban) WEDGED a concurrent Verify this round —
     // main parked forever and the external kill would have zeroed the
@@ -75,8 +63,6 @@ object Verify {
     // kill — so verify wall-time is a correctness-gate liability, not
     // just a convenience. 4 submitters cut the full sf0.01 run ~2.5x
     // (sequential ~173 s) while keeping peak memory far from the heap.
-    val pending = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     try {
       pending.map { case (name, fn) =>

@@ -773,11 +773,23 @@ object TextAnalysis {
     * scan size through explode/aggregate multipliers) but the right
     * ORDER at both ends: a few MB of features → 1 partition instead of
     * one per core; a 100 TB corpus → thousands, where a fixed core
-    * count would serialize each GD step. */
-  private def sizedWidth(df: DataFrame): Int = {
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val target = BigInt(32L << 20)
-    ((bytes + target - 1) / target).max(1).min(1 << 20).toInt
+    * count would serialize each GD step. Unknown statistics fall back
+    * to the default parallelism instead of clamping to 1 << 20 tasks
+    * per GD step: an RDD-backed input reports
+    * `spark.sql.defaultSizeInBytes` (Long.MaxValue by default), and the
+    * plan above it scales that sentinel down by row-width ratios, so
+    * the leaves are checked as well as the root. */
+  private[graft] def sizedWidth(df: DataFrame): Int = {
+    val spark = df.sparkSession
+    val plan = df.queryExecution.optimizedPlan
+    val bytes = plan.stats.sizeInBytes
+    val unknown = spark.sessionState.conf.defaultSizeInBytes
+    if ((plan +: plan.collectLeaves()).exists(_.stats.sizeInBytes >= unknown))
+      spark.sparkContext.defaultParallelism
+    else {
+      val target = BigInt(32L << 20)
+      ((bytes + target - 1) / target).max(1).min(1 << 20).toInt
+    }
   }
 
   /** Per-doc 6-dp margins against a literal weight vector: terms

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** AQE audit (round-10 verdict #7, widened in r16 per round-15 verdict
   * #4): execute queries at a given SF and report whether the final
   * adaptive plans contain skew-join splits ("skew=true") or nested-loop
@@ -16,23 +14,18 @@ import org.apache.spark.sql.SparkSession
 object AqeAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    only.foreach(f => println(
-      s"[aqe] *** PARTIAL AUDIT: ${f.size} of ${graft.SparkEntry.queries.size} queries ***"))
-    val names = graft.SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.forall(_.contains(n)))
+    val spark = graft.Harness.session(graft.Harness.cores(), "exact")
+    val pending = graft.Harness.selected()
+    if (pending.size < graft.SparkEntry.queries.size) println(
+      s"[aqe] *** PARTIAL AUDIT: ${pending.size} of ${graft.SparkEntry.queries.size} queries ***")
     var skewTotal = 0
     var errors = 0
-    names.foreach { n =>
-      val df = graft.SparkEntry.queries(n)(spark, sfDir)
+    // the query's own persists are dropped after it, so a
+    // checkpoint-heavy query's blocks never skew (pun intended) the
+    // next one's plan
+    pending.foreach { case (n, fn) => graft.Harness.isolated(spark) {
       try {
+        val df = fn(spark, sfDir)
         // materialize THIS DataFrame's own adaptive execution so AQE
         // finalizes the plan we inspect. df.count() plans a SEPARATE
         // query and leaves df's AdaptiveSparkPlan in its initial state
@@ -55,12 +48,8 @@ object AqeAudit {
         errors += 1
         println(s"[aqe] $n ERROR: ${e.getMessage}")
       }
-      // mirror the bench's between-query hygiene so a checkpoint-heavy
-      // query's blocks never skew (pun intended) the next one's plan
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-    println(s"[aqe] == ${names.size} audited (${names.size - errors} ok, " +
+    } }
+    println(s"[aqe] == ${pending.size} audited (${pending.size - errors} ok, " +
       s"$errors errored), total skewSplits=$skewTotal")
     spark.stop()
     if (errors > 0) sys.exit(1)

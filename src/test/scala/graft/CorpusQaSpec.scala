@@ -275,6 +275,27 @@ class CorpusQaSpec extends AnyFunSuite {
       s"mean_p pos=$pm neg=$nm")
   }
 
+  test("sizedWidth falls back to default parallelism when statistics " +
+      "are unknown (RDD-backed input)") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, explode, split}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val d = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(1L, "good fine"), Row(2L, "bad poor"))), schema)
+    // the RDD leaf reports Long.MaxValue; a narrowing projection above
+    // it scales the root estimate below that sentinel
+    val derived = d.select(col("doc_id"),
+      explode(split(col("text"), " ")).as("w")).groupBy("doc_id", "w")
+      .count().select(col("doc_id"))
+    val dp = spark.sparkContext.defaultParallelism
+    assert(TextAnalysis.sizedWidth(d) == dp)
+    assert(TextAnalysis.sizedWidth(derived) == dp)
+    // known statistics keep the size-derived width: a few bytes -> 1
+    assert(TextAnalysis.sizedWidth(docs((1L, "good fine", "a"))) == 1)
+  }
+
   test("gopherRules: each rule fires on its designed violation") {
     val okWords = "the of and " + (1 to 30).map(i => s"word$i").mkString(" ")
     val d = docs(
