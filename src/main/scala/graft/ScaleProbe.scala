@@ -95,11 +95,12 @@ object ScaleProbe {
         docs, "doc_id", "text", "source", gramN = 8)),
       "remove_spans" -> (() => Dedup.removeDupSpans(
         docs, "doc_id", "text", gramN = 8)),
-      "span_hist_incr" -> (() => Dedup.dupSpanHistogramIncremental(
-        docs, "doc_id", "text", "source",
-        path = s"$tmp/hist_$tag", gramN = 8)),
-      "remove_incr" -> (() => Dedup.removeDupSpansIncremental(
-        docs, "doc_id", "text", path = s"$tmp/del_$tag", gramN = 8)),
+      "span_hist_incr" -> (() => Dedup.dupSpanHistogram(
+        docs, "doc_id", "text", "source", gramN = 8,
+        census = Dedup.Census.Persist(s"$tmp/hist_$tag"))),
+      "remove_incr" -> (() => Dedup.removeDupSpans(
+        docs, "doc_id", "text", gramN = 8,
+        census = Dedup.Census.Persist(s"$tmp/del_$tag"))),
       "minhash_pairs" -> (() => Dedup.minhashPairs(
         docs, "doc_id", "text", threshold = 0.3)),
       "canonical_docs" -> (() => Dedup.canonicalDocs(

@@ -766,9 +766,9 @@ object LlmDedupQueries {
     // is integer-exact, so the result must be bit-identical to the
     // from-scratch q315 build - certified by sharing q315's oracle.
     "q320_span_census_incr" -> ((s, dir) =>
-      Dedup.dupSpanHistogramIncremental(Tables.documents(s, dir),
-        "doc_id", "text", "source",
-        path = s"${IoQueries.sinkDir}/q320_span_census", gramN = 8)),
+      Dedup.dupSpanHistogram(Tables.documents(s, dir),
+        "doc_id", "text", "source", gramN = 8, census = Dedup.Census
+          .Persist(s"${IoQueries.sinkDir}/q320_span_census"))),
 
     // ExactSubstr DELETION (Lee et al. 2022, the step the paper ships):
     // every token inside a maximal cross-doc duplicated span is excised
@@ -797,9 +797,9 @@ object LlmDedupQueries {
     // and excision. Integer-exact merge => bit parity with the
     // from-scratch deletion, certified by sharing q316's oracle.
     "q321_remove_spans_incr" -> ((s, dir) =>
-      Dedup.removeDupSpansIncremental(Tables.documents(s, dir),
-        "doc_id", "text",
-        path = s"${IoQueries.sinkDir}/q321_span_census", gramN = 8)),
+      Dedup.removeDupSpans(Tables.documents(s, dir),
+        "doc_id", "text", gramN = 8, census = Dedup.Census
+          .Persist(s"${IoQueries.sinkDir}/q321_span_census"))),
 
     // FIXED-POINT deletion (Lee et al. 2022's second-order effect,
     // closed): excision can stitch previously-distant tokens into NEW
@@ -831,8 +831,8 @@ object LlmDedupQueries {
       Dedup.writeSpanCensusShard(
         docs.filter(pmod(col("doc_id"), lit(2L)) === 1L),
         "doc_id", "text", s"$root/genB", gramN = 8)
-      Dedup.removeDupSpansFromCensus(docs, "doc_id", "text",
-        censusGlob = s"$root/*", gramN = 8)
+      Dedup.removeDupSpans(docs, "doc_id", "text", gramN = 8,
+        census = Dedup.Census.Glob(s"$root/*"))
     }),
 
     // Deletion EFFICACY at the corpus grain - the paper's fixed-point

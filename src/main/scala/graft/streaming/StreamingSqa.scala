@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
@@ -696,6 +696,16 @@ object StreamingSqa {
       }
   }
 
+  /** Per-row `gramN`-token window keys of a words array `w`: the full
+    * 128-bit md5 of each space-joined window, byte-identical to the batch
+    * gram chain, built from array slices because streams don't support
+    * the batch window `lead`; NULL when the row has fewer than `gramN`
+    * words. */
+  private def windowKeys(w: Column, gramN: Int): Column =
+    when(size(w) >= gramN,
+      transform(sequence(lit(0), size(w) - gramN),
+        i => md5(array_join(slice(w, i + lit(1), lit(gramN)), " "))))
+
   /** Streaming twin of the q299/q300 ExactSubstr census audit (Lee et
     * al. 2022): arriving documents screen their `gramN`-token windows
     * against the PERSISTED merged gram census (q300's mergeable
@@ -715,14 +725,10 @@ object StreamingSqa {
   def streamingSubstrCensus(newDocs: DataFrame, census: DataFrame,
       textCol: String = "text", sourceCol: String = "source",
       gramN: Int = 8): DataFrame = {
-    val w = col("__w")
-    val gks = when(size(w) >= gramN,
-      transform(sequence(lit(0), size(w) - gramN),
-        i => md5(array_join(slice(w, i + lit(1), lit(gramN)), " "))))
     newDocs
       .select(col(sourceCol).as("source"),
         graft.llm.TextOps.words(col(textCol)).as("__w"))
-      .select(col("source"), explode(gks).as("gk"))
+      .select(col("source"), explode(windowKeys(col("__w"), gramN)).as("gk"))
       .join(census.select(col("gk")).distinct()
         .withColumn("__hit", lit(1L)), Seq("gk"), "left")
       .groupBy("source")
@@ -752,13 +758,9 @@ object StreamingSqa {
     * census reproduces the from-scratch batch census bit-for-bit. */
   def streamingCensusMerge(newDocs: DataFrame, oldCensus: DataFrame,
       textCol: String = "text", gramN: Int = 8): DataFrame = {
-    val w = col("__w")
-    val gks = when(size(w) >= gramN,
-      transform(sequence(lit(0), size(w) - gramN),
-        i => md5(array_join(slice(w, i + lit(1), lit(gramN)), " "))))
     newDocs
       .select(graft.llm.TextOps.words(col(textCol)).as("__w"))
-      .select(explode(gks).as("gk"))
+      .select(explode(windowKeys(col("__w"), gramN)).as("gk"))
       .join(oldCensus.select(col("gk"), col("c").as("__c0")),
         Seq("gk"), "left")
       .groupBy("gk")
@@ -777,7 +779,8 @@ object StreamingSqa {
     * document re-emitted from its surviving tokens the moment it lands.
     * Output per document matches the batch deletion schema
     * (n_tokens / n_removed / text_clean), and StreamingSpec asserts
-    * BIT parity with [[graft.llm.Dedup.removeDupSpansFromCensus]] at
+    * BIT parity with the batch cross-run deletion
+    * ([[graft.llm.Dedup.removeDupSpans]] with a `Census.Glob`) at
     * the default span grain (minSpanLen = 0: every merged span is
     * ≥ gramN by construction, so coverage = the union of duplicated
     * windows — computable per token with no span table).
@@ -810,8 +813,8 @@ object StreamingSqa {
     require(census.columns.contains("gk") && census.columns.contains("c"),
       s"census carries ${census.columns.mkString(",")} — expected the " +
         "writeSpanCensusShard (gk, c) layout")
-    val dupKeys = census.groupBy("gk").agg(sum(col("c")).as("__cm"))
-      .filter(col("__cm") >= 2).select(col("gk"), lit(1).as("__hit"))
+    val dupKeys = graft.llm.Dedup.mergedDupKeys(census)
+      .withColumn("__hit", lit(1))
       .localCheckpoint()
     val w = col("__w")
     // one struct per token: the word + the gram key of the window

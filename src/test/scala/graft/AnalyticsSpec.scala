@@ -137,12 +137,19 @@ class AnalyticsSpec extends AnyFunSuite {
       d.filter(col("doc_id") % 2 === 0), "doc_id", "text", s"$root/genA")
     Dedup.writeSpanCensusShard(
       d.filter(col("doc_id") % 2 === 1), "doc_id", "text", s"$root/genB")
-    val merged = Dedup.dupSpanHistogramFromCensus(d, "doc_id", "text",
-      "source", s"$root/*")
+    // the within-job persisted census (q320's form) must agree too
+    val persistDir = java.nio.file.Files
+      .createTempDirectory("census_persist").toString
     val direct = Dedup.dupSpanHistogram(d, "doc_id", "text", "source")
-    assert(merged.count() == direct.count() && direct.count() > 0)
-    assert(merged.exceptAll(direct).count() == 0)
-    assert(direct.exceptAll(merged).count() == 0)
+    assert(direct.count() > 0)
+    Seq(Dedup.Census.Glob(s"$root/*"),
+        Dedup.Census.Persist(s"$persistDir/census")).foreach { census =>
+      val merged = Dedup.dupSpanHistogram(d, "doc_id", "text", "source",
+        census = census)
+      assert(merged.count() == direct.count(), census)
+      assert(merged.exceptAll(direct).count() == 0, census)
+      assert(direct.exceptAll(merged).count() == 0, census)
+    }
   }
 
   test("stitched-residual POSITIVE control: one deletion pass stitches a " +
@@ -221,20 +228,46 @@ class AnalyticsSpec extends AnyFunSuite {
       d.filter(col("doc_id") % 2 === 0), "doc_id", "text", s"$root/genA")
     Dedup.writeSpanCensusShard(
       d.filter(col("doc_id") % 2 === 1), "doc_id", "text", s"$root/genB")
-    val merged = Dedup.removeDupSpansFromCensus(d, "doc_id", "text",
-      censusGlob = s"$root/*")
+    // the within-job persisted census (q321's form) must agree too
+    val persistDir = java.nio.file.Files
+      .createTempDirectory("census_del_persist").toString
     val direct = Dedup.removeDupSpans(d, "doc_id", "text")
-    assert(merged.count() == direct.count() && direct.count() > 0)
-    assert(merged.exceptAll(direct).count() == 0)
-    assert(direct.exceptAll(merged).count() == 0)
+    assert(direct.count() > 0)
+    Seq(Dedup.Census.Glob(s"$root/*"),
+        Dedup.Census.Persist(s"$persistDir/census")).foreach { census =>
+      val merged = Dedup.removeDupSpans(d, "doc_id", "text",
+        census = census)
+      assert(merged.count() == direct.count(), census)
+      assert(merged.exceptAll(direct).count() == 0, census)
+      assert(direct.exceptAll(merged).count() == 0, census)
+    }
     // coverage guard: querying the full corpus against only generation
     // A's shard must fail loudly, never silently under-delete
     val e = intercept[IllegalArgumentException] {
-      Dedup.removeDupSpansFromCensus(d, "doc_id", "text",
-        censusGlob = s"$root/genA")
+      Dedup.removeDupSpans(d, "doc_id", "text",
+        census = Dedup.Census.Glob(s"$root/genA"))
     }
     assert(e.getMessage.contains("census"),
       s"unexpected guard message: ${e.getMessage}")
+  }
+
+  test("census round trip shards string doc ids (q300's writer)") {
+    // the sharded census writer must hash the id: an arithmetic shard
+    // (pmod of the id) cannot take "doc-a" at all
+    val shared = (1 to 10).map(i => s"w$i").mkString(" ")
+    val s = spark
+    import s.implicits._
+    val d = (0 until 12).map(i =>
+      (s"doc-${('a' + i).toChar}", s"$shared u$i v$i")).toDF("doc_id", "text")
+    val path = java.nio.file.Files
+      .createTempDirectory("census_str_ids").toString + "/census"
+    val r = Dedup.exactSubstringCensusRoundTrip(d, "doc_id", "text", path,
+      gramN = 8, numShards = 2).head()
+    assert(r.getAs[Long]("n_shards") == 2L)
+    assert(r.getAs[Boolean]("merge_exact"))
+    // 3 windows lie inside the shared run, duplicated in all 12 docs
+    assert(r.getAs[Long]("n_dup_keys_merged") == 3L)
+    assert(r.getAs[Long]("n_docs_dup") == 12L)
   }
 
   test("splitAssign is a stable total partition with ~80/10/10 mass") {

@@ -56,4 +56,23 @@ class DedupClusterSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == dist)
   }
+
+  test("shingleRows keeps one id's documents apart across extraCols values") {
+    import spark.implicits._
+    // the tagged-union shape (q119): doc 7 arrives on BOTH sides with
+    // different text; its shingles per side must be exactly those of
+    // shingling that side alone, never windows interleaving both texts
+    val tagged = Seq((7L, "a b c d e", 0), (7L, "v w x y z", 1),
+      (8L, "a b c q r", 1)).toDF("doc_id", "text", "__side")
+    val got = Dedup.shingleRows(tagged, "doc_id", "text", 3,
+      extraCols = Seq("__side"))
+      .as[(Int, Long, String)].collect().toSet
+    val alone = Seq(0, 1).flatMap { side =>
+      Dedup.shingleRows(tagged.filter($"__side" === side), "doc_id",
+        "text", 3).as[(Long, String)].collect()
+        .map { case (id, sh) => (side, id, sh) }
+    }.toSet
+    assert(got == alone)
+    assert(got.contains((1, 7L, "v w x")) && got.contains((0, 7L, "c d e")))
+  }
 }

@@ -1167,8 +1167,8 @@ class StreamingSpec extends AnyFunSuite {
     val got = spark.table("excise_stream")
     // the registered batch cross-run deletion on the same arrivals and
     // the same census glob IS the oracle — bit parity, all four columns
-    val batch = graft.llm.Dedup.removeDupSpansFromCensus(
-      arrivals, "doc_id", "text", s"$tmp/census/*")
+    val batch = graft.llm.Dedup.removeDupSpans(arrivals, "doc_id", "text",
+      census = graft.llm.Dedup.Census.Glob(s"$tmp/census/*"))
     assert(got.count() == arrivals.count())
     assert(got.filter(col("doc_id") === 999999L)
       .select("n_tokens", "n_removed", "text_clean").head() ==
