@@ -40,21 +40,22 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** Evict a path's memoized schema (r21, verdict item 7): every
-    * artifact writer calls this after an overwrite so that a same-path
-    * rewrite with an EVOLVED schema is never served a stale StructType
-    * by [[readStable]] within one process. Writers today are
-    * deterministic (same schema every rewrite), so this is a
-    * correctness guard, not a behavior change. */
-  def evictSchema(path: String): Unit = schemaCache.remove(path)
+  /** Record the schema of `df` just written to `path` as the path's
+    * memo. Every artifact writer calls this after an overwrite, so a
+    * same-path rewrite with an EVOLVED schema is never served a stale
+    * StructType by [[readStable]], and the read after a write submits no
+    * schema-inference job. The read makes every field nullable, as a
+    * footer read does, so the memo reads back the footer's schema. */
+  def rememberWritten(df: DataFrame, path: String): Unit =
+    schemaCache.put(path, df.schema)
 
-  /** Overwrite-write a parquet artifact at its natural partitioning,
-    * evicting the path's schema memo (see [[evictSchema]]). The write
-    * path for CORPUS-SIZED artifacts (censuses, assignments, codes);
-    * bounded tables go through [[writeSmall]]. */
+  /** Overwrite-write a parquet artifact at its natural partitioning and
+    * record its schema memo (see [[rememberWritten]]). The write path for
+    * CORPUS-SIZED artifacts (censuses, assignments, codes); bounded tables
+    * go through [[writeSmall]]. */
   def writeArtifact(df: DataFrame, path: String): Unit = {
     df.write.mode("overwrite").parquet(path)
-    evictSchema(path)
+    rememberWritten(df, path)
   }
 
   /** Read a raw table by name from a scale-factor directory. */
@@ -73,7 +74,7 @@ object Tables {
     * natural partitioning. */
   def writeSmall(df: DataFrame, path: String): Unit = {
     df.coalesce(1).write.mode("overwrite").parquet(path)
-    evictSchema(path)
+    rememberWritten(df, path)
   }
 
   /** Run INDEPENDENT write/output actions concurrently from a small

@@ -260,7 +260,7 @@ object Readers {
 
   def writeParquet(df: DataFrame, path: String): Unit = {
     df.write.mode("overwrite").parquet(path)
-    graft.core.Tables.evictSchema(path) // keep readStable's memo honest
+    graft.core.Tables.rememberWritten(df, path) // keep readStable's memo honest
   }
 
   /** Sharded JSONL training-data export: one `<shardCol>=K/` directory of

@@ -1,7 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Iterative link analysis (PageRank, Page et al. 1999) over an edge table —
   * the graph-centrality capability a training-data pipeline uses to rank
@@ -15,95 +19,182 @@ import org.apache.spark.sql.functions._
   * iteration count is bit-reproducible cross-engine with NO float summation
   * order concerns (the same reason [[graft.core.Det]] exists).
   *
-  * Scale shape: each iteration is one hash join of the rank table onto the
-  * edge table (both keyed by `src` — Catalyst reuses the exchange across
-  * iterations) plus one `groupBy(dst)` sum with map-side partials; the rank
-  * state is one narrow (node, rank) row per vertex, never materialized on
-  * the driver. Plans are rebuilt FLAT from the previous iteration's
-  * DataFrame; with a small fixed iteration count the lineage stays shallow
-  * (the distributed connected-components loop in [[graft.llm.Dedup]] is the
-  * template for unbounded iteration). Dangling nodes (no out-edges) leak
-  * their mass by default — the standard simplification; pass
-  * `redistributeDangling = true` for the textbook correction (each round the
-  * dangling nodes' summed rank is split evenly across all nodes before
-  * damping — Page et al. 1999 §2.1's rank-sink fix). Nodes with no IN-edges
-  * are kept at the teleport floor via the left join against the node
-  * table. */
+  * Scale shape: at or below [[BroadcastMaxNodes]] nodes the rank vector
+  * lives on the driver. The edge table is pinned once, partitioned by
+  * `dst`; one bounded collect brings back every node with its out-degree;
+  * then each round is ONE Spark job — a `mapPartitions` over the pinned
+  * edges that sums `pr(src) div deg(src)` per `dst` against the
+  * broadcast rank array — and the damping update runs on the driver.
+  * Spark's cost on such graphs is the fixed overhead per job, not the
+  * arithmetic, and the broadcast form already built the whole rank table
+  * on the driver every round, so holding it there costs no extra memory.
+  * Above the gate the loop runs as keyed joins against a src-partitioned
+  * edge table, rank state one narrow (node, rank) row per vertex.
+  * Dangling nodes (no out-edges) leak their mass by default — the
+  * standard simplification; pass `redistributeDangling = true` for the
+  * textbook correction (each round the dangling nodes' summed rank is
+  * split evenly across all nodes before damping — Page et al. 1999
+  * §2.1's rank-sink fix). Nodes with no IN-edges stay at the teleport
+  * floor. */
 object PageRank {
 
   /** Rank scale: 1.0 == 1e12 units. */
   val SCALE = 1000000000000L
 
-  /** Below this node count the per-iteration rank and contribution tables
-    * (one narrow (node, long) row each) are broadcast — an iteration then
-    * costs ONE map-side-combined shuffle (the groupBy(dst) partials, ≤n
-    * rows per partition) instead of three edge-table-sized exchanges.
-    * 2M nodes ≈ 32 MB broadcast. Above the gate (web-scale graphs) the
-    * loop falls back to keyed joins against the pre-partitioned edge
-    * table. */
+  /** Node-count gate of the driver-resident path. At or below it the ids,
+    * out-degrees and ranks are three driver arrays of n longs (2M nodes ≈
+    * 48 MB) and each round broadcasts the rank array (≈ 16 MB). Above it
+    * (web-scale graphs) PageRank falls back to keyed joins; HITS uses the
+    * same gate for its broadcast score tables. */
   val BroadcastMaxNodes = 2000000L
 
-  /** `edges`: (src: long, dst: long) — pre-deduplicated directed edges.
-    * Returns (node, rank_scaled) for every node appearing as src or dst.
-    * `iters` fixed iterations of r ← 0.15/N + 0.85·Σ_{u→v} r_u/deg(u).
+  /** `edges`: (src: long, dst: long), non-null ids. Duplicate edges count
+    * with their multiplicity. Returns (node, rank_scaled) for every node
+    * appearing as src or dst. `iters` fixed iterations of
+    * r ← 0.15/N + 0.85·Σ_{u→v} r_u/deg(u).
     *
     * `seeds` (a `node` column) switches to PERSONALIZED PageRank (Page
     * et al. 1999 §6 / Haveliwala 2002, "Topic-Sensitive PageRank"): the
     * teleport mass concentrates evenly on the seed set instead of all
     * nodes — rank becomes proximity-to-the-seeds, the curation tool for
     * "expand this trusted domain/author/doc set" source discovery. The
-    * per-node teleport becomes a loop-invariant COLUMN (SCALE/|S| on
-    * seeds, 0 elsewhere) folded into the node table once; ranks
-    * initialize to that teleport distribution. Not combinable with
+    * per-node teleport is SCALE/|S| on seeds (|S| counts distinct seeds,
+    * also those outside the graph) and 0 elsewhere; ranks initialize to
+    * that teleport distribution. Not combinable with
     * `redistributeDangling` (the dangling share would have to follow
     * the teleport vector, a different integer-rounding contract than
     * q187's uniform `div n` — kept separate so both oracles stay
     * exact). */
   def run(edges: DataFrame, iters: Int = 5,
           redistributeDangling: Boolean = false,
-          seeds: DataFrame = null): DataFrame = {
+          seeds: DataFrame = null): DataFrame =
+    runGated(edges, iters, redistributeDangling, seeds, BroadcastMaxNodes)
+
+  /** [[run]] with the node gate as a parameter, so a spec can force the
+    * keyed path on a small graph. */
+  private[graft] def runGated(edges: DataFrame, iters: Int,
+      redistributeDangling: Boolean, seeds: DataFrame,
+      nodeGate: Long): DataFrame = {
     require(iters >= 1 && iters <= 50, "fixed small iteration count")
     require(!(redistributeDangling && seeds != null),
       "dangling redistribution and personalization are separate contracts")
-    // Pin the loop-invariant tables once (every PageRank implementation
-    // persists its edge list) and TRUNCATE THE RANK LINEAGE each round —
-    // without it Catalyst replans the whole history per iteration and the
-    // source scan count grows geometrically (the same reason the
-    // distributed connected-components loop rebuilds flat plans). The
-    // out-degree is folded into the edge table up front: it is as
-    // loop-invariant as the edges themselves, and re-joining it every
-    // iteration (the textbook formulation) pays an extra shuffle per
-    // round for a value that never changes.
-    val e0 = edges.select(col("src").cast("long"), col("dst").cast("long"))
-      .localCheckpoint()
+    // The one pin: edges partitioned by dst at a fixed width (not
+    // AQE-coalesced — the q203 trap), so each dst lives in exactly one
+    // partition and a round's per-partition sums cover disjoint nodes.
+    val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
+      .repartition(width(edges), col("dst")).localCheckpoint()
+    // One bounded collect: per node its out-degree, whether it is a graph
+    // node (g) and whether it is a seed (s) — seeds outside the graph
+    // still count toward |S|.
+    val marks = e.select(col("src").as("node"), lit(1L).as("d"),
+        lit(1).as("g"), lit(0).as("s"))
+      .unionAll(e.select(col("dst"), lit(0L), lit(1), lit(0)))
+    val withSeeds = if (seeds == null) marks
+      else marks.unionAll(seeds.select(col("node").cast("long"), lit(0L),
+        lit(0), lit(1)))
+    val rows = withSeeds.groupBy("node")
+      .agg(sum(col("d")), max(col("g")), max(col("s")))
+      .limit(nodeGate.toInt + 1).collect()
+    if (rows.length > nodeGate) keyed(e, iters, redistributeDangling, seeds)
+    else onDriver(e, rows, iters, redistributeDangling, seeds != null)
+  }
+
+  private def width(df: DataFrame): Int =
+    df.sparkSession.sparkContext.defaultParallelism
+
+  /** The driver-resident loop over the pinned dst-partitioned edges and
+    * the collected (node, deg, g, s) rows. */
+  private def onDriver(e: DataFrame, rows: Array[Row], iters: Int,
+      dangling: Boolean, personalized: Boolean): DataFrame = {
+    val graph = rows.filter(_.getInt(2) == 1).sortBy(_.getLong(0))
+    val ids = graph.map(_.getLong(0))
+    val deg = graph.map(_.getLong(1))
+    val n = ids.length
+    val base = SCALE / n
+    val tb = if (!personalized) Array.fill(n)(base) else {
+      val nSeeds = rows.count(_.getInt(3) == 1)
+      require(nSeeds > 0, "personalization needs a non-empty seed set")
+      graph.map(r => if (r.getInt(3) == 1) SCALE / nSeeds else 0L)
+    }
+    val sinks = if (dangling) deg.indices.filter(deg(_) == 0L) else Nil
+    val sc = e.sparkSession.sparkContext
+    val edgeRows = e.queryExecution.toRdd
+    val idsB = sc.broadcast(ids)
+    val degB = sc.broadcast(deg)
+    var pr = tb
+    try for (_ <- 1 to iters) {
+      val prB = sc.broadcast(pr)
+      val in = new Array[Long](n)
+      try inMass(edgeRows, idsB, degB, prB).foreach { case (ix, m) =>
+        ix.indices.foreach(k => in(ix(k)) = Math.addExact(in(ix(k)), m(k)))
+      } finally prB.destroy()
+      // Per-node share of the dangling mass, floor-divided like the
+      // contributions; exact ops fail on overflow as ANSI long math does.
+      val share = sinks.foldLeft(0L)((s, i) => Math.addExact(s, pr(i))) / n
+      pr = Array.tabulate(n)(i => Math.addExact(
+        Math.multiplyExact(15L, tb(i)),
+        Math.multiplyExact(85L, Math.addExact(in(i), share))) / 100)
+    } finally { idsB.destroy(); degB.destroy() }
+    // The result leaves the driver as P slices of an RDD, never as one
+    // in-plan local relation.
+    val P = sc.defaultParallelism
+    val slices = (0 until P).map { k =>
+      val (lo, hi) = ((k.toLong * n / P).toInt, ((k + 1L) * n / P).toInt)
+      (ids.slice(lo, hi), pr.slice(lo, hi))
+    }
+    e.sparkSession.createDataFrame(
+      sc.parallelize(slices, P).flatMap { case (a, r) =>
+        a.indices.iterator.map(i => Row(a(i), r(i)))
+      },
+      StructType(Seq(StructField("node", LongType, nullable = false),
+        StructField("rank_scaled", LongType, nullable = false))))
+  }
+
+  /** One round's only job: per partition of the dst-partitioned edges,
+    * Σ pr(src) div deg(src) per dst, as (dst index, sum) arrays. The
+    * partitions' dst sets are disjoint, so the collect returns at most n
+    * pairs. */
+  private def inMass(edges: RDD[InternalRow], ids: Broadcast[Array[Long]],
+      deg: Broadcast[Array[Long]],
+      pr: Broadcast[Array[Long]]): Array[(Array[Int], Array[Long])] =
+    edges.mapPartitions { rows =>
+      val (id, dg, r) = (ids.value, deg.value, pr.value)
+      val acc = scala.collection.mutable.LongMap.empty[Long]
+      rows.foreach { row =>
+        val u = java.util.Arrays.binarySearch(id, row.getLong(0))
+        val v = java.util.Arrays.binarySearch(id, row.getLong(1)).toLong
+        acc(v) = Math.addExact(acc.getOrElse(v, 0L), r(u) / dg(u))
+      }
+      val (ix, m) = (new Array[Int](acc.size), new Array[Long](acc.size))
+      var k = 0
+      acc.foreachEntry { (v, s) => ix(k) = v.toInt; m(k) = s; k += 1 }
+      Iterator.single((ix, m))
+    }.collect()
+
+  /** The keyed-join loop for graphs over the node gate: rank, contribution
+    * and node tables joined by key, never broadcast. `e0` is the pinned
+    * (src, dst) edge table. */
+  private def keyed(e0: DataFrame, iters: Int,
+      redistributeDangling: Boolean, seeds: DataFrame): DataFrame = {
+    // Pin the loop-invariant tables once and TRUNCATE THE RANK LINEAGE
+    // every other round — without it Catalyst replans the whole history
+    // per iteration and the source scan count grows geometrically (the
+    // same reason the distributed connected-components loop rebuilds flat
+    // plans). The out-degree is folded into the edge table up front: it
+    // is as loop-invariant as the edges themselves, and re-joining it
+    // every iteration (the textbook formulation) pays an extra shuffle
+    // per round for a value that never changes. The degree-annotated copy
+    // is partitioned on src, the contribution join's key (localCheckpoint
+    // preserves outputPartitioning), so the groupBy(dst) is the loop's
+    // edge-sized exchange.
     val nodes = e0.select(col("src").as("node"))
       .union(e0.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // One bounded scalar: the node count feeds the teleport literal and
-    // the broadcast gate.
     val n = nodes.count()
     val base = SCALE / n
-    val small = n <= BroadcastMaxNodes
-    def gated(df: DataFrame) = if (small) broadcast(df) else df
-    // Under the broadcast gate the rank table rides in as a broadcast, so
-    // the per-iteration contribution join never shuffles the edge table —
-    // which makes the groupBy(dst) the loop's ONLY edge-sized exchange.
-    // Pinning the degree-annotated edge table PRE-PARTITIONED ON dst
-    // (localCheckpoint preserves outputPartitioning; pinned count, not
-    // AQE-coalesced — the q203 trap) removes that exchange too: the loop
-    // body then shuffles nothing edge-sized (the r15 HITS lesson). Above
-    // the gate the join itself must exchange on src, so the copy
-    // partitions by src instead and the agg exchange is the honest cost.
-    val P = e0.sparkSession.sparkContext.defaultParallelism
-    val e = {
-      val withDeg = e0
-        .join(e0.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
-      (if (small) withDeg.repartition(P, col("dst"))
-       else withDeg.repartition(P, col("src"))).localCheckpoint()
-    }
-    // Loop-invariant dangling-node set (no out-edges), pinned once. Its
-    // per-round summed rank is ONE scalar — carried into the update as a
-    // broadcast 1-row cross join, never a driver sync, so each iteration
-    // stays a single pipelined job.
+    val e = e0
+      .join(e0.groupBy("src").agg(count(lit(1)).as("deg")), Seq("src"))
+      .repartition(width(e0), col("src")).localCheckpoint()
+    // Loop-invariant dangling-node set (no out-edges), pinned once.
     val dangling = if (!redistributeDangling) null
       else nodes.join(e0.select(col("src").as("node")).distinct(),
         Seq("node"), "left_anti").localCheckpoint()
@@ -114,7 +205,7 @@ object PageRank {
         .localCheckpoint()
       val nSeeds = sd.count()
       require(nSeeds > 0, "personalization needs a non-empty seed set")
-      nodes.join(gated(sd.withColumn("__s", lit(1))), Seq("node"), "left")
+      nodes.join(sd.withColumn("__s", lit(1)), Seq("node"), "left")
         .select(col("node"),
           when(col("__s").isNotNull, lit(SCALE / nSeeds)).otherwise(lit(0L))
             .as("tb"))
@@ -126,23 +217,23 @@ object PageRank {
       else nodesTb.select(col("node"), col("tb").as("pr"))
     for (it <- 1 to iters) {
       val contrib = e
-        .join(gated(ranks), col("node") === col("src"))
+        .join(ranks, col("node") === col("src"))
         .select(col("dst").as("node"), expr("pr div deg").as("c"))
         .groupBy("node")
         .agg(sum(col("c")).as("in_mass"))
-      // Per-node share of the dangling mass, floor-divided in the same
-      // scaled-integer arithmetic as the contributions (exact cross-engine).
+      // The dangling mass is one scalar per round, collected to the
+      // driver from the pinned previous ranks; its per-node share is
+      // floor-divided in the same scaled-integer arithmetic as the
+      // contributions (exact cross-engine).
       val inMassSql =
         if (!redistributeDangling) "coalesce(in_mass, 0L)"
-        else s"coalesce(in_mass, 0L) + dmass div ${n}L"
-      val withMass = (if (seeds == null) nodes else nodesTb)
-        .join(gated(contrib), Seq("node"), "left")
-      val updated =
-        if (!redistributeDangling) withMass
-        else withMass.crossJoin(broadcast(
-          ranks.join(gated(dangling), Seq("node"))
-            .agg(coalesce(sum(col("pr")), lit(0L)).as("dmass"))))
-      val next = updated
+        else {
+          val dmass = ranks.join(dangling, Seq("node"))
+            .agg(coalesce(sum(col("pr")), lit(0L))).collect()(0).getLong(0)
+          s"coalesce(in_mass, 0L) + ${dmass / n}L"
+        }
+      val next = (if (seeds == null) nodes else nodesTb)
+        .join(contrib, Seq("node"), "left")
         .select(col("node"),
           expr(s"($baseSql + 85 * ($inMassSql)) div 100").as("pr"))
       // EAGER truncation (r17): the lazy form let the NEXT round's
@@ -163,10 +254,10 @@ object PageRank {
       // round (the contribution join), so letting one lazy round ride
       // into the next action duplicates no work and halves the
       // action count of the loop. The DANGLING mode reads `ranks`
-      // TWICE per round (contribution join + dangling-mass aggregate),
+      // TWICE per round (contribution join + dangling-mass collect),
       // so skipping its checkpoint would re-execute the previous
-      // round's tail, including its broadcast builds — it keeps the
-      // per-round pin. Lineage depth stays bounded (2 rounds).
+      // round's tail — it keeps the per-round pin. Lineage depth stays
+      // bounded (2 rounds).
       //
       // The FINAL round is elided too (r20 session 2): the returned
       // DataFrame has exactly one downstream consumer (the caller's

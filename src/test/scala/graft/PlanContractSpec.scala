@@ -84,11 +84,7 @@ class PlanContractSpec extends AnyFunSuite {
     "q251_curriculum",      // broadcast 1-row corpus-count scalar
     "q254_ks_test",         // broadcast 1-row calendar-midpoint scalar
     "q296_hyperball_persist", // broadcast 1-row register-census scalars
-    "q297_kcore",             // broadcast 1-row per-round tally scalars
-    "q187_pagerank_dangling") // broadcast 1-row dangling-mass scalar —
-                              // visible in the final plan since the r20
-                              // last-round checkpoint elision left the
-                              // final round lazy
+    "q297_kcore")             // broadcast 1-row per-round tally scalars
 
   /** A session with the shape-relevant confs PINNED — the suite's shared
     * getOrCreate session picks up conf mutations from other specs (the

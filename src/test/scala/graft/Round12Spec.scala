@@ -21,20 +21,34 @@ class Round12Spec extends AnyFunSuite {
     rows.toDF("doc_id", "text", "lang", "source")
   }
 
-  /** Plain-Scala mirror of PageRank.run's scaled-integer update. */
-  private def refPageRank(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
+  /** Plain-Scala mirror of PageRank.run's scaled-integer update in all
+    * three modes: plain, dangling-mass redistribution and personalized
+    * (`seeds` non-empty; |S| counts distinct seeds, also off-graph ones). */
+  private def refPageRank(edges: Seq[(Long, Long)], iters: Int,
+      dangling: Boolean = false, seeds: Seq[Long] = Nil): Map[Long, Long] = {
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
     val deg = edges.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    val base = PageRank.SCALE / nodes.size
-    var r = nodes.map(_ -> base).toMap
+    val n = nodes.size
+    val base = PageRank.SCALE / n
+    val s = seeds.distinct
+    val tb = nodes.map(v => v ->
+      (if (s.isEmpty) base else if (s.contains(v)) PageRank.SCALE / s.size
+       else 0L)).toMap
+    var r = tb
     for (_ <- 1 to iters) {
       val in = edges.groupBy(_._2).map { case (dst, es) =>
         dst -> es.map { case (src, _) => r(src) / deg(src) }.sum
       }
-      r = nodes.map(v => v -> (15L * base + 85L * in.getOrElse(v, 0L)) / 100L).toMap
+      val share =
+        if (dangling) nodes.filterNot(deg.contains).map(r).sum / n else 0L
+      r = nodes.map(v =>
+        v -> (15L * tb(v) + 85L * (in.getOrElse(v, 0L) + share)) / 100L).toMap
     }
     r
   }
+
+  private def ranks(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
   test("PageRank: matches the plain-Scala integer reference exactly") {
     val s = spark
@@ -42,13 +56,49 @@ class Round12Spec extends AnyFunSuite {
     // asymmetric digraph with a dangling node (6) and a no-in-edge node (1)
     val es = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 4L), (4L, 2L),
       (4L, 5L), (5L, 2L), (2L, 6L))
-    val got = PageRank.run(es.toDF("src", "dst"), iters = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == refPageRank(es, 5))
+    assert(ranks(PageRank.run(es.toDF("src", "dst"), iters = 5)) ==
+      refPageRank(es, 5))
     // symmetric 2-cycle: the fixed point SCALE/2 is preserved exactly
     val two = PageRank.run(Seq((1L, 2L), (2L, 1L)).toDF("src", "dst"), 5)
       .collect().map(r => r.getLong(1)).toSeq
     assert(two == Seq(PageRank.SCALE / 2, PageRank.SCALE / 2))
+  }
+
+  test("PageRank: every mode matches the mirror; the keyed path is hash-equal") {
+    val s = spark
+    import s.implicits._
+    // a duplicated edge, a self-loop, sparse and negative ids, a dangling
+    // node (-900) and a node with no in-edge (5)
+    val es = Seq((-7L, 1000000007L), (-7L, 1000000007L), (1000000007L, 42L),
+      (42L, 42L), (42L, -7L), (42L, -900L), (5L, -7L), (-7L, 5L))
+    val edges = es.toDF("src", "dst")
+    // a duplicated seed and one outside the graph (999)
+    val seedIds = Seq(42L, -7L, 42L, 999L)
+    val seeds = seedIds.toDF("node")
+    for ((mode, dangling, sd, want) <- Seq(
+        ("plain", false, null, refPageRank(es, 4)),
+        ("dangling", true, null, refPageRank(es, 4, dangling = true)),
+        ("personalized", false, seeds, refPageRank(es, 4, seeds = seedIds)))) {
+      val driver = ranks(PageRank.run(edges, 4, dangling, sd))
+      assert(driver == want, mode)
+      // node gate 0 forces the keyed-join loop at test scale
+      assert(ranks(PageRank.runGated(edges, 4, dangling, sd, 0L)) == driver,
+        s"$mode: keyed path")
+    }
+  }
+
+  test("PageRank under the node gate pins only its edge table") {
+    val s = spark
+    import s.implicits._
+    val sc = spark.sparkContext
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
+    for (dangling <- Seq(false, true)) {
+      val before = sc.getPersistentRDDs.keySet
+      val out = PageRank.run(edges, 5, redistributeDangling = dangling)
+      val pinned = sc.getPersistentRDDs.keySet -- before
+      assert(pinned.size == 1, s"dangling=$dangling: ${pinned.size} pins")
+      assert(out.count() == 4)
+    }
   }
 
   test("invertedSearch: posting-list intersections over top-df terms") {

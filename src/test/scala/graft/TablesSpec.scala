@@ -59,11 +59,40 @@ class TablesSpec extends AnyFunSuite {
     Tables.writeArtifact(Seq((1L, "a")).toDF("id", "v"), path)
     assert(Tables.readStable(spark, path).columns.toSeq == Seq("id", "v"))
     // rewrite the SAME path with an evolved schema: the memo must not
-    // serve the stale StructType (r21 guard; writeSmall evicts too)
+    // serve the stale StructType (writeSmall replaces the entry too)
     Tables.writeSmall(Seq((2L, "b", 3.0)).toDF("id", "v", "w"), path)
     val back = Tables.readStable(spark, path)
     assert(back.columns.toSeq == Seq("id", "v", "w"))
     assert(back.head.getDouble(2) == 3.0)
+  }
+
+  test("artifact writers memo the footer-read schema; a same-path rewrite reads back the new one") {
+    import spark.implicits._
+    type Writer = (org.apache.spark.sql.DataFrame, String) => Unit
+    val dir = java.nio.file.Files.createTempDirectory("memo").toFile.getPath
+    // non-nullable fields at every nesting level: a footer read returns
+    // them all nullable, and so must the memoized read
+    val nested = Seq((1L, Seq(2L, 3L), Map("k" -> 4L), (5L, "s")))
+      .toDF("id", "xs", "m", "st")
+      .select(col("id"), col("xs"), col("m"), col("st"),
+        struct(col("id"), array(col("id"))).as("nn"))
+    assert(!nested.schema("id").nullable)
+    val small: Writer = Tables.writeSmall
+    val artifact: Writer = Tables.writeArtifact
+    for ((first, rewrite, name) <- Seq((small, artifact, "small"),
+        (artifact, small, "artifact"))) {
+      val path = s"$dir/$name"
+      first(nested, path)
+      assert(Tables.readStable(spark, path).schema ==
+        spark.read.parquet(path).schema, name)
+      // rewrite the SAME path with another schema: the memo must not
+      // serve the stale StructType
+      rewrite(Seq(("a", 1.5)).toDF("v", "w"), path)
+      val back = Tables.readStable(spark, path)
+      assert(back.schema == spark.read.parquet(path).schema, name)
+      assert(back.columns.toSeq == Seq("v", "w"), name)
+      assert(back.head.getString(0) == "a" && back.head.getDouble(1) == 1.5)
+    }
   }
 
   test("writeCsvSingle lands exactly one CSV part file") {
