@@ -2,24 +2,37 @@ package graft.core
 
 import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Sorted-group kernel contract (SURVEY §4.3 #2): the engine's single
   * mechanism for the reference's sequential physical operators (IIR
-  * filtfilt, beat-detector FSMs, correction FSM, ...).
+  * filtfilt, beat-detector FSMs, correction FSM, cvxEDA, ...).
   *
-  * Each recording `(subject)` becomes one idx-sorted in-memory array that a
-  * pure Scala kernel transforms — the Spark-native equivalent of a scipy
-  * kernel over a numpy array. One shuffle on the group key; the kernel is
-  * a deterministic function, so the operator stays a narrow typed
+  * Every recording `(subject)` is range-bucketed by `idx div bucketLen`,
+  * with `halo` overlap rows copied in from each neighbor bucket. Each
+  * (subject, bucket) slice becomes idx-sorted in-memory arrays that a pure
+  * Scala kernel transforms — the Spark-native equivalent of a scipy kernel
+  * over a numpy array — and only the bucket-core outputs are kept. A whole
+  * recording is one bucket: `bucketLen = Whole` with `halo = 0`, every
+  * runner's default. One shuffle on (subject, bucket); the kernel is a
+  * deterministic function, so the operator stays a narrow typed
   * transformation in the plan.
   *
-  * Memory contract: one recording per task. At 100 TB, long recordings are
-  * range-bucketed by idx with halo rows equal to the kernel's warm-up
-  * length (filter padlen / detector refractory window), so no task ever
-  * materializes an unbounded group; the bucketed variant reuses these same
-  * kernels on each (bucket + halo) slice.
+  * Memory contract: no task materializes more than bucketLen + 2*halo
+  * samples, so a multi-day recording becomes many bounded tasks instead of
+  * one unbounded group. Kernels whose semantics need the whole recording
+  * (the correction FSM, global DFTs) run at the `Whole` default and are
+  * bounded by recording length instead.
+  *
+  * Correctness contract: exact (to fp tolerance) for kernels whose output
+  * at a position depends on inputs within `halo` positions — FIR
+  * convolutions, zero-phase IIR (choose halo past the impulse-response
+  * decay, >= 3x padlen is a good floor), windowed detectors. Adaptive FSM
+  * detectors converge rather than match bitwise: their running state
+  * (threshold EMAs, IBI FIFOs) forgets history geometrically, so halo must
+  * cover the state's convergence length (seconds of signal), as
+  * BucketedKernelSpec demonstrates for Pan-Tompkins.
   *
   * Fan-out contract: kernel stages are CPU-bound with tiny rows, so the
   * shuffle uses an EXPLICIT numbered repartition on the group key —
@@ -39,6 +52,9 @@ object KernelRunner {
     * scale); the execution path is identical either way. */
   val DefaultBucketLen: Long = 1L << 20
 
+  /** The bucket length of a whole-recording slice: every idx is in bucket 0. */
+  val Whole: Long = Long.MaxValue
+
   /** Production halo: 20 s of signal. Covers every kernel lookback in the
     * suite — 3x IIR padlen (<= 45 samples for the order-2 designs), the
     * 2.5 s moving averages, the 6-IBI Hegarty window at the slowest
@@ -47,10 +63,16 @@ object KernelRunner {
     * default bucket length: <= 2*halo/bucketLen ≈ 0.5% duplicated rows. */
   def defaultHalo(fs: Int): Int = 20 * fs
 
-  case class Sample(subject: Long, idx: Long, value: Double)
+  case class Sample(subject: Long, bucket: Long, idx: Long, value: Double)
   case class ValueOut(subject: Long, idx: Long, out: Double)
   case class IdxOut(subject: Long, idx: Long)
-  case class TripleOut(subject: Long, idx: Long, o1: Double, o2: Double, o3: Double)
+
+  /** One (subject, bucket) slice: idx-sorted parallel arrays (`value` is
+    * empty when the runner was given no value column). Positions `core`
+    * are the samples the bucket owns; the others are halo rows owned by a
+    * neighbor bucket. A whole-recording slice is all core. */
+  final class Slice(val subject: Long, val idx: Array[Long],
+      val value: Array[Double], val core: Range)
 
   /** Consecutive-run grouping over a partition iterator: emits one
     * (key, rows) pair per maximal run of equal keys. Requires the
@@ -69,204 +91,93 @@ object KernelRunner {
       }
     }
 
-  /** (subject, idx, value) rows hash-repartitioned on subject with a
-    * PINNED partition count and sorted (subject, idx) within partitions. */
-  private def bySubjectSorted(signal: DataFrame, valueCol: String): Dataset[Sample] = {
-    val spark = signal.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    signal
-      .select(col("subject").cast("long"), col("idx").cast("long"),
-        col(valueCol).cast("double").as("value"))
-      .repartition(parts, col("subject"))
-      .sortWithinPartitions("subject", "idx")
-      .as[Sample]
-  }
-
-  /** Pinned-fan-out per-recording runner for kernels with arbitrary
-    * output shape: `f(subject, idxs, values)` receives the recording's
-    * idx-sorted parallel arrays and emits any rows. The substrate every
-    * whole-recording kernel site shares (CBD, correction FSM, Fourier
-    * resample, tonic SCL) so none pays groupByKey's per-row encoder
-    * overhead or risks a byte-based fan-in.
-    *
-    * Task-size contract: one recording = one task, so callers must be
-    * kernels whose INPUT is already sub-sample-rate or whose semantics
-    * require the whole recording (use the bucketed runners otherwise).
-    * For the beat-table kernels (CBD, correction FSM) the practical
-    * bound is beats-per-recording: a YEAR of continuous 48 bpm is ~25M
-    * beats ~ 200 MB of longs and an O(n) FSM pass — large but bounded,
-    * and LongRecordingSpec pins the linear growth on a 1M-beat train. */
-  def perRecording[R: org.apache.spark.sql.Encoder](signal: DataFrame,
-      valueCol: String)(
-      f: (Long, Array[Long], Array[Double]) => Iterator[R]): Dataset[R] =
-    bySubjectSorted(signal, valueCol).mapPartitions { it =>
-      runs(it)(_.subject).flatMap { case (subj, rows) =>
-        f(subj, rows.map(_.idx), rows.map(_.value))
-      }
-    }
-
-  /** Index-only [[perRecording]] for beat/event tables, which carry no
-    * value column: `f(subject, idxs)` gets the recording's sorted sample
-    * indices directly instead of smuggling them through a double value
-    * slot (lossy above 2^53, and misleading at the call site). */
-  def perRecordingIdx[R: org.apache.spark.sql.Encoder](rows: DataFrame)(
-      f: (Long, Array[Long]) => Iterator[R]): Dataset[R] = {
+  /** The slice source: every sample lands in its own bucket plus — within
+    * `halo` of a boundary — the neighbor bucket (the bounded explode costs
+    * <= (1 + 2*halo/bucketLen)x rows). Rows are repartitioned on
+    * (subject, bucket) to a PINNED partition count and sorted by
+    * (subject, bucket, idx) within partitions, so each slice is one run. */
+  private def slices(rows: DataFrame, valueCol: Option[String], bucketLen: Long,
+      halo: Int): Dataset[Sample] = {
+    require(halo >= 0 && halo < bucketLen, "need 0 <= halo < bucketLen")
     val spark = rows.sparkSession
-    import spark.implicits._
-    val parts = spark.sessionState.conf.numShufflePartitions
-    rows
-      .select(col("subject").cast("long"), col("idx").cast("long"))
-      .repartition(parts, col("subject"))
-      .sortWithinPartitions("subject", "idx")
-      .as[(Long, Long)]
-      .mapPartitions { it =>
-        runs(it)(_._1).flatMap { case (subj, rs) => f(subj, rs.map(_._2)) }
-      }
-  }
-
-  /** Run an array→array kernel per recording (e.g., filtfilt): emits one
-    * output value per input sample. Input needs columns
-    * (subject, idx, `valueCol`). Output: (subject, idx, `outCol`). */
-  def transformValues(signal: DataFrame, valueCol: String, outCol: String)(
-      kernel: Array[Double] => Array[Double]): DataFrame = {
-    val spark = signal.sparkSession
-    import spark.implicits._
-    bySubjectSorted(signal, valueCol)
-      .mapPartitions { it =>
-        runs(it)(_.subject).flatMap { case (subj, rows) =>
-          val out = kernel(rows.map(_.value))
-          rows.iterator.zip(out.iterator).map { case (r, v) => ValueOut(subj, r.idx, v) }
-        }
-      }
-      .toDF("subject", "idx", outCol)
-  }
-
-  /** Run an array→indices kernel per recording (e.g., a beat detector):
-    * emits the sample indices the kernel selects (positions into the
-    * idx-sorted array are mapped back to `idx` values). */
-  def detectIndices(signal: DataFrame, valueCol: String)(
-      kernel: Array[Double] => Array[Int]): DataFrame = {
-    val spark = signal.sparkSession
-    import spark.implicits._
-    bySubjectSorted(signal, valueCol)
-      .mapPartitions { it =>
-        runs(it)(_.subject).flatMap { case (subj, rows) =>
-          kernel(rows.map(_.value)).iterator.map(p => IdxOut(subj, rows(p).idx))
-        }
-      }
-      .toDF("subject", "idx")
-  }
-
-  /** (subject, bucket, idx, value) rows: every sample lands in its own
-    * bucket plus — within `halo` of a boundary — the neighbor bucket. The
-    * bounded explode costs <= (1 + 2*halo/bucketLen)x rows. Output is
-    * pinned-repartitioned on (subject, bucket) and sorted within
-    * partitions, so downstream kernels see idx-sorted group runs. */
-  private def bucketedSorted(signal: DataFrame, valueCol: String, bucketLen: Long,
-      halo: Int): Dataset[(Long, Long, Long, Double)] = {
-    val spark = signal.sparkSession
     import spark.implicits._
     val parts = spark.sessionState.conf.numShufflePartitions
     val b = (col("idx") / bucketLen).cast("long")
     val pos = col("idx") % bucketLen
-    signal
-      .select(col("subject").cast("long"), col("idx").cast("long"),
-        col(valueCol).cast("double").as("value"))
-      .withColumn("__b", explode(array_distinct(array(
+    val bucket =
+      if (halo == 0) b
+      else explode(array_distinct(array(
         b,
         when(pos < halo && b > 0, b - 1).otherwise(b),
-        when(pos >= bucketLen - halo, b + 1).otherwise(b)))))
-      .select(col("subject"), col("__b"), col("idx"), col("value"))
-      .repartition(parts, col("subject"), col("__b"))
-      .sortWithinPartitions("subject", "__b", "idx")
-      .as[(Long, Long, Long, Double)]
+        when(pos >= bucketLen - halo, b + 1).otherwise(b))))
+    val sorted = rows
+      .select(Seq(col("subject").cast("long"), col("idx").cast("long")) ++
+        valueCol.map(c => col(c).cast("double").as("value")): _*)
+      .withColumn("bucket", bucket)
+      .repartition(parts, col("subject"), col("bucket"))
+      .sortWithinPartitions("subject", "bucket", "idx")
+    // an idx-only source carries no value through the shuffle
+    (if (valueCol.isDefined) sorted else sorted.withColumn("value", lit(0.0)))
+      .as[Sample]
   }
 
-  /** The 100 TB posture: range-bucket each recording by `idx div
-    * bucketLen` with `halo` overlap rows on each side, run the kernel per
-    * (subject, bucket) slice, and emit ONLY the bucket-core outputs. No
-    * task ever materializes more than bucketLen + 2*halo samples, so a
-    * multi-day recording becomes many bounded tasks instead of one
-    * unbounded group.
+  /** Per-slice runner for kernels with arbitrary output rows: `f` receives
+    * each (subject, bucket) slice and emits any rows, and must keep to the
+    * slice's `core` when `halo > 0`. Idx-only tables (beat/event rows) pass
+    * no `valueCol` and read the sorted indices as longs from `idx`.
     *
-    * Correctness contract: exact (to fp tolerance) for kernels whose
-    * output at a position depends on inputs within `halo` positions —
-    * FIR convolutions, zero-phase IIR (choose halo past the impulse-
-    * response decay, >= 3x padlen is a good floor), windowed detectors.
-    * Adaptive FSM detectors converge rather than match bitwise: their
-    * running state (threshold EMAs, IBI FIFOs) forgets history
-    * geometrically, so halo must cover the state's convergence length
-    * (seconds of signal), as the spec demonstrates for Pan-Tompkins. */
-  def transformValuesBucketed(signal: DataFrame, valueCol: String,
-      outCol: String, bucketLen: Long, halo: Int)(
+    * At the `Whole` default one recording is one task, so whole-recording
+    * callers must be kernels whose INPUT is already sub-sample-rate or
+    * whose semantics require the whole recording. For the beat-table
+    * kernels (CBD, correction FSM) the practical bound is
+    * beats-per-recording: a YEAR of continuous 48 bpm is ~25M beats ~
+    * 200 MB of longs and an O(n) FSM pass — large but bounded, and
+    * LongRecordingSpec pins the linear growth on a 1M-beat train. */
+  def perSlice[R: Encoder](rows: DataFrame, valueCol: Option[String] = None,
+      bucketLen: Long = Whole, halo: Int = 0)(f: Slice => Iterator[R]): Dataset[R] = {
+    val hasValue = valueCol.isDefined
+    slices(rows, valueCol, bucketLen, halo).mapPartitions { it =>
+      runs(it)(r => (r.subject, r.bucket)).flatMap { case ((subj, b), rs) =>
+        val idx = rs.map(_.idx)
+        // idx-sorted, so the core is one contiguous run of positions
+        val from = idx.indexWhere(_ / bucketLen == b)
+        // Phantom bucket: a recording ending within halo of the next
+        // boundary spills halo rows into a bucket with no core samples.
+        // It would emit nothing — skip the kernel entirely.
+        if (from < 0) Iterator.empty
+        else {
+          val until = idx.lastIndexWhere(_ / bucketLen == b) + 1
+          val value = if (hasValue) rs.map(_.value) else Array.emptyDoubleArray
+          f(new Slice(subj, idx, value, from until until))
+        }
+      }
+    }
+  }
+
+  /** Run an array→array kernel per slice (e.g., filtfilt): emits one output
+    * value per core sample. Input needs columns (subject, idx, `valueCol`).
+    * Output: (subject, idx, `outCol`). */
+  def transformValues(signal: DataFrame, valueCol: String, outCol: String,
+      bucketLen: Long = Whole, halo: Int = 0)(
       kernel: Array[Double] => Array[Double]): DataFrame = {
-    require(halo >= 0 && halo < bucketLen, "need 0 <= halo < bucketLen")
     val spark = signal.sparkSession
     import spark.implicits._
-    bucketedSorted(signal, valueCol, bucketLen, halo)
-      .mapPartitions { it =>
-        runs(it)(r => (r._1, r._2)).flatMap { case ((subj, b), rows) =>
-          // Phantom bucket: a recording ending within halo of the next
-          // boundary spills halo rows into a bucket with no core samples.
-          // It would emit nothing — skip the kernel entirely.
-          if (!rows.exists(_._3 / bucketLen == b)) Iterator.empty
-          else {
-            val out = kernel(rows.map(_._4))
-            rows.iterator.zip(out.iterator)
-              .filter { case (r, _) => r._3 / bucketLen == b }
-              .map { case (r, v) => ValueOut(subj, r._3, v) }
-          }
-        }
-      }
-      .toDF("subject", "idx", outCol)
+    perSlice(signal, Some(valueCol), bucketLen, halo) { s =>
+      val out = kernel(s.value)
+      s.core.iterator.map(i => ValueOut(s.subject, s.idx(i), out(i)))
+    }.toDF("subject", "idx", outCol)
   }
 
-  /** Bucketed variant for kernels emitting THREE aligned output series per
-    * input sample (e.g., the K9 phasic/driver/tonic decomposition). Same
-    * range-bucket + halo contract as [[transformValuesBucketed]]; each
-    * (subject, bucket) slice is solved independently and only bucket-core
-    * outputs are emitted. */
-  def transformTripleBucketed(signal: DataFrame, valueCol: String,
-      outCols: (String, String, String), bucketLen: Long, halo: Int)(
-      kernel: Array[Double] => (Array[Double], Array[Double], Array[Double])): DataFrame = {
-    require(halo >= 0 && halo < bucketLen, "need 0 <= halo < bucketLen")
-    val spark = signal.sparkSession
-    import spark.implicits._
-    bucketedSorted(signal, valueCol, bucketLen, halo)
-      .mapPartitions { it =>
-        runs(it)(r => (r._1, r._2)).flatMap { case ((subj, b), rows) =>
-          if (!rows.exists(_._3 / bucketLen == b)) Iterator.empty
-          else {
-            val (o1, o2, o3) = kernel(rows.map(_._4))
-            rows.iterator.zipWithIndex
-              .filter { case (r, _) => r._3 / bucketLen == b }
-              .map { case (r, i) => TripleOut(subj, r._3, o1(i), o2(i), o3(i)) }
-          }
-        }
-      }
-      .toDF("subject", "idx", outCols._1, outCols._2, outCols._3)
-  }
-
-  /** Bucketed detector variant: kernel positions map back to sample idx;
-    * only detections whose idx falls in the bucket core are emitted (cores
-    * are disjoint, so no dedupe is needed). */
-  def detectIndicesBucketed(signal: DataFrame, valueCol: String,
-      bucketLen: Long, halo: Int)(
+  /** Run an array→positions kernel per slice (e.g., a beat detector): emits
+    * the idx of every selected position in the slice core (cores are
+    * disjoint, so no dedupe is needed). */
+  def detectIndices(signal: DataFrame, valueCol: String,
+      bucketLen: Long = Whole, halo: Int = 0)(
       kernel: Array[Double] => Array[Int]): DataFrame = {
-    require(halo >= 0 && halo < bucketLen, "need 0 <= halo < bucketLen")
     val spark = signal.sparkSession
     import spark.implicits._
-    bucketedSorted(signal, valueCol, bucketLen, halo)
-      .mapPartitions { it =>
-        runs(it)(r => (r._1, r._2)).flatMap { case ((subj, b), rows) =>
-          if (!rows.exists(_._3 / bucketLen == b)) Iterator.empty
-          else kernel(rows.map(_._4)).iterator
-            .map(p => rows(p)._3)
-            .filter(_ / bucketLen == b)
-            .map(ix => IdxOut(subj, ix))
-        }
-      }
-      .toDF("subject", "idx")
+    perSlice(signal, Some(valueCol), bucketLen, halo) { s =>
+      kernel(s.value).iterator.filter(s.core.contains).map(p => IdxOut(s.subject, s.idx(p)))
+    }.toDF("subject", "idx")
   }
 }

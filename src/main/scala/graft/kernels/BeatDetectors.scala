@@ -135,7 +135,7 @@ object BeatDetectors {
       bucketLen: Long = KernelRunner.DefaultBucketLen, halo: Int = -1): DataFrame = {
     val (b, a) = Iir.butter(2, Seq(0.5 / (0.5 * fs), 15.0 / (0.5 * fs)), "bandpass")
     val h = if (halo >= 0) halo else KernelRunner.defaultHalo(fs)
-    KernelRunner.detectIndicesBucketed(signal, "value", bucketLen, h) { x =>
+    KernelRunner.detectIndices(signal, "value", bucketLen, h) { x =>
       val pre = if (preprocessed) x else Iir.filtfilt(b, a, x)
       panTompkinsKernel(fs)(pre)
     }
@@ -330,7 +330,7 @@ object BeatDetectors {
   def engzee(signal: DataFrame, fs: Int,
       bucketLen: Long = KernelRunner.DefaultBucketLen, halo: Int = -1): DataFrame = {
     val h = if (halo >= 0) halo else KernelRunner.defaultHalo(fs)
-    KernelRunner.detectIndicesBucketed(signal, "value", bucketLen, h)(engzeeKernel(fs))
+    KernelRunner.detectIndices(signal, "value", bucketLen, h)(engzeeKernel(fs))
   }
 
   /** Manikandan with the reference's Chebyshev-I 6-18 Hz order-4 bandpass
@@ -342,7 +342,7 @@ object BeatDetectors {
       bucketLen: Long = KernelRunner.DefaultBucketLen, halo: Int = -1): DataFrame = {
     val (b, a) = Iir.cheby1(4, 1.0, Seq(6.0 / (0.5 * fs), 18.0 / (0.5 * fs)), "bandpass")
     val h = if (halo >= 0) halo else KernelRunner.defaultHalo(fs)
-    KernelRunner.detectIndicesBucketed(signal, "value", bucketLen, h) { x =>
+    KernelRunner.detectIndices(signal, "value", bucketLen, h) { x =>
       val pre = if (preprocessed) x else Iir.filtfilt(b, a, x)
       manikandanKernel(fs)(pre)
     }

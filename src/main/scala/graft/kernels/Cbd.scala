@@ -86,8 +86,8 @@ object Cbd {
       tol: Double = 1.0): DataFrame = {
     val spark = beats.sparkSession
     import spark.implicits._
-    graft.core.KernelRunner.perRecordingIdx(beats) { (subj, ix) =>
-      kernel(ix, fs, neighbors, tol).iterator.map(i => (subj, i))
+    graft.core.KernelRunner.perSlice(beats) { s =>
+      kernel(s.idx, fs, neighbors, tol).iterator.map(i => (s.subject, i))
     }.toDF("subject", "idx")
   }
 }

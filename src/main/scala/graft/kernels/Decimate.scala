@@ -51,7 +51,7 @@ object Decimate {
     // the whole-recording output exactly (forced-split parity in
     // BucketedKernelSpec). Recordings short enough to hit the len<=10 /
     // padlen guards always fit in a single bucket.
-    val filtered = KernelRunner.transformValuesBucketed(
+    val filtered = KernelRunner.transformValues(
       signal, "value", "value_f", bucketLen, halo) { x =>
       if (x.length > 10)
         Iir.filtfilt(b, Array(1.0), x, padlenOpt = math.min(3 * b.length, x.length - 1))

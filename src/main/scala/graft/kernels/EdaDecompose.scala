@@ -262,16 +262,17 @@ object EdaDecompose {
     *
     * The Bateman-support halo grows with fs while `chunkLen` does not, so
     * the chunk length is raised (minimally) to keep `overlap < chunkLen` —
-    * the bucketed runner's contract — instead of throwing at fs >= 274;
+    * the slice runner's contract — instead of throwing at fs >= 274;
     * callers that pass a consistent (chunkLen, overlap) are untouched. */
   def decompose(signal: DataFrame, fs: Int,
       chunkLen: Long = DefaultChunkLen, overlap: Int = -1): DataFrame = {
     val ov = if (overlap >= 0) overlap else defaultOverlap(fs)
     val len = math.max(chunkLen, ov + 1L)
-    KernelRunner.transformTripleBucketed(
-      signal, "value", ("phasic", "driver", "tonic"), len, ov) { y =>
-      val r = cvxEdaKernel(fs)(y)
-      (r.phasic, r.driver, r.tonic)
-    }
+    val spark = signal.sparkSession
+    import spark.implicits._
+    KernelRunner.perSlice(signal, Some("value"), len, ov) { s =>
+      val r = cvxEdaKernel(fs)(s.value)
+      s.core.iterator.map(i => (s.subject, s.idx(i), r.phasic(i), r.driver(i), r.tonic(i)))
+    }.toDF("subject", "idx", "phasic", "driver", "tonic")
   }
 }

@@ -182,7 +182,7 @@ object PpgDetectors {
       bucketLen: Long = KernelRunner.DefaultBucketLen, halo: Int = -1): DataFrame = {
     val (b, a) = Iir.butter(2, Seq(0.5 / (0.5 * fs), 8.0 / (0.5 * fs)), "bandpass")
     val h = if (halo >= 0) halo else KernelRunner.defaultHalo(fs)
-    KernelRunner.detectIndicesBucketed(signal, "value", bucketLen, h) { x =>
+    KernelRunner.detectIndices(signal, "value", bucketLen, h) { x =>
       val pre = if (preprocessed) x else Iir.filtfilt(b, a, x)
       ermaKernel(fs)(pre)
     }

@@ -127,10 +127,10 @@ object Resample {
   def fourierResample(signal: DataFrame, fs: Int, newFs: Int): DataFrame = {
     val spark = signal.sparkSession
     import spark.implicits._
-    graft.core.KernelRunner.perRecording(signal, "value") { (subj, _, vals) =>
-      val num = math.round(vals.length.toDouble * newFs / fs).toInt
-      fourierResampleKernel(num)(vals).iterator.zipWithIndex
-        .map { case (v, i) => (subj, i.toLong, v) }
+    graft.core.KernelRunner.perSlice(signal, Some("value")) { s =>
+      val num = math.round(s.value.length.toDouble * newFs / fs).toInt
+      fourierResampleKernel(num)(s.value).iterator.zipWithIndex
+        .map { case (v, i) => (s.subject, i.toLong, v) }
     }.toDF("subject", "ridx", "value_rs")
   }
 }

@@ -59,7 +59,7 @@ object RunPipeline {
     val beats = (
       if (dtype == "ECG") {
         val (b, a) = Iir.ellip(2, 0.15, 80.0, Seq(1.0 / nyq, 15.0 / nyq), "bandpass")
-        KernelRunner.detectIndicesBucketed(signal, "value",
+        KernelRunner.detectIndices(signal, "value",
           KernelRunner.DefaultBucketLen, KernelRunner.defaultHalo(fs)) { x =>
           BeatDetectors.panTompkinsKernel(fs)(Iir.filtfilt(b, a, x))
         }

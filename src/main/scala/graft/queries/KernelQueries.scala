@@ -54,7 +54,7 @@ object KernelQueries {
     // the 6-digit rounding the golden hashes.
     "q35_filtfilt" -> ((s, dir) => {
       val (b, a) = Iir.butter(2, Seq(0.5 / 16.0, 15.0 / 16.0), "bandpass")
-      KernelRunner.transformValuesBucketed(
+      KernelRunner.transformValues(
         SignalFrame.fromEvents(s, dir), "value", "filtered",
         KernelRunner.DefaultBucketLen, KernelRunner.defaultHalo(NAB_FS))(
         x => Iir.filtfilt(b, a, x))
@@ -130,7 +130,7 @@ object KernelQueries {
     // keeps the band inside Nyquist. Rows-only check (kernel).
     "q55_ellip_filtfilt" -> ((s, dir) => {
       val (b, a) = Iir.ellip(2, 0.15, 80.0, Seq(1.0 / 32, 15.0 / 32), "bandpass")
-      KernelRunner.transformValuesBucketed(
+      KernelRunner.transformValues(
         SignalFrame.fromEvents(s, dir), "value", "filtered",
         KernelRunner.DefaultBucketLen, KernelRunner.defaultHalo(64))(
         x => Iir.filtfilt(b, a, x))
@@ -153,9 +153,9 @@ object KernelQueries {
         .withColumn("value_rs", bround(col("value_rs"), 6))),
 
     // K2: frequency-domain Gaussian low-pass (EDA.py:95-133), cutoff
-    // 0.5 Hz at fs=4. FFT kernel, golden-fixture oracle. Stays on the
-    // whole-recording runner deliberately: the reference semantics are a
-    // global DFT (like q57's Fourier resample), so a bucketed variant
+    // 0.5 Hz at fs=4. FFT kernel, golden-fixture oracle. Runs as one
+    // whole-recording slice deliberately: the reference semantics are a
+    // global DFT (like q57's Fourier resample), so a split recording
     // would be overlap-save APPROXIMATION, not the operator. EDA recordings
     // at 4 Hz are ~345k samples/day — bounded without bucketing.
     "q67_gaussian_lowpass" -> ((s, dir) =>

@@ -22,13 +22,13 @@ object Corrected {
       p: Correction.Params = Correction.Params()): DataFrame = {
     val spark = beatRows.sparkSession
     import spark.implicits._
-    graft.core.KernelRunner.perRecordingIdx(beatRows) { (subj, ix) =>
-      val beats = ix.map(_.toDouble)
+    graft.core.KernelRunner.perSlice(beatRows) { s =>
+      val beats = s.idx.map(_.toDouble)
       val (orig, corr) = Correction.correctInterval(fs, p)(beats)
       orig.iterator.map(r =>
-        Out(subj, 0, r.pos, r.ibiMs, r.ibi, r.beat, Some(r.correction), None)) ++
+        Out(s.subject, 0, r.pos, r.ibiMs, r.ibi, r.beat, Some(r.correction), None)) ++
         corr.iterator.map(r =>
-          Out(subj, 1, r.pos, r.ibiMs, r.ibi, r.beat, None, r.flag))
+          Out(s.subject, 1, r.pos, r.ibiMs, r.ibi, r.beat, None, r.flag))
     }.toDF()
   }
 

@@ -176,9 +176,9 @@ object Scr {
   def tonicScl(signal: DataFrame, fs: Int, segSize: Int): DataFrame = {
     val spark = signal.sparkSession
     import spark.implicits._
-    graft.core.KernelRunner.perRecording(signal, "value") { (subj, _, vals) =>
-      tonicSclKernel(fs, segSize)(vals).iterator.zipWithIndex
-        .map { case (v, k) => (subj, (k + 1).toLong, v) }
+    graft.core.KernelRunner.perSlice(signal, Some("value")) { s =>
+      tonicSclKernel(fs, segSize)(s.value).iterator.zipWithIndex
+        .map { case (v, k) => (s.subject, (k + 1).toLong, v) }
     }.toDF("subject", "segment", "tonic_scl")
   }
 }

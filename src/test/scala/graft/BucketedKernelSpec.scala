@@ -1,14 +1,25 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.KernelRunner
 import graft.kernels.{BeatDetectors, Iir}
 
-/** Proves the bucketed kernel runner (range-buckets + halo rows — the
-  * 100 TB posture) reproduces whole-recording kernel output on a split
+/** The reference a split run is checked against: the plain kernel applied
+  * on the driver to each collected, idx-sorted recording. */
+object KernelReference {
+  def onDriver[T](df: DataFrame)(kernel: Array[Double] => Array[T]): Map[(Long, Long), T] =
+    df.select("subject", "idx", "value").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      .groupBy(_._1).flatMap { case (s, rs) =>
+        val sorted = rs.sortBy(_._2)
+        sorted.map(r => (s, r._2)).zip(kernel(sorted.map(_._3)))
+      }
+}
+
+/** Proves the kernel runner's bucketed path (range-buckets + halo rows —
+  * the 100 TB posture) reproduces whole-recording kernel output on a split
   * recording: exactly for a zero-phase IIR filter once the halo covers the
   * impulse-response decay, and detection-for-detection for the
   * Pan-Tompkins FSM once the halo covers its state convergence length. */
@@ -30,10 +41,9 @@ class BucketedKernelSpec extends AnyFunSuite {
       math.sin(2 * math.Pi * 1.3 * i / 32) + 0.4 * math.sin(2 * math.Pi * 9.7 * i / 32)
         + 0.1 * math.cos(0.01 * i))
     val (b, a) = Iir.butter(2, Seq(0.5 / 16.0, 15.0 / 16.0), "bandpass")
-    val whole = KernelRunner.transformValues(frame(x), "value", "y")(
-      v => Iir.filtfilt(b, a, v))
-      .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
-    val bucketed = KernelRunner.transformValuesBucketed(
+    val whole = KernelReference.onDriver(frame(x))(v => Iir.filtfilt(b, a, v))
+      .map { case ((_, i), y) => i -> y }
+    val bucketed = KernelRunner.transformValues(
       frame(x), "value", "y", bucketLen = 512, halo = 300)(
       v => Iir.filtfilt(b, a, v))
       .collect().map(r => r.getLong(1) -> r.getDouble(2)).toMap
@@ -53,7 +63,7 @@ class BucketedKernelSpec extends AnyFunSuite {
     val fs = 32
     val whole = BeatDetectors.panTompkins(frame(x), fs)
       .collect().map(_.getLong(1)).sorted
-    val bucketed = KernelRunner.detectIndicesBucketed(
+    val bucketed = KernelRunner.detectIndices(
       frame(x), "value", bucketLen = 1024, halo = 640) { v =>
       val (b, a) = Iir.butter(2, Seq(0.5 / 16.0, 15.0 / 16.0), "bandpass")
       BeatDetectors.panTompkinsKernel(fs)(Iir.filtfilt(b, a, v))
@@ -62,8 +72,8 @@ class BucketedKernelSpec extends AnyFunSuite {
   }
 
   test("production detector wrappers: split recording == single bucket (two halos)") {
-    // The q36/q51/q54 production entry points now route through the
-    // bucketed runner with DefaultBucketLen (single bucket at test scale).
+    // The q36/q51/q54 production entry points run the bucketed path
+    // with DefaultBucketLen (single bucket at test scale).
     // Forcing a small bucketLen on the same wrappers must reproduce the
     // single-bucket detections — the multi-task path IS the operator.
     // Parity is asserted at TWO halo values (the documented 20 s default
@@ -165,6 +175,58 @@ class BucketedKernelSpec extends AnyFunSuite {
     // Chunking adds no error CLASS of its own; bound with headroom.
     assert(dPhasic < 0.1, s"phasic chunk delta $dPhasic")
     assert(dTonic < 0.1, s"tonic chunk delta $dTonic")
+  }
+
+  test("phantom bucket: a halo-only tail bucket runs no kernel, every idx is emitted once") {
+    // k full buckets plus a tail that ends within halo of the next boundary:
+    // its last halo/2 samples spill into bucket k+1, which owns no sample
+    val (bucketLen, halo, k) = (100L, 40, 3)
+    val n = (k * bucketLen + (bucketLen - halo / 2)).toInt
+    val df = frame(Array.tabulate(n)(_.toDouble))
+    val calls = spark.sparkContext.longAccumulator("kernelCalls")
+    def counted[T](kernel: Array[Double] => T): Array[Double] => T =
+      x => { calls.add(1); kernel(x) }
+
+    val values = KernelRunner.transformValues(df, "value", "y", bucketLen, halo)(
+      counted[Array[Double]](x => x)).collect()
+    assert(calls.sum == k + 1)
+    assert(values.map(_.getLong(1)).sorted.toSeq == (0L until n))
+    assert(values.forall(r => r.getDouble(2) == r.getLong(1).toDouble))
+
+    calls.reset()
+    val detected = KernelRunner.detectIndices(df, "value", bucketLen, halo)(
+      counted[Array[Int]](x => x.indices.toArray)).collect().map(_.getLong(1))
+    assert(calls.sum == k + 1)
+    assert(detected.sorted.toSeq == (0L until n))
+  }
+
+  test("whole slices: subjects sharing a partition each reach f once, idx-sorted") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7L)
+    val rows = for (s <- Seq(3L, 5L, 11L); i <- 0 until 50) yield
+      (s, i * 3L + s, s * 1000.0 + i)
+    val df = rnd.shuffle(rows).toDF("subject", "idx", "value")
+    val calls = spark.sparkContext.longAccumulator("sliceCalls")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "1") // every subject in the one kernel partition
+    try {
+      for (valueCol <- Seq(Some("value"), None)) {
+        calls.reset()
+        val got = KernelRunner.perSlice(df, valueCol) { s =>
+          calls.add(1)
+          Iterator.single((s.subject, s.idx.toSeq, s.value.toSeq, s.core.start, s.core.end))
+        }.collect()
+        assert(calls.sum == 3)
+        assert(got.map(_._1).sorted.toSeq == Seq(3L, 5L, 11L))
+        for ((subj, idx, value, from, until) <- got) {
+          val want = rows.filter(_._1 == subj).sortBy(_._2)
+          assert(idx == want.map(_._2))
+          assert(value == (if (valueCol.isDefined) want.map(_._3) else Seq.empty))
+          assert((from, until) == (0, want.length)) // a whole slice is all core
+        }
+      }
+    } finally spark.conf.set(key, saved)
   }
 
   test("production defaults satisfy the runner contract") {

@@ -61,6 +61,27 @@ class IoSpec extends AnyFunSuite {
     assert(rows.map(_.getLong(1)).toSeq == Seq(1L, 2L))
   }
 
+  test("mapped CSV reader: a split scan keeps file order in Sample") {
+    // Spark orders a file's splits by length with a stable sort, and every
+    // split but the last has the same length, so a monotonic-id clock over
+    // a split single-file scan still follows file order.
+    val dir = Files.createTempDirectory("csv_split_").toString
+    val n = 20000
+    Files.writeString(java.nio.file.Paths.get(dir, "d.csv"),
+      (0 until n).map(i => s"${i * 0.5},$i").mkString("millivolts,row\n", "\n", "\n"))
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "16384")
+    try {
+      val splits = spark.read.option("header", "true").csv(dir).rdd.getNumPartitions
+      assert(splits > 4, s"expected a split scan, got $splits partitions")
+      val rows = Readers.mappedCsv(spark, dir, Map("millivolts" -> "ECG", "row" -> "Row"))
+        .select("Row", "Sample").collect()
+      assert(rows.length == n)
+      assert(rows.forall(r => r.getAs[Number](1).longValue == r.getAs[Number](0).longValue + 1))
+    } finally spark.conf.set(key, saved)
+  }
+
   test("multimodal plumbing: deterministic stub features + checksum") {
     import spark.implicits._
     val docs = Seq((1L, "hello world"), (2L, "abc")).toDF("doc_id", "text")

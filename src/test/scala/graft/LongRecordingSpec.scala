@@ -38,7 +38,7 @@ class LongRecordingSpec extends AnyFunSuite {
     // slice-size witness: every kernel invocation reports its input length
     val sliceLens = spark.sparkContext.collectionAccumulator[Long]("sliceLens")
     val (b, a) = Iir.butter(2, Seq(0.5 / 16.0, 15.0 / 16.0), "bandpass")
-    val beats = KernelRunner.detectIndicesBucketed(sig, "value", bucketLen, halo) { x =>
+    val beats = KernelRunner.detectIndices(sig, "value", bucketLen, halo) { x =>
       sliceLens.add(x.length.toLong)
       BeatDetectors.panTompkinsKernel(fs)(Iir.filtfilt(b, a, x))
     }
@@ -109,9 +109,9 @@ class LongRecordingSpec extends AnyFunSuite {
         beatTrain(nBeats)
           .transform(df => {
             // tap the kernel input size without touching the query path
-            graft.core.KernelRunner.perRecordingIdx(df) { (s, ix) =>
-              beatsPerTask.add(ix.length.toLong)
-              Iterator.single((s, ix.length.toLong))
+            graft.core.KernelRunner.perSlice(df) { s =>
+              beatsPerTask.add(s.idx.length.toLong)
+              Iterator.single((s.subject, s.idx.length.toLong))
             }(org.apache.spark.sql.Encoders.tuple(
               org.apache.spark.sql.Encoders.scalaLong,
               org.apache.spark.sql.Encoders.scalaLong)).count()

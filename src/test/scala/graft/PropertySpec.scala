@@ -97,11 +97,10 @@ class PropertySpec extends AnyFunSuite {
     val df = (0 until 3000).map(i =>
       (1L + i % 3, i.toLong / 3, rnd.nextDouble() * 4 - 2))
       .toDF("subject", "idx", "value")
-    val whole = KernelRunner.transformValues(df, "value", "out")(ma)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
+    val whole = KernelReference.onDriver(df)(ma)
     for ((bucketLen, halo) <- Seq((256L, 24), (300L, 64), (512L, 100),
         (1000L, 999))) {
-      val split = KernelRunner.transformValuesBucketed(
+      val split = KernelRunner.transformValues(
         df, "value", "out", bucketLen, halo)(ma)
         .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2)))
       assert(split.length == whole.size, s"($bucketLen,$halo) row count")
