@@ -4,38 +4,197 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Approximate-nearest-neighbor search over an `array<float>` embedding
-  * column.
+/** Nearest-neighbor search over an `array<float>` embedding column.
   *
-  *  - bruteForceTopK: exact baseline — queries × candidates join with an
-  *    expression-only cosine; correct at any k, quadratic in candidates.
-  *    Broadcast the (small) query side so the big side never shuffles.
-  *  - lshTopK: the scale path — sign-bit LSH buckets make the candidate
-  *    join an equi-join on the bucket key; per-bucket cosine + top-k.
-  *    Recall is tunable via number of hyperplanes / multi-probe; at 100 TB
-  *    the bucket key is also the natural partitioning key.
+  * Every top-k entry point composes the same stages, each defined once
+  * at the top of this object:
+  *
+  *  - sides ([[side]]): the `(query_id, q_emb, q_n2)` and
+  *    `(cand_id, c_emb, c_n2)` projections, squared norms computed once;
+  *  - a candidate source: all pairs with the query side broadcast
+  *    ([[allPairs]]), sign-bit LSH band equi-joins ([[bandKeys]],
+  *    [[bandPairs]]), IVF cells under the lowest-id coarse quantizer
+  *    ([[cellSeeds]], [[assignCells]], [[probeCells]]), the IVF-split
+  *    `(cell, sub)` probes, or PQ codes scored by ADC ([[adcLut]]);
+  *  - a score: exact cosine rounded to 6 dp ([[cos6]]), or the unrounded
+  *    ADC sum;
+  *  - the one per-query selection ([[topK]]): ties rank by ascending
+  *    candidate id (ascending `adc` first on the ADC paths);
+  *  - an optional exact rerank of a candidate set ([[exactRerank]]);
+  *  - recall against the exact top-k ([[recallAgainst]]).
+  *
+  * The broadcast side is always the bounded query batch, so the corpus
+  * side never shuffles for all-pairs, and the approximate sources turn
+  * the candidate join into an equi-join on a bucket or cell key, which
+  * at 100 TB is also the natural partitioning key.
   */
 object Similarity {
+
+  /** Column names of one search side. */
+  private case class Side(id: String, emb: String, n2: String)
+  private val Query = Side("query_id", "q_emb", "q_n2")
+  private val Cand = Side("cand_id", "c_emb", "c_n2")
+  /** A corpus side the coarse quantizer assigns to cells. */
+  private val Corpus = Side("id", "emb", "n2")
+
+  /** One search side: id and embedding under `s`'s names, any carried
+    * columns, and the squared norm. Registers the vector expressions for
+    * every search that starts here. */
+  private def side(df: DataFrame, idCol: String, embCol: String, s: Side,
+      carry: Column*): DataFrame = {
+    graft.functions.VectorExpressions.register(df.sparkSession)
+    df.select(col(idCol).as(s.id) +: col(embCol).as(s.emb) +: carry: _*)
+      .withColumn(s.n2, VectorOps.normSq(col(s.emb)))
+  }
+
+  /** Raw IEEE cosine of two embedding columns given their squared norms. */
+  private def cos(a: String, b: String, na: String, nb: String): Column =
+    VectorOps.cosine(VectorOps.dot(col(a), col(b)), col(na), col(nb))
+
+  /** The retrieval score: exact cosine rounded to 6 dp, the form every
+    * engine reproduces bit for bit before ranking. */
+  private def cos6(a: String, b: String, na: String, nb: String): Column =
+    round(cos(a, b, na, nb), 6)
+
+  /** The one top-k selection: a `row_number` named `rank` over `by`,
+    * ordered by `order`, kept at `<= k`. The filter sits directly above
+    * the window, so Spark's WindowGroupLimit drops each partition's
+    * surplus rows before the sort. */
+  private def topK(df: DataFrame, k: Int, rank: String, by: String*)(
+      order: Column*): DataFrame =
+    df.withColumn(rank, row_number().over(
+        Window.partitionBy(by.map(col): _*).orderBy(order: _*)))
+      .filter(col(rank) <= k)
+
+  /** Scores joined query/candidate side rows with [[cos6]] and keeps each
+    * query's top k, ties to the lower candidate id. */
+  private def scoreTopK(pairs: DataFrame, k: Int,
+      out: Seq[String] = Seq("query_id", "cand_id", "cos", "rnk")): DataFrame =
+    topK(pairs.withColumn("cos", cos6("q_emb", "c_emb", "q_n2", "c_n2")),
+        k, "rnk", "query_id")(col("cos").desc, col("cand_id"))
+      .select(out.map(col): _*)
+
+  /** All-pairs candidate source: the broadcast query side against every
+    * candidate but itself; `extra` predicates are evaluated inside the
+    * join, so excluded rows never reach the ranking. */
+  private def allPairs(q: DataFrame, c: DataFrame, extra: Column*): DataFrame =
+    broadcast(q).join(c,
+      ((col("query_id") =!= col("cand_id")) +: extra).reduce(_ && _))
+
+  /** Exact rerank of a distinct `(query_id, cand_id)` candidate set: the
+    * bounded query side broadcasts, the candidate side joins on id. */
+  private def exactRerank(pairs: DataFrame, q: DataFrame, c: DataFrame,
+      k: Int): DataFrame =
+    scoreTopK(pairs.join(broadcast(q), Seq("query_id"))
+      .join(c, Seq("cand_id")), k)
+
+  /** Sign-bit LSH keys: one `(idAs, band_idx, band_key)` row per band. */
+  private def bandKeys(df: DataFrame, idCol: String, embCol: String,
+      idAs: String, bands: Seq[Seq[Int]]): DataFrame =
+    df.select(col(idCol).as(idAs),
+      posexplode(array(bands.map(d =>
+        VectorOps.signBucket(col(embCol), d)): _*)).as(Seq("band_idx", "band_key")))
+
+  /** LSH candidate source: distinct `(query_id, cand_id)` pairs sharing
+    * any `(band_idx, band_key)`, self-pairs dropped. */
+  private def bandPairs(qk: DataFrame, ck: DataFrame): DataFrame =
+    qk.select("query_id", "band_idx", "band_key")
+      .join(ck.select("cand_id", "band_idx", "band_key"),
+        Seq("band_idx", "band_key"))
+      .filter(col("query_id") =!= col("cand_id"))
+      .select("query_id", "cand_id").distinct()
+
+  /** The IVF coarse quantizer: the `lists` lowest-id rows of a corpus
+    * side `(id, emb[, n2])` (deterministic sample seeding; at 100 TB the
+    * quantizer is trained offline on a sample anyway, FAISS-style),
+    * renamed `(cent_id, c_emb[, c_n2])`. */
+  private def cellSeeds(n: DataFrame, lists: Int): DataFrame =
+    n.orderBy("id").limit(lists).select(n.columns.map(c =>
+      col(c).as(if (c == "id") "cent_id" else s"c_$c")): _*)
+
+  /** Corpus-side cell assignment: each `(id, emb, n2)` row joins the cell
+    * of its argmax-cosine seed (ties to the lower seed id) as ONE
+    * map-side-combinable aggregate. The crossJoin still fans out
+    * N×nList rows, but hash-aggregate partials collapse them to one row
+    * per id BEFORE the exchange, so shuffle volume is N; a windowed
+    * row_number form would shuffle the exploded N×nList rows (N^1.5 at
+    * the ⌈√N⌉ sizing rule). max_by's ordering struct (cosine, then
+    * -cent_id) is tie-free because cent_id is unique per seed. The
+    * `payload` columns ride through the aggregate, so callers need no
+    * re-join. Output: (id, cell, payload...). */
+  private def assignCells(n: DataFrame, cents: DataFrame,
+      payload: Column*): DataFrame =
+    n.crossJoin(broadcast(cents))
+      .withColumn("__cc", cos("emb", "c_emb", "n2", "c_n2"))
+      .groupBy("id")
+      .agg(max_by(struct(col("cent_id").as("cell") +: payload: _*),
+        struct(col("__cc"), -col("cent_id"))).as("__b"))
+      .select(col("id"), col("__b.*"))
+
+  /** Query-side probes: each query's `nProbe` nearest seeds. The window
+    * stays: its exchange is |Q|×nList rows, bounded by the query batch,
+    * never the corpus. Keeps every query and seed column. */
+  private def probeCells(q: DataFrame, cents: DataFrame,
+      nProbe: Int): DataFrame =
+    topK(q.crossJoin(broadcast(cents))
+        .withColumn("__cc", cos("q_emb", "c_emb", "q_n2", "c_n2")),
+      nProbe, "__rn", "query_id")(col("__cc").desc, col("cent_id"))
+
+  /** ADC lookup table: every `m`-way subvector of `vec` against every
+    * codebook centroid, as the squared distance floored onto the 2^-20
+    * grid, so the m-addend sums are exact in any order. One row per
+    * (keys..., sub, code). */
+  private def adcLut(df: DataFrame, vec: String, codebook: DataFrame,
+      m: Int, d: Int, keys: String*): DataFrame = {
+    val grid = 1L << 20
+    df.select(keys.map(col) :+ posexplode(array((0 until m).map(j =>
+        slice(col(vec), j * d + 1, d)): _*)).as(Seq("sub", "qe")): _*)
+      .withColumn("qn2", VectorOps.normSq(col("qe")))
+      .join(broadcast(codebook), Seq("sub"))
+      .withColumn("term", floor((col("qn2") + col("c_n2") -
+        lit(2.0) * VectorOps.dot(col("qe"), col("c_emb"))) * grid) / grid)
+      .select(keys.map(col) ++ Seq(col("sub").cast("long").as("sub"),
+        col("cluster").cast("long").as("code"), col("term")): _*)
+  }
+
+  /** ADC top-k: per (query, candidate) the sum of its code terms, ties to
+    * the lower candidate id; self-pairs dropped before the sum. */
+  private def adcTopK(terms: DataFrame, k: Int): DataFrame =
+    topK(terms.filter(col("query_id") =!= col("cand_id"))
+        .groupBy("query_id", "cand_id").agg(sum(col("term")).as("adc")),
+      k, "rnk", "query_id")(col("adc"), col("cand_id"))
+      .select("query_id", "cand_id", "adc", "rnk")
+
+  /** Recall of named approximate `(query_id, cand_id)` sets against the
+    * exact brute-force top-k: per query, `n_exact`, then each set's hit
+    * count, then each set's recall (6 dp). The exact side runs over the
+    * query batch only, never corpus×corpus. */
+  private def recallAgainst(queries: DataFrame, candidates: DataFrame,
+      idCol: String, embCol: String, k: Int,
+      sets: (String, String, DataFrame)*): DataFrame = {
+    val exact = bruteForceTopK(queries, candidates, idCol, embCol, k)
+      .select("query_id", "cand_id")
+    sets.foldLeft(exact) { case (df, (hits, _, a)) =>
+      df.join(a.select(col("query_id"), col("cand_id"), lit(1L).as(hits)),
+        Seq("query_id", "cand_id"), "left")
+    }
+      .groupBy("query_id")
+      .agg(count(lit(1)).as("n_exact"), sets.map { case (hits, _, _) =>
+        coalesce(sum(col(hits)), lit(0L)).as(hits)
+      }: _*)
+      .select(Seq(col("query_id"), col("n_exact")) ++
+        sets.map(s => col(s._1)) ++ sets.map { case (hits, recall, _) =>
+          round(col(hits).cast("double") / col("n_exact"), 6).as(recall)
+        }: _*)
+  }
 
   /** Exact top-k cosine neighbors for each query row.
     * Scores rounded to 6 dp before ranking; ties break on candidate id
     * (deterministic across engines). */
   def bruteForceTopK(queries: DataFrame, candidates: DataFrame,
-      idCol: String, embCol: String, k: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val c = candidates.select(col(idCol).as("cand_id"), col(embCol).as("c_emb"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    broadcast(q).join(c, col("query_id") =!= col("cand_id"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "cos", "rnk")
-  }
+      idCol: String, embCol: String, k: Int): DataFrame =
+    scoreTopK(allPairs(side(queries, idCol, embCol, Query),
+      side(candidates, idCol, embCol, Cand)), k)
 
   /** Margin-based bitext candidate mining (Artetxe & Schwenk 2019,
     * "Margin-based Parallel Corpus Mining with Multilingual Sentence
@@ -75,29 +234,18 @@ object Similarity {
   /** Hard-negative mining for contrastive training: per query, the top-k
     * most-similar corpus vectors carrying a DIFFERENT label — the pairs a
     * retrieval model most needs to push apart (in-batch-negatives
-    * literature, e.g. DPR/ANCE). Same plan shape as [[bruteForceTopK]]
-    * (broadcast query side, label predicate evaluated inside the join, so
-    * same-label rows never reach the ranking), with the label carried
-    * through for the training-pair sink. */
+    * literature, e.g. DPR/ANCE). The [[allPairs]] source of
+    * [[bruteForceTopK]] with the label predicate evaluated inside the
+    * join, so same-label rows never reach the ranking; the labels are
+    * carried through for the training-pair sink. */
   def hardNegatives(queries: DataFrame, candidates: DataFrame,
-      idCol: String, embCol: String, labelCol: String, k: Int): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"),
-        col(labelCol).as("q_label"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val c = candidates.select(col(idCol).as("cand_id"), col(embCol).as("c_emb"),
-        col(labelCol).as("cand_label"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    broadcast(q).join(c,
-        col("query_id") =!= col("cand_id") && col("q_label") =!= col("cand_label"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "q_label", "cand_id", "cand_label", "cos", "rnk")
-  }
+      idCol: String, embCol: String, labelCol: String, k: Int): DataFrame =
+    scoreTopK(allPairs(
+        side(queries, idCol, embCol, Query, col(labelCol).as("q_label")),
+        side(candidates, idCol, embCol, Cand,
+          col(labelCol).as("cand_label")),
+        col("q_label") =!= col("cand_label")),
+      k, Seq("query_id", "q_label", "cand_id", "cand_label", "cos", "rnk"))
 
   /** Cluster-vs-label purity report over a [[kMeans]] assignment: per
     * cluster, its size, majority label (ties to the lower label id), and
@@ -132,13 +280,9 @@ object Similarity {
   def embeddingDupPairs(docs: DataFrame, idCol: String, embCol: String,
       threshold: Double, numBands: Int = 4, bitsPerBand: Int = 8,
       dim: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
-    val bands = VectorOps.bandDims(numBands, bitsPerBand, dim)
-    val n = docs.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val keyed = n.select(col("id"),
-      posexplode(array(bands.map(d => VectorOps.signBucket(col("emb"), d)): _*))
-        .as(Seq("band_idx", "band_key")))
+    val n = side(docs, idCol, embCol, Corpus)
+    val keyed = bandKeys(n, "id", "emb", "id",
+      VectorOps.bandDims(numBands, bitsPerBand, dim))
     val a = keyed.select(col("id").as("id_a"), col("band_idx"), col("band_key"))
     val b = keyed.select(col("id").as("id_b"), col("band_idx"), col("band_key"))
     val cand = a.join(b, Seq("band_idx", "band_key"))
@@ -147,9 +291,7 @@ object Similarity {
     cand
       .join(n.select(col("id").as("id_a"), col("emb").as("ea"), col("n2").as("na")), Seq("id_a"))
       .join(n.select(col("id").as("id_b"), col("emb").as("eb"), col("n2").as("nb")), Seq("id_b"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("ea"), col("eb")),
-          col("na"), col("nb")), 6))
+      .withColumn("cos", cos6("ea", "eb", "na", "nb"))
       .filter(col("cos") >= threshold)
       .select("id_a", "id_b", "cos")
   }
@@ -167,57 +309,18 @@ object Similarity {
   def ivfTopK(queries: DataFrame, candidates: DataFrame,
       idCol: String, embCol: String, k: Int, nList: Int = 0,
       nProbe: Int = 2): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
-    val n = candidates.select(col(idCol).as("vid"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val lists = if (nList > 0) nList else autoNList(n.count())
-    val cents = n.orderBy("vid").limit(lists)
-      .select(col("vid").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
-    // Corpus-side cell assignment: argmax cosine over the broadcast seed
-    // table as ONE map-side-combinable aggregate. The crossJoin still fans
-    // out N×nList rows, but hash-aggregate partials collapse them to one
-    // row per vid BEFORE the exchange, so shuffle volume is N — the
-    // windowed row_number form shuffled the exploded N×nList rows (N^1.5
-    // at the ⌈√N⌉ sizing rule; round-10 verdict #3). max_by's ordering
-    // struct (__cc then -cent_id) reproduces the old
-    // `orderBy(__cc.desc, cent_id)` pick exactly, and cent_id is unique
-    // per seed so the ordering is tie-free (float comparison order cannot
-    // affect the winner).
-    val cells = n.crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .groupBy(col("vid").as("cand_id"))
-      .agg(max_by(col("cent_id"), struct(col("__cc"), -col("cent_id")))
-        .as("cell"))
-    // Query-side probes keep the windowed top-nProbe: the exchange is
-    // |Q|×nList rows, bounded by the query batch — never the corpus.
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val wA = Window.partitionBy("vid")
-      .orderBy(col("__cc").desc, col("cent_id"))
-    val probes = q.select(col("query_id").as("vid"),
-        col("q_emb").as("emb"), col("q_n2").as("n2"))
-      .crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .withColumn("__rn", row_number().over(wA))
-      .filter(col("__rn") <= nProbe)
-      .select(col("vid").as("query_id"), col("cent_id").as("cell"))
-    val cand = probes.join(cells, Seq("cell"))
+    val n = side(candidates, idCol, embCol, Corpus)
+    val cents = cellSeeds(n, resolveNList(nList, 0, n.count()))
+    val q = side(queries, idCol, embCol, Query)
+    val pairs = probeCells(q, cents, nProbe)
+      .select(col("query_id"), col("cent_id").as("cell"))
+      .join(assignCells(n, cents)
+        .select(col("id").as("cand_id"), col("cell")), Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .select("query_id", "cand_id").distinct()
-    // norms reused from the assignment projections — no re-derivation
-    val c = n.select(col("vid").as("cand_id"), col("emb").as("c_emb"),
-      col("n2").as("c_n2"))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    cand.join(broadcast(q), Seq("query_id")).join(c, Seq("cand_id"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "cos", "rnk")
+    // norms reused from the assignment projection, no re-derivation
+    exactRerank(pairs, q, n.select(col("id").as("cand_id"),
+      col("emb").as("c_emb"), col("n2").as("c_n2")), k)
   }
 
   /** Multi-probe LSH recall audit (Lv et al. 2007, "Multi-Probe LSH:
@@ -240,41 +343,19 @@ object Similarity {
   def multiProbeRecall(queries: DataFrame, candidates: DataFrame,
       idCol: String, embCol: String, k: Int, numBands: Int = 4,
       bitsPerBand: Int = 8, dim: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val bands = VectorOps.bandDims(numBands, bitsPerBand, dim)
-    def keyed(df: DataFrame, idAs: String) =
-      df.select(col(idCol).as(idAs),
-        posexplode(array(bands.map(d => VectorOps.signBucket(col(embCol), d)): _*))
-          .as(Seq("band_idx", "band_key")))
-    val candK = keyed(candidates, "cand_id").localCheckpoint()
-    val qBase = keyed(queries, "query_id")
+    val candK = bandKeys(candidates, idCol, embCol, "cand_id", bands)
+      .localCheckpoint()
+    val qBase = bandKeys(queries, idCol, embCol, "query_id", bands)
     val probes = qBase
       .select(col("query_id"), col("band_idx"), col("band_key"),
         explode(array((-1 until bitsPerBand).map(lit): _*)).as("__p"))
-      .withColumn("probe_key", when(col("__p") < 0, col("band_key"))
+      .withColumn("band_key", when(col("__p") < 0, col("band_key"))
         .otherwise(expr(
           "band_key + shiftleft(1, __p) - 2 * (band_key & shiftleft(1, __p))")))
-    def hitsOf(qk: DataFrame, keyCol: String) = qk
-      .select(col("query_id"), col("band_idx"), col(keyCol).as("__k"))
-      .join(candK.select(col("cand_id"), col("band_idx"),
-        col("band_key").as("__k")), Seq("band_idx", "__k"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id").distinct()
-    val plain = hitsOf(qBase, "band_key")
-    val mp = hitsOf(probes, "probe_key")
-    bruteForceTopK(queries, candidates, idCol, embCol, k)
-      .select("query_id", "cand_id")
-      .join(plain.withColumn("__pl", lit(1)), Seq("query_id", "cand_id"), "left")
-      .join(mp.withColumn("__mp", lit(1)), Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        sum(coalesce(col("__pl"), lit(0))).as("hits_plain"),
-        sum(coalesce(col("__mp"), lit(0))).as("hits_mp"))
-      .select(col("query_id"), col("n_exact"), col("hits_plain"), col("hits_mp"),
-        round(col("hits_plain").cast("double") / col("n_exact"), 6)
-          .as("recall_plain"),
-        round(col("hits_mp").cast("double") / col("n_exact"), 6)
-          .as("recall_mp"))
+    recallAgainst(queries, candidates, idCol, embCol, k,
+      ("hits_plain", "recall_plain", bandPairs(qBase, candK)),
+      ("hits_mp", "recall_mp", bandPairs(probes, candK)))
   }
 
   /** Semantic deduplication (SemDeDup, Abbas et al. 2023,
@@ -290,25 +371,9 @@ object Similarity {
     * cosine to any lower-id cell-mate, null when none, kept flag). */
   def semDedup(docs: DataFrame, idCol: String, embCol: String,
       threshold: Double, nList: Int = 0, targetCellSize: Int = 0): DataFrame = {
-    graft.functions.VectorExpressions.register(docs.sparkSession)
-    val n = docs.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val cents = n.orderBy("id")
-      .limit(resolveNList(nList, targetCellSize, n.count()))
-      .select(col("id").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
-    // argmax-cosine cell pick as a map-side-combinable max_by (not a
-    // window): shuffle volume N, not N×nList — see ivfTopK's assignment
-    // comment. The payload struct carries (emb, n2) through the aggregate
-    // so downstream reuses them without a re-join.
-    val cells = n.crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .groupBy("id")
-      .agg(max_by(struct(col("cent_id").as("cell"), col("emb"), col("n2")),
-        struct(col("__cc"), -col("cent_id"))).as("__b"))
-      .select(col("id"), col("__b.cell").as("cell"),
-        col("__b.emb").as("emb"), col("__b.n2").as("n2"))
+    val n = side(docs, idCol, embCol, Corpus)
+    val cents = cellSeeds(n, resolveNList(nList, targetCellSize, n.count()))
+    val cells = assignCells(n, cents, col("emb"), col("n2"))
       // referenced three times below (lo, sims, final select): pin the
       // one-row-per-doc assignment once, like Dedup.signaturesFromRows,
       // instead of recomputing the centroid fan-out per reference
@@ -318,9 +383,7 @@ object Similarity {
     val sims = cells.join(lo, Seq("cell"))
       .filter(col("lo_id") < col("id"))
       .groupBy(col("cell"), col("id"))
-      .agg(max(round(VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("lo_emb")),
-        col("n2"), col("lo_n2")), 6)).as("max_sim"))
+      .agg(max(cos6("emb", "lo_emb", "n2", "lo_n2")).as("max_sim"))
     cells.select("id", "cell")
       .join(sims, Seq("cell", "id"), "left")
       .select(col("id"), col("cell"), col("max_sim"),
@@ -342,32 +405,18 @@ object Similarity {
   def semDedupIncremental(newDocs: DataFrame, indexDocs: DataFrame,
       idCol: String, embCol: String, threshold: Double,
       nList: Int = 0, targetCellSize: Int = 0): DataFrame = {
-    graft.functions.VectorExpressions.register(newDocs.sparkSession)
-    def prep(df: DataFrame) = df.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val idx = prep(indexDocs)
-    val nw = prep(newDocs)
-    val cents = idx.orderBy("id")
-      .limit(resolveNList(nList, targetCellSize, idx.count()))
-      .select(col("id").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
-    def assign(df: DataFrame) = df.crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .groupBy("id")
-      .agg(max_by(struct(col("cent_id").as("cell"), col("emb"), col("n2")),
-        struct(col("__cc"), -col("cent_id"))).as("__b"))
-      .select(col("id"), col("__b.cell").as("cell"),
-        col("__b.emb").as("emb"), col("__b.n2").as("n2"))
+    val idx = side(indexDocs, idCol, embCol, Corpus)
+    val cents = cellSeeds(idx,
+      resolveNList(nList, targetCellSize, idx.count()))
+    def assign(df: DataFrame) = assignCells(df, cents, col("emb"), col("n2"))
     val idxCells = assign(idx)
       .select(col("cell"), col("id").as("idx_id"),
         col("emb").as("idx_emb"), col("n2").as("idx_n2"))
-    val newCells = assign(nw).localCheckpoint()
+    val newCells = assign(side(newDocs, idCol, embCol, Corpus))
+      .localCheckpoint()
     val sims = newCells.join(idxCells, Seq("cell"))
       .groupBy(col("cell"), col("id"))
-      .agg(max(round(VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("idx_emb")),
-        col("n2"), col("idx_n2")), 6)).as("max_sim"))
+      .agg(max(cos6("emb", "idx_emb", "n2", "idx_n2")).as("max_sim"))
     newCells.select("id", "cell")
       .join(sims, Seq("cell", "id"), "left")
       .select(col("id"), col("cell"), col("max_sim"),
@@ -417,22 +466,9 @@ object Similarity {
     * with `saltCells` when the embedding distribution is also skewed. */
   def knnGraph(emb: DataFrame, idCol: String, embCol: String, k: Int,
       nList: Int = 0, saltCells: Int = 1, targetCellSize: Int = 0): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    val n = emb.select(col(idCol).as("id"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val cents = n.orderBy("id")
-      .limit(resolveNList(nList, targetCellSize, n.count()))
-      .select(col("id").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
-    val cells = n.crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .groupBy("id")
-      .agg(max_by(struct(col("cent_id").as("cell"), col("emb"), col("n2")),
-        struct(col("__cc"), -col("cent_id"))).as("__b"))
-      .select(col("id"), col("__b.cell").as("cell"),
-        col("__b.emb").as("emb"), col("__b.n2").as("n2"))
-      .localCheckpoint()
+    val n = side(emb, idCol, embCol, Corpus)
+    val cents = cellSeeds(n, resolveNList(nList, targetCellSize, n.count()))
+    val cells = assignCells(n, cents, col("emb"), col("n2")).localCheckpoint()
     val mates = cells.select(col("cell"), col("id").as("nbr_id"),
       col("emb").as("nbr_emb"), col("n2").as("nbr_n2"))
     val joined =
@@ -442,14 +478,9 @@ object Similarity {
         .join(mates.withColumn("__salt",
           explode(array((0 until saltCells).map(lit): _*))),
           Seq("cell", "__salt"))
-    val ranked = joined
-      .filter(col("nbr_id") =!= col("id"))
-      .withColumn("__cos", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("nbr_emb")), col("n2"), col("nbr_n2")))
-      .withColumn("nbr_rank", row_number().over(
-        Window.partitionBy("cell", "id")
-          .orderBy(col("__cos").desc, col("nbr_id"))))
-      .filter(col("nbr_rank") <= k)
+    val ranked = topK(joined.filter(col("nbr_id") =!= col("id"))
+        .withColumn("__cos", cos("emb", "nbr_emb", "n2", "nbr_n2")),
+      k, "nbr_rank", "cell", "id")(col("__cos").desc, col("nbr_id"))
     ranked.select(col("id").as(idCol), col("nbr_rank").cast("long"),
       col("nbr_id"), round(col("__cos"), 6).as("cos"))
   }
@@ -667,36 +698,14 @@ object Similarity {
   def lshTopK(queries: DataFrame, candidates: DataFrame,
       idCol: String, embCol: String, k: Int, numBands: Int = 4,
       bitsPerBand: Int = 8, dim: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val bands = VectorOps.bandDims(numBands, bitsPerBand, dim)
-    def keyed(df: DataFrame, idAs: String) =
-      df.select(col(idCol).as(idAs),
-        posexplode(array(bands.map(d => VectorOps.signBucket(col(embCol), d)): _*))
-          .as(Seq("band_idx", "band_key")))
-    val cand = keyed(queries, "query_id")
-      .join(keyed(candidates, "cand_id"), Seq("band_idx", "band_key"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .select("query_id", "cand_id").distinct()
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val c = candidates.select(col(idCol).as("cand_id"), col(embCol).as("c_emb"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    cand.join(broadcast(q), Seq("query_id")).join(c, Seq("cand_id"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "cos", "rnk")
+    exactRerank(
+      bandPairs(bandKeys(queries, idCol, embCol, "query_id", bands),
+        bandKeys(candidates, idCol, embCol, "cand_id", bands)),
+      side(queries, idCol, embCol, Query),
+      side(candidates, idCol, embCol, Cand), k)
   }
 
-  /** ANN index evaluation: recall@k of the IVF index against the exact
-    * brute-force top-k, per query — the QA harness that tells you whether
-    * nList/nProbe are sized right BEFORE a 100 TB index build. The exact
-    * side is the bounded one (it only runs over the evaluation query
-    * sample, never corpus×corpus); the IVF side is the production plan
-    * under test. Output: (query_id, n_exact, n_hits, recall). */
   /** FAISS sizing rule: nList ≈ √N keeps expected cell population ≈ √N,
     * so both the per-cell quadratic (SemDeDup) and the per-probe scan
     * (IVF) grow as √N instead of N. `nList = 0` (the default) derives it
@@ -829,53 +838,25 @@ object Similarity {
   def pqTopK(queries: DataFrame, candidates: DataFrame, idCol: String,
       embCol: String, k: Int, m: Int = 8, codebookK: Int = 16,
       iters: Int = 2, dim: Int = 64): DataFrame = {
-    val d = dim / m
-    val spark = queries.sparkSession
-    graft.functions.VectorExpressions.register(spark)
     val (codes, codebook) = productQuantizeFull(
       candidates, idCol, embCol, m, codebookK, iters, dim)
-    val qsubs = queries.select(col(idCol).as("query_id"), col(embCol).as("emb"))
-      .select(col("query_id"), posexplode(array((0 until m).map(j =>
-        slice(col("emb"), j * d + 1, d)): _*)).as(Seq("sub", "qe")))
-      .withColumn("qn2", VectorOps.normSq(col("qe")))
-    val q = 1L << 20
-    val lut = qsubs.join(broadcast(codebook), Seq("sub"))
-      .withColumn("term", floor((col("qn2") + col("c_n2") -
-        lit(2.0) * VectorOps.dot(col("qe"), col("c_emb"))) * q) / q)
-      .select(col("query_id"), col("sub").cast("long").as("sub"),
-        col("cluster").cast("long").as("code"), col("term"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("cand_id"))
-    codes.join(broadcast(lut), Seq("sub", "code"))
-      .filter(col("query_id") =!= col("id"))
-      .groupBy(col("query_id"), col("id").as("cand_id"))
-      .agg(sum(col("term")).as("adc"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "adc", "rnk")
+    val lut = adcLut(side(queries, idCol, embCol, Query), "q_emb",
+      codebook, m, dim / m, "query_id")
+    adcTopK(codes.withColumnRenamed("id", "cand_id")
+      .join(broadcast(lut), Seq("sub", "code")), k)
   }
 
-  /** Recall@k of any approximate top-k result against the exact
-    * brute-force cosine top-k — the harness half shared by the IVF (q89)
-    * and IVF-PQ (q115) recall rows. */
+  /** ANN index evaluation: recall@k of any approximate top-k result
+    * against the exact brute-force cosine top-k, per query (q89 for IVF,
+    * q115 for IVF-PQ, q302 for SQ8) — the QA harness that tells whether
+    * an index is sized right BEFORE a 100 TB build. The exact side is the
+    * bounded one (it only runs over the evaluation query sample, never
+    * corpus×corpus); the approximate side is the production plan under
+    * test. Output: (query_id, n_exact, n_hits, recall). */
   def recallVsExact(queries: DataFrame, candidates: DataFrame,
-      idCol: String, embCol: String, k: Int, approx: DataFrame): DataFrame = {
-    val exact = bruteForceTopK(queries, candidates, idCol, embCol, k)
-      .select("query_id", "cand_id")
-    val hits = approx
-      .select(col("query_id"), col("cand_id"), lit(1L).as("__hit"))
-    exact.join(hits, Seq("query_id", "cand_id"), "left")
-      .groupBy("query_id")
-      .agg(count(lit(1)).as("n_exact"),
-        coalesce(sum(col("__hit")), lit(0L)).as("n_hits"))
-      .withColumn("recall",
-        round(col("n_hits").cast("double") / col("n_exact"), 6))
-  }
-
-  def annRecall(queries: DataFrame, candidates: DataFrame,
-      idCol: String, embCol: String, k: Int, nList: Int = 0,
-      nProbe: Int = 2): DataFrame =
-    recallVsExact(queries, candidates, idCol, embCol, k,
-      ivfTopK(queries, candidates, idCol, embCol, k, nList, nProbe))
+      idCol: String, embCol: String, k: Int, approx: DataFrame): DataFrame =
+    recallAgainst(queries, candidates, idCol, embCol, k,
+      ("n_hits", "recall", approx))
 
   /** One-row DataFrame holding the id-ASCENDING centroid struct array
     * `(id, e, n2c)` the per-row fold assignments score against. Input
@@ -939,14 +920,9 @@ object Similarity {
     * unrounded (the q298 rule). */
   def ivfCellDriftAudit(oldBatch: DataFrame, newBatch: DataFrame,
       idCol: String, embCol: String, nList: Int = 0): DataFrame = {
-    graft.functions.VectorExpressions.register(oldBatch.sparkSession)
-    def norm(df: DataFrame) = df.select(col(idCol).as("vid"),
-      col(embCol).as("emb")).withColumn("n2", VectorOps.normSq(col("emb")))
-    val n0 = norm(oldBatch)
-    val lists = if (nList > 0) nList else autoNList(n0.count())
-    val cents = n0.orderBy("vid").limit(lists)
-      .select(col("vid").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
+    val n0 = side(oldBatch, idCol, embCol, Corpus)
+    val lists = resolveNList(nList, 0, n0.count())
+    val cents = cellSeeds(n0, lists)
     // per-row codegen assignment (see foldAssignCellPre): zero shuffle
     // vs the old crossJoin+max_by shape's row×cell tuple churn,
     // bit-identical cell picks — one source of truth with q312/q313 and
@@ -956,7 +932,7 @@ object Similarity {
     def cellsOf(df: DataFrame) = foldAssignCellPre(df, "emb", centsRow)
       .groupBy("cell").agg(count(lit(1)))
     val oldCells = cellsOf(n0).withColumnRenamed("count(1)", "n_old")
-    val newCells = cellsOf(norm(newBatch))
+    val newCells = cellsOf(side(newBatch, idCol, embCol, Corpus))
       .withColumnRenamed("count(1)", "n_new")
     val byCell = cents.select(col("cent_id").as("cell"))
       .join(oldCells, Seq("cell"), "left")
@@ -967,7 +943,6 @@ object Similarity {
     // products in decimal (the q274 discipline): a skewed cell's
     // n_total·nLists wraps in long at N ≳ 4e12 while the DuckDB
     // HUGEINT mirror raises — widen BEFORE the multiply on both engines
-    def dec(c: Column) = c.cast("decimal(38,0)")
     byCell
       .crossJoin(broadcast(byCell.agg(sum(col("n_total")).as("__N"))))
       .select(col("cell"), col("n_old"), col("n_new"), col("n_total"),
@@ -996,15 +971,14 @@ object Similarity {
     * doubles on both engines. */
   def ivfBoundaryAudit(emb: DataFrame, idCol: String, embCol: String,
       nList: Int = 0, eps: Double = 0.05): DataFrame = {
-    val n0 = emb.select(col(idCol).as("vid"), col(embCol).as("e"))
-    val lists = if (nList > 0) nList else autoNList(n0.count())
+    val n0 = emb.select(col(idCol).as("id"), col(embCol).as("emb"))
+    val lists = resolveNList(nList, 0, n0.count())
     require(lists >= 2, "boundary margin needs at least two cells")
     // centroid norms ride IN the broadcast array (computed once per
     // centroid, not once per row×cell — see centArray); the top-2 walk
     // itself is the codegen CellTop2F kernel (the interpreted HOF fold
     // it replaces cost 2.16 s at sf0.1; an inlined-cos variant 2.8 s).
-    val centsRow = centArray(n0.orderBy("vid").limit(lists)
-      .select(col("vid").as("cent_id"), col("e").as("c_emb")))
+    val centsRow = centArray(cellSeeds(n0, lists))
     graft.functions.VectorExpressions.register(emb.sparkSession)
     emb.crossJoin(broadcast(centsRow))
       .withColumn("__t", graft.functions.VectorExpressions
@@ -1049,6 +1023,23 @@ object Similarity {
 
   private[graft] def d2d(c: Column): Column = c.cast("string").cast("double")
 
+  private def dec(c: Column): Column = c.cast("decimal(38,0)")
+
+  /** Embedding coordinates on the [[EmbeddingOps.Q]] fixed-point grid,
+    * as longs. */
+  private def fixedPoint(emb: Column): Column =
+    transform(emb, x => floor(x * EmbeddingOps.Q + 0.5).cast("long"))
+
+  /** The nearer split child (0 or 1) of a fixed-point member `(mx, mn2)`
+    * against the pivoted child centroids (`sv0, cn20, sv1, cn21`): exact
+    * decimal dots and ONE double per cosine, ties to child 0, and an
+    * empty child's null cosine coalesces to −1e300, so it never wins. */
+  private def nearerChild: Column = {
+    def cosTo(j: Int) = coalesce(d2d(dotDec("mx", s"sv$j")) /
+      sqrt(col("mn2").cast("double") * d2d(col(s"cn2$j"))), lit(-1e300))
+    when(cosTo(0) >= cosTo(1), 0L).otherwise(1L)
+  }
+
   /** Pivot of [[IvfSplitState.children]] to one row per split cell —
     * the static side a stream-static arrival join broadcasts. */
   private[graft] def childPivot(children: DataFrame): DataFrame =
@@ -1072,20 +1063,17 @@ object Similarity {
     * per-key state, broadcast statics only. */
   private[graft] def splitAssignArrivals(emb: DataFrame, cents: DataFrame,
       children: DataFrame, embCol: String): DataFrame = {
-    graft.functions.VectorExpressions.register(emb.sparkSession)
-    val Q = EmbeddingOps.Q
     foldAssignCellPre(emb, embCol, centArray(cents))
       .join(broadcast(childPivot(children)), Seq("cell"), "left")
-      .withColumn("mx", transform(col(embCol).cast("array<double>"),
-        x => floor(x * Q + 0.5).cast("long")))
+      .withColumn("mx", fixedPoint(col(embCol).cast("array<double>")))
       .withColumn("mn2", dotLong("mx", "mx"))
-      .withColumn("__e0", coalesce(d2d(dotDec("mx", "sv0")) /
-        sqrt(col("mn2").cast("double") * d2d(col("cn20"))), lit(-1e300)))
-      .withColumn("__e1", coalesce(d2d(dotDec("mx", "sv1")) /
-        sqrt(col("mn2").cast("double") * d2d(col("cn21"))), lit(-1e300)))
-      .withColumn("sub", when(col("__e0") >= col("__e1"), 0L).otherwise(1L))
-      .drop("mx", "mn2", "__e0", "__e1", "sv0", "cn20", "sv1", "cn21")
+      .withColumn("sub", nearerChild)
+      .drop("mx", "mn2", "sv0", "cn20", "sv1", "cn21")
   }
+
+  /** The split pipeline's corpus side: (vid, emb as array<double>). */
+  private def splitSide(df: DataFrame, idCol: String, embCol: String) =
+    df.select(col(idCol).as("vid"), col(embCol).cast("array<double>").as("emb"))
 
   /** The split pipeline shared by [[ivfCellSplit]] (load audit) and
     * [[ivfSplitRecall]] (recall audit). Steps, each exactly mirrored by
@@ -1121,18 +1109,14 @@ object Similarity {
   private[graft] def ivfSplitState(oldBatch: DataFrame, newBatch: DataFrame,
       idCol: String, embCol: String, nList: Int = 0,
       thrNum: Int = 2, thrDen: Int = 1): IvfSplitState = {
-    graft.functions.VectorExpressions.register(oldBatch.sparkSession)
-    def norm(df: DataFrame) = df.select(col(idCol).as("vid"),
-      col(embCol).cast("array<double>").as("emb"))
-    val n0 = norm(oldBatch)
-    val lists = if (nList > 0) nList else autoNList(n0.count())
+    val n0 = splitSide(oldBatch, idCol, embCol)
+    val lists = resolveNList(nList, 0, n0.count())
     // nLists rows, read by the broadcast assignment array AND the
     // survivor-centroid side of the search — pinned once
-    val cents = n0.orderBy("vid").limit(lists)
-      .select(col("vid").as("cent_id"), col("emb").as("c_emb"))
+    val cents = cellSeeds(n0.withColumnRenamed("vid", "id"), lists)
       .localCheckpoint()
     val centsRow = centArray(cents)
-    val all = n0.unionByName(norm(newBatch))
+    val all = n0.unionByName(splitSide(newBatch, idCol, embCol))
     // step 1: frozen-quantizer assignment of the full corpus (q305's
     // exact semantics: the kernel's strict > keeps the lower cent_id)
     val asg = foldAssignCellPre(all, "emb", centsRow)
@@ -1159,9 +1143,6 @@ object Similarity {
   private def ivfSplitFinish(asgIds: DataFrame, embSrc: DataFrame,
       byCell: DataFrame, cents: DataFrame, lists: Int,
       thrNum: Int, thrDen: Int): IvfSplitState = {
-    import org.apache.spark.sql.types.DecimalType
-    val Q = EmbeddingOps.Q
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     val withN = byCell
       .crossJoin(broadcast(byCell.agg(sum(col("n_total")).as("__N"))))
     // step 2: the load rule as an integer cross-multiply (q305, with the
@@ -1178,20 +1159,17 @@ object Similarity {
     // sums) would otherwise replay the corpus-wide assignment scan
     val mem = asgIds.join(broadcast(flagged.select("cell")), Seq("cell"))
       .join(embSrc, Seq("vid"))
-      .withColumn("mx", transform(col("emb"),
-        x => floor(x * Q + 0.5).cast("long")))
+      .withColumn("mx", fixedPoint(col("emb")))
       .withColumn("mn2", dotLong("mx", "mx"))
       .localCheckpoint()
     // step 3b: deterministic seeds — the two lowest-vid members
-    val wSeed = Window.partitionBy("cell").orderBy("vid")
-    val ranked = mem.select(col("cell"), col("vid"), col("mx"), col("mn2"))
-      .withColumn("__j", row_number().over(wSeed) - 1)
-      .filter(col("__j") <= 1)
-    val seeds = ranked.groupBy("cell").agg(
-      max(when(col("__j") === 0, col("mx"))).as("smx0"),
-      max(when(col("__j") === 0, col("mn2"))).as("sn20"),
-      max(when(col("__j") === 1, col("mx"))).as("smx1"),
-      max(when(col("__j") === 1, col("mn2"))).as("sn21"))
+    val seeds = topK(mem.select(col("cell"), col("vid"), col("mx"), col("mn2")),
+        2, "__rn", "cell")(col("vid"))
+      .groupBy("cell").agg(
+        max(when(col("__rn") === 1, col("mx"))).as("smx0"),
+        max(when(col("__rn") === 1, col("mn2"))).as("sn20"),
+        max(when(col("__rn") === 2, col("mx"))).as("smx1"),
+        max(when(col("__rn") === 2, col("mn2"))).as("sn21"))
     // step 3c: nearer-seed assignment (exact long dots; ONE double per
     // cosine; ties and NaN resolve identically on both engines)
     val sub1 = mem.join(broadcast(seeds), Seq("cell"))
@@ -1207,21 +1185,15 @@ object Similarity {
       .select(col("cell"), col("__js").as("j"),
         posexplode(col("mx")).as(Seq("d", "v")))
       .groupBy("cell", "j", "d")
-      .agg(sum(col("v").cast(DecimalType(38, 0))).as("sv"))
+      .agg(sum(dec(col("v"))).as("sv"))
     val children = dimsum.groupBy("cell", "j").agg(
       transform(array_sort(collect_list(struct(col("d"), col("sv")))),
         x => x.getField("sv")).as("sv"),
       sum(col("sv") * col("sv")).as("cn2"))
       .localCheckpoint() // ≤ 2·|flagged| rows
-    // step 3e: Lloyd reassignment against the child centroids; an empty
-    // child's null cosine coalesces to −1e300 (never wins)
+    // step 3e: Lloyd reassignment against the child centroids
     val re = sub1.join(broadcast(childPivot(children)), Seq("cell"))
-      .withColumn("__e0", coalesce(d2d(dotDec("mx", "sv0")) /
-        sqrt(col("mn2").cast("double") * d2d(col("cn20"))), lit(-1e300)))
-      .withColumn("__e1", coalesce(d2d(dotDec("mx", "sv1")) /
-        sqrt(col("mn2").cast("double") * d2d(col("cn21"))), lit(-1e300)))
-      .select(col("vid"), col("cell"),
-        when(col("__e0") >= col("__e1"), 0L).otherwise(1L).as("sub"))
+      .select(col("vid"), col("cell"), nearerChild.as("sub"))
     val assign = asgIds
       .join(re.withColumnRenamed("sub", "__sub"), Seq("vid", "cell"), "left")
       .withColumn("sub", coalesce(col("__sub"), lit(0L)))
@@ -1257,11 +1229,9 @@ object Similarity {
       arrivals: DataFrame, idCol: String, embCol: String, dir: String,
       thrNum: Int = 2, thrDen: Int = 1): IvfSplitState = {
     val st = ivfSplitReadIndex(corpus.sparkSession, dir)
-    def norm(df: DataFrame) = df.select(col(idCol).as("vid"),
-      col(embCol).cast("array<double>").as("emb"))
     // arrivals assign against the frozen quantizer — the only
     // assignment scan the update runs
-    val arrAsg = foldAssignCellPre(norm(arrivals), "emb",
+    val arrAsg = foldAssignCellPre(splitSide(arrivals, idCol, embCol), "emb",
       centArray(st.cents)).localCheckpoint()
     // merged census: persisted totals + one arrival aggregate
     val byCell = st.cells
@@ -1273,7 +1243,8 @@ object Similarity {
       .localCheckpoint() // nLists rows
     val asgIds = st.assign.select("vid", "cell")
       .unionByName(arrAsg.select("vid", "cell"))
-    val embSrc = norm(corpus).unionByName(arrAsg.select("vid", "emb"))
+    val embSrc = splitSide(corpus, idCol, embCol)
+      .unionByName(arrAsg.select("vid", "emb"))
     ivfSplitFinish(asgIds, embSrc, byCell, st.cents, st.lists,
       thrNum, thrDen)
   }
@@ -1296,10 +1267,8 @@ object Similarity {
   def ivfCellSplit(oldBatch: DataFrame, newBatch: DataFrame,
       idCol: String, embCol: String, nList: Int = 0,
       thrNum: Int = 2, thrDen: Int = 1): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val st = ivfSplitState(oldBatch, newBatch, idCol, embCol, nList,
       thrNum, thrDen)
-    def dec(c: Column) = c.cast(DecimalType(38, 0))
     // both children of every split cell, empties included (left join)
     val childRows = st.flagged.select(col("cell"),
         explode(array(lit(0L), lit(1L))).as("sub"))
@@ -1355,13 +1324,13 @@ object Similarity {
   private[graft] def ivfSplitTopKFrom(queries: DataFrame,
       corpus: DataFrame, st: IvfSplitState, idCol: String,
       embCol: String, k: Int, nProbe: Int): DataFrame = {
-    val Q = EmbeddingOps.Q
     val survivors = st.cents
       .join(st.flagged.select(col("cell").as("cent_id")),
         Seq("cent_id"), "left_anti")
       .select(col("cent_id").as("cell"), lit(0L).as("sub"),
         expr("transform(c_emb, v -> cast(cast(floor(" +
-          s"v * $Q + 0.5) as bigint) as decimal(38,0)))").as("sv"))
+          s"v * ${EmbeddingOps.Q} + 0.5) as bigint) as decimal(38,0)))")
+          .as("sv"))
       .withColumn("cn2", expr("aggregate(sv, cast(0 as decimal(38,0)), " +
         "(a, b) -> a + b * b)"))
     val newCents = survivors.select("cell", "sub", "sv", "cn2")
@@ -1369,35 +1338,18 @@ object Similarity {
         .select(col("cell"), col("j").as("sub"), col("sv"), col("cn2")))
     val qv = queries.select(col(idCol).as("query_id"),
         col(embCol).cast("array<double>").as("q_emb"))
-      .withColumn("mx", transform(col("q_emb"),
-        x => floor(x * Q + 0.5).cast("long")))
+      .withColumn("mx", fixedPoint(col("q_emb")))
       .withColumn("mn2", dotLong("mx", "mx"))
-    val wProbe = Window.partitionBy("query_id")
-      .orderBy(col("__pc").desc, col("cell"), col("sub"))
-    val probes = qv.crossJoin(broadcast(newCents))
-      .withColumn("__pc", d2d(dotDec("mx", "sv")) /
-        sqrt(col("mn2").cast("double") * d2d(col("cn2"))))
-      .withColumn("__pr", row_number().over(wProbe))
-      .filter(col("__pr") <= nProbe)
-      .select("query_id", "cell", "sub")
-    val cand = probes.join(st.assign, Seq("cell", "sub"))
+    val probes = topK(qv.crossJoin(broadcast(newCents))
+        .withColumn("__pc", d2d(dotDec("mx", "sv")) /
+          sqrt(col("mn2").cast("double") * d2d(col("cn2")))),
+      nProbe, "__pr", "query_id")(col("__pc").desc, col("cell"), col("sub"))
+    val pairs = probes.join(st.assign, Seq("cell", "sub"))
       .filter(col("query_id") =!= col("vid"))
       .select(col("query_id"), col("vid").as("cand_id")).distinct()
-    // final rerank on RAW embeddings — identical to ivfTopK's tail
-    val c = corpus
-      .select(col(idCol).as("cand_id"), col(embCol).as("c_emb"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cos").desc, col("cand_id"))
-    cand.join(broadcast(q), Seq("query_id")).join(c, Seq("cand_id"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "cos", "rnk")
+    // final rerank on RAW embeddings, the same tail as ivfTopK's
+    exactRerank(pairs, side(queries, idCol, embCol, Query),
+      side(corpus, idCol, embCol, Cand), k)
   }
 
   /** Persist / re-open the post-split index as parquet — the q140
@@ -1473,9 +1425,10 @@ object Similarity {
         when(sc === 0.0, mn).otherwise(mn + least(lit(255.0),
           greatest(lit(0.0), floor((x - mn) / sc + lit(0.5)))) * sc)
       })
-    def side(df: DataFrame) = df.crossJoin(broadcast(ranges))
+    def dequantized(df: DataFrame) = df.crossJoin(broadcast(ranges))
       .select(col(idCol), dq(col(embCol)).as(embCol))
-    bruteForceTopK(side(queries), side(candidates), idCol, embCol, k)
+    bruteForceTopK(dequantized(queries), dequantized(candidates), idCol,
+      embCol, k)
   }
 
   /** IVF-PQ / IVFADC (Jegou, Douze, Schmid 2011 §IV-A — the actual
@@ -1522,37 +1475,24 @@ object Similarity {
   def ivfPqBuild(candidates: DataFrame, idCol: String, embCol: String,
       nList: Int = 0, m: Int = 8, codebookK: Int = 16, iters: Int = 2,
       dim: Int = 64): IvfPqIndex = {
-    graft.functions.VectorExpressions.register(candidates.sparkSession)
-    val dbl = (c: Column) => transform(c, x => x.cast("double"))
-
-    // ---- coarse quantizer: identical shape to ivfTopK's
-    val n = candidates.select(col(idCol).as("vid"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    val lists = if (nList > 0) nList else autoNList(n.count())
-    val cents = n.orderBy("vid").limit(lists)
-      .select(col("vid").as("cent_id"), col("emb").as("c_emb"),
-        col("n2").as("c_n2"))
-
-    // ---- residual encoding: r = x − c(cell), widened to double first so
-    // the per-coordinate subtraction is the same IEEE op the oracle runs.
-    // Corpus-side argmax cell pick is a map-side-combinable max_by
-    // (shuffle N, not N×nList — see ivfTopK); the payload struct carries
-    // (c_emb, emb) through so the residual needs no re-join.
-    val assigned = n.crossJoin(broadcast(cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .groupBy("vid")
-      .agg(max_by(struct(col("cent_id").as("cell"), col("c_emb"), col("emb")),
-        struct(col("__cc"), -col("cent_id"))).as("__b"))
-      .select(col("vid"), col("__b.cell").as("cell"),
-        zip_with(dbl(col("__b.emb")), dbl(col("__b.c_emb")), (x, y) => x - y)
-          .as("r_emb"))
-    val (codes, codebook) = productQuantizeFull(
-      assigned.select(col("vid").as("id"), col("r_emb")),
-      "id", "r_emb", m, codebookK, iters, dim)
-    IvfPqIndex(cents, assigned.select(col("vid").as("cand_id"), col("cell")),
+    val n = side(candidates, idCol, embCol, Corpus)
+    val cents = cellSeeds(n, resolveNList(nList, 0, n.count()))
+    // residual r = x − c(cell), widened to double first so the
+    // per-coordinate subtraction is the same IEEE op the oracle runs;
+    // (c_emb, emb) ride through the assignment, so no re-join
+    val assigned = assignCells(n, cents, col("c_emb"), col("emb"))
+      .select(col("id"), col("cell"), residual("emb", "c_emb").as("r_emb"))
+    val (codes, codebook) = productQuantizeFull(assigned, "id", "r_emb",
+      m, codebookK, iters, dim)
+    IvfPqIndex(cents, assigned.select(col("id").as("cand_id"), col("cell")),
       codes, codebook)
   }
+
+  /** Per-coordinate `a − b` of two embedding columns, both widened to
+    * double first. */
+  private def residual(a: String, b: String): Column =
+    zip_with(col(a).cast("array<double>"), col(b).cast("array<double>"),
+      (x, y) => x - y)
 
   /** Search half of [[ivfPqTopK]]: per (query, probed cell) residual LUT,
     * ADC confined to the probed cells' members. Runs identically against
@@ -1560,44 +1500,15 @@ object Similarity {
   def ivfPqSearch(index: IvfPqIndex, queries: DataFrame, idCol: String,
       embCol: String, k: Int, nProbe: Int = 2, m: Int = 8,
       dim: Int = 64): DataFrame = {
-    val d = dim / m
-    graft.functions.VectorExpressions.register(queries.sparkSession)
-    val dbl = (c: Column) => transform(c, x => x.cast("double"))
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("emb"))
-      .withColumn("n2", VectorOps.normSq(col("emb")))
-    // query-side top-nProbe keeps the window: |Q|×nList rows, bounded by
-    // the query batch — never the corpus
-    val wP = Window.partitionBy("vid")
-      .orderBy(col("__cc").desc, col("cent_id"))
-    val probes = q.withColumnRenamed("query_id", "vid")
-      .crossJoin(broadcast(index.cents))
-      .withColumn("__cc", VectorOps.cosine(
-        VectorOps.dot(col("emb"), col("c_emb")), col("n2"), col("c_n2")))
-      .withColumn("__rn", row_number().over(wP))
-      .filter(col("__rn") <= nProbe)
-      .select(col("vid").as("query_id"), col("cent_id").as("cell"),
-        zip_with(dbl(col("emb")), dbl(col("c_emb")), (x, y) => x - y)
-          .as("qr"))
-    val qsubs = probes
-      .select(col("query_id"), col("cell"), posexplode(array((0 until m).map(j =>
-        slice(col("qr"), j * d + 1, d)): _*)).as(Seq("sub", "qe")))
-      .withColumn("qn2", VectorOps.normSq(col("qe")))
-    val qq = 1L << 20
-    val lut = qsubs.join(broadcast(index.codebook), Seq("sub"))
-      .withColumn("term", floor((col("qn2") + col("c_n2") -
-        lit(2.0) * VectorOps.dot(col("qe"), col("c_emb"))) * qq) / qq)
-      .select(col("query_id"), col("cell"),
-        col("sub").cast("long").as("sub"),
-        col("cluster").cast("long").as("code"), col("term"))
-    val w = Window.partitionBy("query_id").orderBy(col("adc"), col("cand_id"))
-    index.codes.join(index.cells, index.codes("id") === index.cells("cand_id"))
-      .join(broadcast(lut), Seq("cell", "sub", "code"))
-      .filter(col("query_id") =!= col("cand_id"))
-      .groupBy(col("query_id"), col("cand_id"))
-      .agg(sum(col("term")).as("adc"))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "adc", "rnk")
+    val probes = probeCells(side(queries, idCol, embCol, Query),
+        index.cents, nProbe)
+      .select(col("query_id"), col("cent_id").as("cell"),
+        residual("q_emb", "c_emb").as("qr"))
+    val lut = adcLut(probes, "qr", index.codebook, m, dim / m,
+      "query_id", "cell")
+    adcTopK(index.codes
+      .join(index.cells, index.codes("id") === index.cells("cand_id"))
+      .join(broadcast(lut), Seq("cell", "sub", "code")), k)
   }
 
   /** Persist / re-open the index artifacts as four parquet tables —
@@ -1640,23 +1551,15 @@ object Similarity {
       embCol: String, k: Int, shortlist: Int = 10, nList: Int = 0,
       nProbe: Int = 2, m: Int = 8, codebookK: Int = 16, iters: Int = 2,
       dim: Int = 64): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val short = ivfPqTopK(queries, candidates, idCol, embCol, shortlist,
       nList, nProbe, m, codebookK, iters, dim)
       .select("query_id", "cand_id")
-    val q = queries.select(col(idCol).as("query_id"), col(embCol).as("q_emb"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val c = candidates.select(col(idCol).as("cand_id"), col(embCol).as("c_emb"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
-    val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("cand_id"))
-    c.join(broadcast(short), Seq("cand_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "cand_id", "cos", "rnk")
+    // broadcast shortlist into ONE corpus pass, so the join order is not
+    // exactRerank's
+    scoreTopK(side(candidates, idCol, embCol, Cand)
+      .join(broadcast(short), Seq("cand_id"))
+      .join(broadcast(side(queries, idCol, embCol, Query)),
+        Seq("query_id")), k)
   }
 
   /** Deterministic Achlioptas sparse random-projection matrix
@@ -1912,24 +1815,18 @@ object Similarity {
     * cosine with id tie-break (the q30 convention). */
   def knnShapley(queries: DataFrame, train: DataFrame, idCol: String,
       embCol: String, labelCol: String, k: Int = 5): DataFrame = {
-    graft.functions.VectorExpressions.register(queries.sparkSession)
     val grid = 1073741824L // 2^30
-    val q = queries.select(col(idCol).as("query_id"),
-      col(embCol).as("q_emb"), col(labelCol).as("q_label"))
-      .withColumn("q_n2", VectorOps.normSq(col("q_emb")))
-    val c = train.select(col(idCol).as("cand_id"), col(embCol).as("c_emb"),
-      col(labelCol).as("c_label"))
-      .withColumn("c_n2", VectorOps.normSq(col("c_emb")))
+    val q = side(queries, idCol, embCol, Query, col(labelCol).as("q_label"))
+    val c = side(train, idCol, embCol, Cand, col(labelCol).as("c_label"))
     val byCos = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("cand_id"))
     val byRank = Window.partitionBy("query_id").orderBy("rnk")
     val part = Window.partitionBy("query_id")
     val suffix = Window.partitionBy("query_id").orderBy(col("rnk").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // a full ranking (no `<= k` cut), so not [[topK]]
     val ranked = c.crossJoin(broadcast(q))
-      .withColumn("cos", round(
-        VectorOps.cosine(VectorOps.dot(col("q_emb"), col("c_emb")),
-          col("q_n2"), col("c_n2")), 6))
+      .withColumn("cos", cos6("q_emb", "c_emb", "q_n2", "c_n2"))
       .withColumn("rnk", row_number().over(byCos))
       .withColumn("m", (col("c_label") === col("q_label")).cast("int"))
       .select("query_id", "cand_id", "rnk", "m")

@@ -637,10 +637,14 @@ object LlmQueries {
     * scores every unchosen vector's MAX cosine against the r−1 chosen
     * rows (the same raw IEEE dot folds) and picks the minimum, ties to
     * the lower id, mirroring [[graft.llm.EmbeddingOps.kCenterCoreset]]'s
-    * literal-center map + global min_by pass. */
+    * literal-center map + global min_by pass. Every CTE is
+    * `AS MATERIALIZED`: each `chK` is read three times by the next round
+    * (cross join, `NOT IN`, `UNION ALL`), and an inlined chain re-derives
+    * every earlier round at each read (minutes at sf0.01 instead of a
+    * fraction of a second). */
   private[queries] lazy val kCenterSql: String = {
     val round = (r: Int) =>
-      s"""sel$r AS (
+      s"""sel$r AS MATERIALIZED (
          |  SELECT x.vec_id, x.embedding, x.n2,
          |    MAX(${dot("x.embedding", "c.embedding")}
          |      / sqrt(x.n2 * c.n2)) AS mc,
@@ -649,13 +653,13 @@ object LlmQueries {
          |  WHERE x.vec_id NOT IN (SELECT vec_id FROM ch${r - 1})
          |  GROUP BY x.vec_id, x.embedding, x.n2
          |  ORDER BY mc, x.vec_id LIMIT 1),
-         |ch$r AS (SELECT * FROM ch${r - 1} UNION ALL
+         |ch$r AS MATERIALIZED (SELECT * FROM ch${r - 1} UNION ALL
          |         SELECT vec_id, embedding, n2, mc, sel_rank FROM sel$r)"""
         .stripMargin
-    s"""WITH n AS (
+    s"""WITH n AS MATERIALIZED (
        |  SELECT vec_id, embedding, ${dot("embedding", "embedding")} AS n2
        |  FROM embeddings),
-       |ch1 AS (
+       |ch1 AS MATERIALIZED (
        |  SELECT vec_id, embedding, n2, NULL::DOUBLE AS mc,
        |    CAST(1 AS BIGINT) AS sel_rank
        |  FROM n ORDER BY vec_id LIMIT 1),

@@ -116,9 +116,10 @@ object LlmSimilarityQueries {
 
     "q89_ann_recall" -> ((s, dir) => {
       val emb = Tables.embeddings(s, dir)
-      Similarity.annRecall(
-        emb.filter(col("vec_id") < 20), emb, "vec_id", "embedding",
-        k = 5, nProbe = 4) // nList auto-derived as ceil(sqrt(N))
+      val q = emb.filter(col("vec_id") < 20)
+      Similarity.recallVsExact(q, emb, "vec_id", "embedding", k = 5,
+        Similarity.ivfTopK(q, emb, "vec_id", "embedding", k = 5,
+          nProbe = 4)) // nList auto-derived as ceil(sqrt(N))
     }),
 
 

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -361,5 +361,71 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(out.forall(_.getInt(3) != 0)) // no same-label negatives
     assert(out.map(r => (r.getInt(5), r.getLong(2))).sorted.toSeq
       == Seq((1, 2L), (2, 3L), (3, 4L)))
+  }
+
+  test("every top-k path ranks 1..k without gaps and breaks equal scores " +
+      "by ascending candidate id") {
+    val s = spark
+    import s.implicits._
+    // 8 base directions, 3 copies each: ids b, b + 8 and b + 16 carry the
+    // same vector, so equal scores reach every ranking. Rows arrive in
+    // descending id order over 3 partitions, so input order is no help.
+    val rnd = new scala.util.Random(7)
+    val base = Array.fill(8, 64)(rnd.nextGaussian().toFloat)
+    val emb = (23 to 0 by -1)
+      .map(i => (i.toLong, base(i % 8).toSeq, (i % 2).toLong))
+      .toDF("vec_id", "embedding", "label").repartition(3)
+    val q = emb.filter(col("vec_id") < 3)
+    val k = 5
+    // `full`: the source offers every query more than k candidates, so
+    // each query must get exactly ranks 1..k
+    def check(path: String, out: DataFrame, full: Boolean,
+        score: String = "cos", ascending: Boolean = false,
+        qid: String = "query_id", rank: String = "rnk",
+        cand: String = "cand_id"): Unit = {
+      val rows = out.select(col(qid).cast("long"), col(rank).cast("long"),
+          col(cand).cast("long"), col(score)).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+      val byQuery = rows.groupBy(_._1)
+      assert(byQuery.nonEmpty, s"$path: no rows")
+      if (full) assert(byQuery.size == 3, s"$path: ${byQuery.keys}")
+      var ties = 0
+      byQuery.foreach { case (id, rs) =>
+        val ranked = rs.sortBy(_._2).toSeq
+        assert(ranked.map(_._2) == (1L to ranked.size.toLong),
+          s"$path: query $id ranks ${ranked.map(_._2)}")
+        assert(if (full) ranked.size == k else ranked.size <= k,
+          s"$path: query $id has ${ranked.size} rows")
+        ranked.zip(ranked.drop(1)).foreach { case (a, b) =>
+          val better = if (ascending) a._4 < b._4 else a._4 > b._4
+          assert(better || (a._4 == b._4 && a._3 < b._3),
+            s"$path: query $id ranks $a before $b")
+          if (a._4 == b._4) ties += 1
+        }
+      }
+      assert(ties > 0, s"$path: no equal scores reached the ranking")
+    }
+    check("bruteForceTopK",
+      Similarity.bruteForceTopK(q, emb, "vec_id", "embedding", k), true)
+    check("hardNegatives", Similarity.hardNegatives(q, emb, "vec_id",
+      "embedding", "label", k), true)
+    check("lshTopK",
+      Similarity.lshTopK(q, emb, "vec_id", "embedding", k), false)
+    check("ivfTopK",
+      Similarity.ivfTopK(q, emb, "vec_id", "embedding", k), false)
+    check("sq8TopK",
+      Similarity.sq8TopK(q, emb, "vec_id", "embedding", k), true)
+    check("pqTopK", Similarity.pqTopK(q, emb, "vec_id", "embedding", k),
+      true, "adc", ascending = true)
+    check("ivfPqTopK", Similarity.ivfPqTopK(q, emb, "vec_id", "embedding",
+      k), false, "adc", ascending = true)
+    check("ivfPqRerank",
+      Similarity.ivfPqRerank(q, emb, "vec_id", "embedding", k), false)
+    check("ivfSplitTopK", Similarity.ivfSplitTopK(q,
+      emb.filter(col("vec_id") < 12), emb.filter(col("vec_id") >= 12),
+      "vec_id", "embedding", k), false)
+    check("knnGraph", Similarity.knnGraph(emb, "vec_id", "embedding", k)
+      .filter(col("vec_id") < 3), false,
+      qid = "vec_id", rank = "nbr_rank", cand = "nbr_id")
   }
 }
