@@ -55,7 +55,7 @@ object ScaleProbe {
     * uniform xxhash64 endpoints (self-loops dropped) — the same
     * seeded-expression discipline as the doc/emb generators. Node count
     * scales with the probe scale, so a big enough scale pushes the
-    * graph loops PAST [[graft.ops.PageRank.BroadcastMaxNodes]] and
+    * graph loops PAST [[graft.ops.GraphLoop.DriverMaxNodes]] and
     * exercises the keyed-join fallback path the sf benches never
     * reach (r21, verdict item 1). */
   private[graft] def synthEdges(spark: SparkSession, nNodes: Long,

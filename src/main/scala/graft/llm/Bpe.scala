@@ -19,8 +19,8 @@ import org.apache.spark.sql.Column
   * Each iteration is one pair-count hash aggregate (map-side partials on
   * the pair key) + a driver-side top-1; the symbol rewrite is a pure
   * codegen'd fold. Vocabulary state is re-materialized as a flat
-  * LogicalRDD per round (same reasoning as Dedup.materializeRound: a
-  * plan that nests per-iteration grows Catalyst stats multiplicatively).
+  * LogicalRDD per round (a plan that nests per-iteration grows Catalyst
+  * stats multiplicatively).
   *
   * Determinism contract (the oracle-parity requirement): pair counts are
   * exact long sums; ties break on (count DESC, left ASC, right ASC);
@@ -55,7 +55,8 @@ object Bpe {
     * collected vocabulary (a few MB of (word, count) pairs; every merge
     * iteration then costs microseconds instead of a Spark job). The
     * distributed loop above the gate is the web-corpus path — same
-    * size-gating pattern as Dedup.connectedComponents.LocalCcMaxEdges.
+    * size-gating pattern as the graph loops' node gate,
+    * `GraphLoop.DriverMaxNodes`.
     * BOTH paths share one symbol definition (Unicode code points — what
     * Spark's `substr`/`length` count) and one tie collation (UTF-8 byte
     * order — what Spark's binary string comparison uses), so the learned

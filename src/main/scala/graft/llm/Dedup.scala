@@ -1,11 +1,13 @@
 package graft.llm
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.collection.mutable.LongMap
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
+import graft.ops.GraphLoop
 
 /** Deduplication operators for large-scale document corpora.
   *
@@ -354,8 +356,8 @@ object Dedup {
     * but the candidate set's cardinality is data-dependent: LSH keeps it
     * << corpus, while a duplicate-saturated corpus approaches one id per
     * document, where a forced O(N) broadcast kills the driver (round-10
-    * verdict #4). So gate it the way [[connectedComponents]] gates
-    * union-find: count the materialized candidate table (one cheap job on
+    * verdict #4). So gate it the way [[GraphLoop]] gates its driver
+    * executor: count the materialized candidate table (one cheap job on
     * a checkpointed ~16-byte-per-row table) and broadcast only below the
     * bound; above it, fall back to the shuffle semi-join, whose map-side
     * cost is exactly what AQE would have paid anyway. 4M ids ≈ 32 MB
@@ -839,113 +841,69 @@ object Dedup {
     * gets the MINIMUM doc id of its component as `cluster_id` — the
     * canonical "which copies collapse to one training example" table.
     *
-    * Min-label propagation WITH pointer jumping, to fixpoint: each round
-    * (a) takes the neighborhood min over the symmetric edge list, then
-    * (b) follows the new label's own label (comp := comp(comp(id))).
-    * The jump makes labels race down already-discovered paths, so rounds
-    * are O(log diameter) instead of O(diameter) — embedding near-dup
-    * graphs form long chains in cosine space where plain propagation
-    * needed tens of rounds at sf0.1. Labels only decrease and always name
-    * a member of the same component, so the fixpoint is the component
-    * minimum regardless of round count. Each round is two equi-joins +
-    * one aggregation; `localCheckpoint` truncates lineage so the plan
-    * does not grow with rounds — the GraphX-CC shape, minus the
-    * vertex-cut machinery a plain pair table does not need. */
-  /** Materialize as a FLAT plan: cache the RDD and rebuild the DataFrame
-    * from it. `localCheckpoint` is NOT usable in an iterative loop — it
-    * keeps the child plan's statistics, and Catalyst's join size estimate
-    * is the PRODUCT of child sizes, so k nested rounds build a 2^k-bit
-    * BigInteger sizeInBytes and the driver disappears into
-    * BigInteger.multiply (observed: q70 never finished planning). A flat
-    * LogicalRDD has constant default stats; AQE picks the real join
-    * strategies from runtime sizes. */
-  private def materializeRound(df: DataFrame): (DataFrame, RDD[Row]) = {
-    val rdd = df.rdd.cache()
-    (df.sparkSession.createDataFrame(rdd, df.schema), rdd)
+    * Scale shape: the symmetric edge list is one [[GraphLoop]] graph.
+    * Under its node gate the driver solve is exact union-find in one
+    * pass and zero rounds: each pinned edge partition unions its own
+    * edges in one Spark job, and the driver unions the partitions'
+    * (node, parent) links. Above the gate the keyed executor runs
+    * min-label rounds, each followed by a pointer jump (comp :=
+    * comp(comp(id))), until a round changes no label. The jump makes
+    * labels race down already-discovered paths, so rounds are O(log
+    * diameter) instead of O(diameter); labels only decrease and always
+    * name a member of the same component, so the fixpoint is the
+    * component minimum. */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 50): DataFrame =
+    componentsGated(pairs, maxIter, GraphLoop.DriverMaxNodes)
+
+  /** [[connectedComponents]] with the node gate as a parameter, so a spec
+    * can force the keyed executor on a small graph. */
+  private[graft] def componentsGated(pairs: DataFrame, maxIter: Int,
+      nodeGate: Long): DataFrame = {
+    val g = GraphLoop.open(symmetric(pairs), nodeGate)
+    g match {
+      case k: GraphLoop.Keyed =>
+        k.start((id, _, _, _) => (id, 0L))
+        val minLabel = new GraphLoop.Round[Long](Long.MaxValue,
+            math.min(_, _), scalar = true) {
+          def send(s: Long, x: Long) = s
+          override def tally(s: Long, x: Long, in: Long) = if (in < s) 1L else 0L
+          def update(s: Long, x: Long, in: Long, c: Long) = math.min(s, in)
+        }
+        var it = 0
+        while (it < maxIter && k.step(minLabel) > 0) { k.jump(minLabel); it += 1 }
+      case d =>
+        val u = new MinUnion
+        d.edges.queryExecution.toRdd.mapPartitions { rows =>
+          val p = new MinUnion
+          rows.foreach(r => p.union(r.getLong(0), r.getLong(1)))
+          p.links
+        }.collect().foreach { case (a, b) => u.union(a, b) }
+        d.start((id, _, _, _) => (u.find(id), 0L))
+    }
+    g.nodes.select(col("node").as("id"), col("s").as("comp"))
   }
 
-  /** Edge lists at or below this size are solved with exact union-find on
-    * the driver — the broadcast-join of connected components. A near-dup
-    * edge list is ALWAYS tiny relative to its corpus (pairs above a high
-    * similarity threshold), so even a 100 TB corpus rarely crosses this;
-    * when it does, the distributed label-propagation loop takes over. */
-  val LocalCcMaxEdges: Long = 4L * 1000 * 1000
+  /** `pairs` (id_a, id_b) as directed (src, dst) edges both ways. */
+  private def symmetric(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .unionAll(pairs.select(col("id_b"), col("id_a")))
 
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 50,
-      localMaxEdges: Long = LocalCcMaxEdges): DataFrame = {
-    val spark = pairs.sparkSession
-    import spark.implicits._
-    val (edges, edgesRdd) = materializeRound(
-      pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-        .union(pairs.select(col("id_b").as("u"), col("id_a").as("v"))))
-    val nEdges = edgesRdd.count()
-
-    if (nEdges <= localMaxEdges) {
-      // Local exact path: weighted union-find with path compression,
-      // O(E a(E)) on the driver, then parallelize the label table. A
-      // distributed fixpoint loop on a graph this small is all scheduler
-      // overhead (measured ~0.5 s/round x diameter rounds).
-      val parent = collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edgesRdd.collect().foreach { row =>
-        val u = row.getLong(0); val v = row.getLong(1)
-        parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
-        val ru = find(u); val rv = find(v)
-        if (ru != rv) parent(math.max(ru, rv)) = math.min(ru, rv)
-      }
-      // root chosen as running min -> find() already yields the component
-      // minimum (unions always point the larger root at the smaller)
-      val out = parent.keys.toSeq.map(id => (id, find(id))).sorted
-      edgesRdd.unpersist(false)
-      out.toDF("id", "comp")
-    } else {
-      // Distributed scale path: min-label propagation with a pointer jump,
-      // each round materialized FLAT (localCheckpoint is unusable here —
-      // its retained child stats make Catalyst's multiplicative join
-      // estimate a 2^rounds-bit BigInteger and the driver hangs in
-      // BigInteger.multiply). Rounds are O(diameter / 2); near-dup
-      // components at scale are dense clumps, not chains.
-      var (labels, labelsRdd) = materializeRound(
-        edges.groupBy("u")
-          .agg(min(least(col("u"), col("v"))).as("comp"))
-          .withColumnRenamed("u", "id"))
-      var changed = 1L
-      var it = 0
-      while (changed > 0 && it < maxIter) {
-        val nbrMin = edges
-          .join(labels.select(col("id").as("v"), col("comp").as("__nc")), Seq("v"))
-          .groupBy("u").agg(min("__nc").as("__nm"))
-          .withColumnRenamed("u", "id")
-        val (stepped, steppedRdd) = materializeRound(
-          labels.join(nbrMin, Seq("id"), "left")
-            .select(col("id"), col("comp").as("__old"),
-              least(col("comp"), coalesce(col("__nm"), col("comp"))).as("__c1")))
-        val (next, nextRdd) = materializeRound(
-          stepped
-            .join(stepped.select(col("id").as("__jid"), col("__c1").as("__jc")),
-              col("__c1") === col("__jid"), "left")
-            .select(col("id"), col("__old"),
-              least(col("__c1"), coalesce(col("__jc"), col("__c1"))).as("comp")))
-        changed = next.agg(coalesce(
-          sum((col("comp") =!= col("__old")).cast("long")), lit(0L)))
-          .first().getLong(0)
-        steppedRdd.unpersist(false)
-        labelsRdd.unpersist(false)
-        labels = next.select("id", "comp")
-        labelsRdd = nextRdd
-        it += 1
-      }
-      // labels no longer references edges; the final labels RDD stays
-      // cached (it IS the result — lineage can still recompute it)
-      edgesRdd.unpersist(false)
-      labels
+  /** Union-find over long ids. A union points the larger root at the
+    * smaller, so every root is its component's minimum. */
+  private final class MinUnion {
+    private val parent = LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var c = x
+      while (c != r) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
+    def union(a: Long, b: Long): Unit = {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    def links: Iterator[(Long, Long)] = parent.iterator
   }
 
   /** Pairs → cluster table: (outId, cluster_id, cluster_size). Works for
@@ -1646,58 +1604,40 @@ object Dedup {
     * (the HITS/PageRank contract); `n_removed = 0` on the last row
     * means the peel converged inside the budget.
     *
-    * Scale shape: each round is one degree aggregate + two semi-join
-    * filters on the bounded dup-edge table; survivor and edge sets are
-    * localCheckpoint-pinned per round (flat lineage, the PageRank
-    * rule); the per-round tallies are 1-row broadcast scalars. Nothing
-    * is ever all-pairs — the edge table is [[minhashPairs]]'s bounded
-    * candidate set. */
+    * Scale shape: the peel is a [[GraphLoop]] round over the bounded
+    * dup-edge table ([[minhashPairs]]' candidate set, never all-pairs).
+    * A node's state is the round that peeled it (0 while it survives);
+    * round r counts each survivor's surviving neighbors, and its scalar,
+    * their sum, is the surviving directed edges after round r − 1, so
+    * `rounds + 1` rounds give every tally. */
   def kCorePeel(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 2, rounds: Int = 3, shingleN: Int = 3, numHashes: Int = 8,
-      numBands: Int = 4, threshold: Double = 0.3): DataFrame = {
+      numBands: Int = 4, threshold: Double = 0.3): DataFrame =
+    kCoreGated(minhashPairs(docs, idCol, textCol, shingleN, numHashes,
+      numBands, threshold), k, rounds, GraphLoop.DriverMaxNodes)
+
+  private[graft] def kCoreGated(pairs: DataFrame, k: Int, rounds: Int,
+      nodeGate: Long): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 20,
       "fixed small peel-round budget")
-    val p = minhashPairs(docs, idCol, textCol, shingleN, numHashes,
-      numBands, threshold)
-    var eAlive = p.select(col("id_a").as("u"), col("id_b").as("v"))
-      .unionAll(p.select(col("id_b").as("u"), col("id_a").as("v")))
-      .localCheckpoint()
-    var alive = eAlive.select(col("u")).distinct().localCheckpoint()
-    def snap(round: Int, a: DataFrame, e: DataFrame,
-        prev: DataFrame): DataFrame =
-      a.agg(count(lit(1)).as("n_alive"))
-        .crossJoin(broadcast(e.agg(count(lit(1)).as("n_dir_edges"))))
-        .crossJoin(broadcast(prev.agg(count(lit(1)).as("__np"))))
-        .select(lit(round.toLong).as("round"), col("n_alive"),
-          col("n_dir_edges"),
-          (col("__np") - col("n_alive")).as("n_removed"))
-    val snaps = scala.collection.mutable.ArrayBuffer(
-      snap(0, alive, eAlive, alive))
-    (1 to rounds).foreach { r =>
-      // EAGER pins (r17): the lazy form materialized each round's sets
-      // on their first consumer — often a broadcast-exchange thread —
-      // which deadlocks against the DAG scheduler on the global
-      // RDDCheckpointData lock (ABBA caught live by jstack in the
-      // concurrent Verify; see the PageRank loop comment). Eager keeps
-      // every materialization job on this thread.
-      val aliveNext = eAlive.groupBy("u")
-        .agg(count(lit(1)).as("__d"))
-        .filter(col("__d") >= k).select("u")
-        .localCheckpoint()
-      // The FINAL round's edge set feeds only snap(rounds)'s single
-      // count — eliding its pin saves a job + gap with no recompute
-      // (aliveNext stays pinned: it appears twice in eNext's semi-joins
-      // plus the next round; r20 session 2, guide §2.4).
-      val eNext0 = eAlive
-        .join(aliveNext, Seq("u"), "left_semi")
-        .join(aliveNext.select(col("u").as("v")), Seq("v"), "left_semi")
-        .select("u", "v")
-      val eNext = if (r == rounds) eNext0 else eNext0.localCheckpoint()
-      snaps += snap(r, aliveNext, eNext, alive)
-      alive = aliveNext
-      eAlive = eNext
+    val g = GraphLoop.open(symmetric(pairs), nodeGate)
+    g.start((_, _, _, _) => (0L, 0L))
+    def peel(r: Long) = new GraphLoop.Round[Long](0L, _ + _, scalar = true) {
+      def send(s: Long, x: Long) = if (s == 0) 1L else 0L
+      override def tally(s: Long, x: Long, in: Long) = if (s == 0) in else 0L
+      def update(s: Long, x: Long, in: Long, e: Long) =
+        if (s == 0 && in < k) r else s
     }
-    snaps.reduce(_ unionByName _)
+    val edges = (1 to rounds + 1).map(r => g.step(peel(r)))
+    val peeledAt = g.nodes.groupBy("s").count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1))
+    val alive = (0 to rounds).map(r =>
+      peeledAt.collect { case (s, c) if s == 0 || s > r => c }.sum)
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    (0 to rounds).map(r => (r.toLong, alive(r), edges(r),
+      if (r == 0) 0L else alive(r - 1) - alive(r)))
+      .toDF("round", "n_alive", "n_dir_edges", "n_removed")
   }
 
   /** Per-node local clustering coefficient (Watts & Strogatz 1998,
@@ -2030,35 +1970,26 @@ object Dedup {
     * result deterministic and oracle-mirrorable (classic LPA's random
     * update order is neither).
     *
-    * Scale shape: per round, one equi-join of the edge table against the
-    * (node, label) table and two map-side-combinable aggregates; edges
-    * are the BOUNDED near-dup pair set, pinned once (localCheckpoint),
-    * and each round's label table is checkpointed so the plan stays flat
-    * (the PageRank/connected-components lineage rule). Output:
-    * (id, community, community_size). */
-  def labelPropagation(pairs: DataFrame, iters: Int = 4): DataFrame = {
+    * Scale shape: each round is one [[GraphLoop]] round over the
+    * distinct symmetric edges, whose message is the neighbor's label
+    * counted per label. Output: (id, community, community_size). */
+  def labelPropagation(pairs: DataFrame, iters: Int = 4): DataFrame =
+    labelPropagationGated(pairs, iters, GraphLoop.DriverMaxNodes)
+
+  private[graft] def labelPropagationGated(pairs: DataFrame, iters: Int,
+      nodeGate: Long): DataFrame = {
     require(iters >= 1 && iters <= 20, "fixed small iteration count")
-    val edges = pairs.select(col("id_a").as("u"), col("id_b").as("v"))
-      .union(pairs.select(col("id_b").as("u"), col("id_a").as("v")))
-      .distinct().localCheckpoint()
-    var labels = edges.select(col("u").as("id"))
-      .distinct().withColumn("lab", col("id")).localCheckpoint()
-    for (it <- 1 to iters) {
-      val next = edges
-        .join(labels.select(col("id").as("v"), col("lab")), Seq("v"))
-        .groupBy(col("u"), col("lab"))
-        .agg(count(lit(1)).as("__c"))
-        .groupBy(col("u").as("id"))
-        .agg(min_by(col("lab"), struct(-col("__c"), col("lab"))).as("lab"))
-      // `labels` has exactly ONE consumer per round (the join above) and
-      // the final round feeds only the caller's single action, so the
-      // loop checkpoints every 2nd round and never the last — the
-      // PageRank plain-mode cadence (r20, guide §2.4): fewer checkpoint
-      // jobs + driver gaps, zero recompute, lineage depth ≤ 2.
-      labels =
-        if (it % 2 == 0 && it != iters) next.localCheckpoint() else next
+    val g = GraphLoop.open(symmetric(pairs).distinct(), nodeGate)
+    g.start((id, _, _, _) => (id, 0L))
+    val plurality = new GraphLoop.Round[Map[Long, Long]](Map.empty,
+        (a, b) => b.foldLeft(a) { case (m, (l, c)) =>
+          m.updated(l, m.getOrElse(l, 0L) + c) }) {
+      def send(s: Long, x: Long) = Map(s -> 1L)
+      def update(s: Long, x: Long, in: Map[Long, Long], n: Long) =
+        if (in.isEmpty) s else in.minBy { case (l, c) => (-c, l) }._1
     }
-    labels.select(col("id"), col("lab").as("community"))
+    for (_ <- 1 to iters) g.step(plurality)
+    g.nodes.select(col("node").as("id"), col("s").as("community"))
       .withColumn("community_size",
         count(lit(1)).over(Window.partitionBy("community")))
   }

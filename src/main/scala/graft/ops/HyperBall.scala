@@ -23,8 +23,7 @@ import org.apache.spark.sql.types.DecimalType
   * The audit joins each HLL ball estimate against the exact ball size
   * (iterated distinct expansion — affordable on the sparse bounded dup
   * graph; the register side is the 100 TB path). Iteration state is
-  * localCheckpoint-pinned: flat lineage, PageRank's idiom
-  * (`ops/PageRank.scala`).
+  * localCheckpoint-pinned: flat lineage.
   */
 object HyperBall {
 

@@ -24,8 +24,8 @@ class DedupClusterSpec extends AnyFunSuite {
     val local = Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == want)
-    // localMaxEdges = 0 forces the distributed label-propagation loop
-    val dist = Dedup.connectedComponents(pairs, localMaxEdges = 0).collect()
+    // node gate 0 forces the keyed executor (min-label + pointer jump)
+    val dist = Dedup.componentsGated(pairs, 50, 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == want)
   }
@@ -37,7 +37,7 @@ class DedupClusterSpec extends AnyFunSuite {
     val local = Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == want)
-    val dist = Dedup.connectedComponents(pairs, localMaxEdges = 0).collect()
+    val dist = Dedup.componentsGated(pairs, 50, 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == want)
   }
@@ -52,7 +52,7 @@ class DedupClusterSpec extends AnyFunSuite {
     val pairs = (chain ++ rand).toDF("id_a", "id_b")
     val local = Dedup.connectedComponents(pairs).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Dedup.connectedComponents(pairs, localMaxEdges = 0).collect()
+    val dist = Dedup.componentsGated(pairs, 50, 0L).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(local == dist)
   }

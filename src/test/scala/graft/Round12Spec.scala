@@ -87,20 +87,6 @@ class Round12Spec extends AnyFunSuite {
     }
   }
 
-  test("PageRank under the node gate pins only its edge table") {
-    val s = spark
-    import s.implicits._
-    val sc = spark.sparkContext
-    val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 4L)).toDF("src", "dst")
-    for (dangling <- Seq(false, true)) {
-      val before = sc.getPersistentRDDs.keySet
-      val out = PageRank.run(edges, 5, redistributeDangling = dangling)
-      val pinned = sc.getPersistentRDDs.keySet -- before
-      assert(pinned.size == 1, s"dangling=$dangling: ${pinned.size} pins")
-      assert(out.count() == 4)
-    }
-  }
-
   test("invertedSearch: posting-list intersections over top-df terms") {
     val d = docs(
       (1L, "alpha beta gamma", "en", "a"),
