@@ -1,8 +1,14 @@
 package graft.llm
 
+import java.math.RoundingMode
+
+import scala.collection.mutable.ArrayBuilder
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, Decimal}
 
 /** Text-analysis operators: language ID, quality scoring, token counting.
   * All expression-only (whole-stage codegen), mirrored 1:1 in the DuckDB
@@ -593,20 +599,21 @@ object TextAnalysis {
     * CTEs over the same arithmetic.
     *
     * Scale shape: the feature table is one explode + one hash
-    * aggregate (map-side partials), checkpointed and reused by every
-    * step; a step is one doc-grain aggregation (margins), one
-    * id-co-partitioned join (errors back onto features), and one
-    * bucket-grain aggregation whose result — `numBuckets` rows, the
-    * k-means centroid-pull discipline — is the only thing the driver
-    * ever holds. Nothing unbounded is broadcast or collected; steps
-    * are a fixed constant. */
+    * aggregate (map-side partials), checkpointed hash-partitioned and
+    * sorted by doc id, and reused by every step; a step is ONE
+    * shuffle-free Spark job, a fold over each partition that streams a
+    * doc's rows, takes its margin and error, and adds its gradient terms
+    * to `numBuckets` exact decimal sums. Those sums and the partition's
+    * doc count — the k-means centroid-pull discipline — are the only
+    * thing the driver ever holds; the first step's doc count is the
+    * gradient's divisor. Nothing unbounded is broadcast or collected;
+    * steps are a fixed constant. A corpus with no features keeps every
+    * weight at 0. */
   def trainQualityClassifier(docs: DataFrame, idCol: String,
       textCol: String, target: Column, numBuckets: Int = 64,
       iters: Int = 3, lr: Double = 1.0): DataFrame = {
-    val (feat, nDocs) =
-      classifierFeatures(docs, idCol, textCol, target, numBuckets)
-    weightsDf(docs.sparkSession,
-      trainWeights(feat, nDocs, numBuckets, iters, lr))
+    val feat = classifierFeatures(docs, idCol, textCol, target, numBuckets)
+    weightsDf(docs.sparkSession, trainWeights(feat, numBuckets, iters, lr))
   }
 
   /** The (bucket, 6-dp weight) table from a trained weight vector — the
@@ -633,11 +640,9 @@ object TextAnalysis {
       numBuckets: Int = 64, iters: Int = 3, lr: Double = 1.0,
       threshold: Double = 0.5): DataFrame = {
     val spark = docs.sparkSession
-    val (feat, nDocs) =
-      classifierFeatures(docs, idCol, textCol, target, numBuckets)
+    val feat = classifierFeatures(docs, idCol, textCol, target, numBuckets)
     graft.core.Tables.writeSmall(
-      weightsDf(spark, trainWeights(feat, nDocs, numBuckets, iters, lr)),
-      path)
+      weightsDf(spark, trainWeights(feat, numBuckets, iters, lr)), path)
     val served = readWeights(spark, path)
     val scored = margins(feat, served).withColumn("__p", sigmoid6(col("__m")))
     reportRollup(docs, idCol, groupCol, scored, threshold)
@@ -655,9 +660,8 @@ object TextAnalysis {
       textCol: String, target: Column, groupCol: String,
       numBuckets: Int = 64, iters: Int = 3, lr: Double = 1.0,
       threshold: Double = 0.5): DataFrame = {
-    val (feat, nDocs) =
-      classifierFeatures(docs, idCol, textCol, target, numBuckets)
-    val w = trainWeights(feat, nDocs, numBuckets, iters, lr)
+    val feat = classifierFeatures(docs, idCol, textCol, target, numBuckets)
+    val w = trainWeights(feat, numBuckets, iters, lr)
     val scored = margins(feat, w).withColumn("__p", sigmoid6(col("__m")))
     reportRollup(docs, idCol, groupCol, scored, threshold)
   }
@@ -685,8 +689,7 @@ object TextAnalysis {
       textCol: String, target: Column, groupCol: String,
       weightsPath: String, threshold: Double = 0.5): DataFrame = {
     val w = readWeights(docs.sparkSession, weightsPath)
-    val (feat, _) =
-      classifierFeatures(docs, idCol, textCol, target, w.length)
+    val feat = classifierFeatures(docs, idCol, textCol, target, w.length)
     val scored = margins(feat, w).withColumn("__p", sigmoid6(col("__m")))
     reportRollup(docs, idCol, groupCol, scored, threshold)
   }
@@ -727,13 +730,21 @@ object TextAnalysis {
 
   /** Hashed-feature table shared by train and serve: one row per
     * (doc, bucket) with x = count/len, plus the label; empty docs are
-    * excluded (no features to learn from). Checkpointed — every
-    * gradient step and the scoring pass re-reads it. */
+    * excluded (no features to learn from). Pinned by [[pinFeatures]] at
+    * the [[sizedWidth]] of its plan — every gradient step and the
+    * scoring pass re-read it. */
   private def classifierFeatures(docs: DataFrame, idCol: String,
-      textCol: String, target: Column,
-      numBuckets: Int): (DataFrame, Long) = {
+      textCol: String, target: Column, numBuckets: Int): DataFrame = {
+    val rows = featureRows(docs, idCol, textCol, target, numBuckets)
+    pinFeatures(rows, sizedWidth(rows))
+  }
+
+  /** The unpinned feature rows (__id, __y, __b, __x) — the column order
+    * [[trainWeights]] reads. */
+  private[graft] def featureRows(docs: DataFrame, idCol: String,
+      textCol: String, target: Column, numBuckets: Int): DataFrame = {
     val w = TextOps.words(col(textCol))
-    val pre = docs
+    docs
       .select(col(idCol).as("__id"),
         target.cast("boolean").cast("int").cast("double").as("__y"),
         w.as("__w"))
@@ -748,25 +759,18 @@ object TextAnalysis {
       .agg(count(lit(1)).as("__c"))
       .select(col("__id"), col("__y"), col("__b"),
         (col("__c").cast("double") / col("__n")).as("__x"))
-    // pin the checkpoint on the doc id (explicit width — the AQE
-    // byte-coalescing trap): the per-step margin aggregation
-    // (ClusteredDistribution on (id, y) — satisfied by the id
-    // subset) and the error join back onto features then both run
-    // shuffle-free, leaving one numBuckets-row shuffle per step.
-    // The WIDTH is scale-adaptive (r21, verdict item 5): derived from
-    // the plan's own size estimate at ~32 MB/partition instead of the
-    // fixed core count — at sf0.1 the fixed width ran 3 × cores
-    // near-empty tasks per GD step; at 100 TB the core count would be
-    // far too few. Still an explicit pinned count (never AQE
-    // byte-coalescing), so the exchange-reuse contract across the GD
-    // steps and the scoring pass is unchanged; the partition count
-    // never affects any aggregated value.
-    val width = sizedWidth(pre)
-    val feat = pre.repartition(width, col("__id"))
-      .localCheckpoint() // every GD step + scoring re-reads it
-    val nDocs = feat.select(countDistinct(col("__id"))).head().getLong(0)
-    (feat, nDocs)
   }
+
+  /** Pins feature rows hash-partitioned by doc id to `width`
+    * partitions, each sorted by id, so a doc's rows are contiguous in
+    * one partition: a gradient step folds one doc at a time, and the
+    * scoring pass's margin aggregation (ClusteredDistribution on
+    * (id, y), satisfied by the id subset) runs shuffle-free. The width
+    * is an explicit count (never AQE byte-coalescing, the q203 trap)
+    * and never affects any aggregated value. */
+  private[graft] def pinFeatures(rows: DataFrame, width: Int): DataFrame =
+    rows.repartition(width, col("__id")).sortWithinPartitions("__id")
+      .localCheckpoint()
 
   /** Partition width from Catalyst's size estimate: ceil(bytes/32 MB),
     * clamped to [1, 1 << 20]. The estimate is crude (it propagates the
@@ -804,27 +808,91 @@ object TextAnalysis {
       .withColumn("__m", round(col("__z").cast("double"), 6))
   }
 
-  /** The gradient loop: `iters` full-batch steps, weights on the
-    * driver (numBuckets doubles — bounded, like the k-means centroid
-    * pulls), gradient sums exact in decimal. */
-  private def trainWeights(feat: DataFrame, nDocs: Long,
-      numBuckets: Int, iters: Int, lr: Double): Array[Double] = {
-    var w = Array.fill(numBuckets)(0.0)
+  /** The gradient loop: `iters` full-batch steps from w = 0, weights
+    * on the driver (numBuckets doubles — bounded, like the k-means
+    * centroid pulls). A step is one Spark job over the pin from
+    * [[pinFeatures]]: [[gradientFold]] per partition, then the driver
+    * adds the partitions' exact sums and moves every weight by
+    * lr · sum / nDocs. The first step's doc count is nDocs; with no
+    * docs the weights stay 0. The arithmetic is that of the Catalyst
+    * expressions in [[margins]] and [[sigmoid6]], evaluated as Spark
+    * evaluates them, so the weights are bit-identical to the same steps
+    * written as Catalyst aggregates (CorpusQaSpec). */
+  private[graft] def trainWeights(feat: DataFrame, numBuckets: Int,
+      iters: Int, lr: Double): Array[Double] = {
+    val (rows, idType) = (feat.queryExecution.toRdd, feat.schema.head.dataType)
+    var (w, nDocs) = (Array.fill(numBuckets)(0.0), -1L)
     for (_ <- 1 to iters) {
-      val err = margins(feat, w)
-        .withColumn("__err", sigmoid6(col("__m")) - col("__y"))
-        .select("__id", "__err")
-      val g = feat.join(err, Seq("__id"))
-        .withColumn("__g",
-          round(col("__err") * col("__x"), 12).cast("decimal(38,12)"))
-        .groupBy("__b").agg(sum(col("__g")).as("__gs"))
-        .collect() // numBuckets rows — bounded driver pull
-        .map(r => r.getLong(0) -> r.getDecimal(1)).toMap
-      w = w.zipWithIndex.map { case (wj, j) =>
-        wj - lr * (g.get(j.toLong).map(_.doubleValue).getOrElse(0.0)
-          / nDocs) }
+      val wt = w
+      val parts = rows.mapPartitions(it =>
+        Iterator.single(gradientFold(it, idType, wt))).collect()
+      if (nDocs < 0) nDocs = parts.map(_._2).sum
+      if (nDocs > 0) {
+        val g = parts.map(_._1).reduce((a, b) => a.indices.map(j => a(j) + b(j)).toArray)
+        w = w.indices.map(j =>
+          w(j) - lr * (exact(g(j)).toJavaBigDecimal.doubleValue / nDocs)).toArray
+      }
     }
     w
+  }
+
+  /** One gradient step over one partition of rows (__id, __y, __b,
+    * __x) sorted by id. Per doc (a null id is no doc; a doc whose rows
+    * carry two labels has one margin per label, as an aggregation by
+    * (id, y) has): margin = exact sum of its 12-dp terms w_b·x, rounded
+    * to 6 dp; err = sigmoid6(margin) − y, none for a null label; each of
+    * the doc's rows adds the 12-dp term err·x to its bucket's sum.
+    * Returns the numBuckets sums and the partition's doc count. A task
+    * holds one doc's rows and the numBuckets sums. */
+  private def gradientFold(rows: Iterator[InternalRow], idType: DataType,
+      w: Array[Double]): (Array[Decimal], Long) = {
+    val g = Array.fill(w.length)(Decimal(0))
+    val (bs, ys, xs) =
+      (new ArrayBuilder.ofInt, new ArrayBuilder.ofDouble, new ArrayBuilder.ofDouble)
+    var (id, docs): (Any, Long) = (null, 0L)
+    def endDoc(): Unit = if (id != null) {
+      val (b, y, x) = (bs.result(), ys.result(), xs.result())
+      for (label <- y.distinct if !label.isNaN) {
+        val z = y.indices.foldLeft(Decimal(0))((z, k) =>
+          if (y(k) == label) z + term(w(b(k)) * x(k)) else z)
+        val err = sigmoid(halfUp(exact(z).toDouble, 6)) - label
+        b.indices.foreach(k => g(b(k)) = g(b(k)) + term(err * x(k)))
+      }
+      docs += 1; bs.clear(); ys.clear(); xs.clear()
+    }
+    rows.foreach { r =>
+      if (!r.isNullAt(0)) {
+        val v = r.get(0, idType)
+        if (v != id) { endDoc(); id = InternalRow.copyValue(v) }
+        bs += r.getLong(2).toInt
+        ys += (if (r.isNullAt(1)) Double.NaN else r.getDouble(1))
+        xs += r.getDouble(3)
+      }
+    }
+    endDoc()
+    (g.map(exact), docs)
+  }
+
+  /** Spark's `round(d, scale)` on a double: HALF_UP on its decimal
+    * string. */
+  private def halfUp(d: Double, scale: Int): Double =
+    java.math.BigDecimal.valueOf(d).setScale(scale, RoundingMode.HALF_UP)
+      .doubleValue
+
+  /** [[sigmoid6]] as Spark evaluates it (StrictMath exp). */
+  private def sigmoid(m: Double): Double =
+    halfUp(1.0 / (1.0 + StrictMath.exp(-m)), 6)
+
+  /** `round(d, 12).cast("decimal(38,12)")`. */
+  private def term(d: Double): Decimal = exact(Decimal(halfUp(d, 12)))
+
+  /** A fresh copy of `d` at decimal(38,12); past precision 38 it fails,
+    * as the ANSI decimal cast and sum do. */
+  private def exact(d: Decimal): Decimal = {
+    val e = d.clone()
+    if (!e.changePrecision(38, 12))
+      throw new ArithmeticException(s"$d overflows decimal(38,12)")
+    e
   }
 
   /** Reliability diagram + Expected Calibration Error (Guo et al. 2017,

@@ -4,11 +4,17 @@ import scala.collection.mutable.{ArrayBuilder, HashMap, LongMap}
 import scala.reflect.ClassTag
 
 import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.KryoSerializer
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{classic, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.LongType
 
 /** The one loop behind the iterative graph algorithms (PageRank and HITS
   * here; label propagation, the k-core peel and connected components in
@@ -22,7 +28,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    [[DriverMaxNodes]] nodes the loop runs on the driver executor,
   *    above it on the keyed executor.
   *  - The driver executor: the state is three driver arrays (sorted ids,
-  *    state `s`, invariant word `x`). Each round is ONE Spark job, a
+  *    state `s`, invariant word `x`); ids and words are broadcast once per
+  *    graph, the state once per round. Each round is ONE Spark job, a
   *    `mapPartitions` over the pinned edges against the broadcast arrays
   *    that folds the messages per gather node; the gather partitioning
   *    keeps the partitions' node sets disjoint, so the collect returns at
@@ -40,14 +47,21 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * An algorithm is written once, as its [[Round]], and both executors run
   * that round. Results leave either executor as RDD rows, never as an
-  * in-plan local relation, so Catalyst sees one flat relation with
-  * default statistics however many rounds ran. */
+  * in-plan local relation, so Catalyst sees one flat relation however
+  * many rounds ran. The driver executor, which knows n, gives that
+  * relation its exact size, so a consumer's join broadcasts it when it
+  * fits the broadcast-join threshold; the keyed executor's keeps the
+  * default statistics. */
 object GraphLoop {
 
   /** Node-count gate of the driver executor. At or below it the ids, state
     * and invariant words are three driver arrays of n longs (2M nodes ≈
-    * 48 MB), broadcast once per round. */
+    * 48 MB); a round broadcasts the 16 MB of state. */
   val DriverMaxNodes = 2000000L
+
+  /** Catalyst's size of one (node, s, x) result row: 8 bytes of row
+    * header and three longs. */
+  private val NodeRowBytes = 32L
 
   /** One round of a vertex program. Every edge carries `send` of its
     * scatter end's state and invariant word to its gather end (src to dst,
@@ -120,11 +134,12 @@ object GraphLoop {
     java.util.Arrays.binarySearch(ids, id)
 
   /** The messages of one edge partition, given as (scatter end's index
-    * in state block `b`, gather key) pairs, folded per gather key. */
-  private def scatter[M](r: Round[M], b: Block,
+    * in state `s` and words `x`, gather key) pairs, folded per gather
+    * key. */
+  private def scatter[M](r: Round[M], s: Array[Long], x: Array[Long],
       each: ((Int, Long) => Unit) => Unit): Iterator[(Long, M)] = {
     val acc = LongMap.empty[M]
-    each((u, c) => acc(c) = r.merge(acc.getOrElse(c, r.zero), r.send(b.s(u), b.x(u))))
+    each((u, c) => acc(c) = r.merge(acc.getOrElse(c, r.zero), r.send(s(u), x(u))))
     acc.iterator
   }
 
@@ -144,27 +159,38 @@ object GraphLoop {
   private def update[M](r: Round[M], b: Block, in: Array[M], g: Long): Block =
     b.copy(s = Array.tabulate(b.ids.length)(i => r.update(b.s(i), b.x(i), in(i), g)))
 
-  private def rows(e: DataFrame, blocks: RDD[Block]): DataFrame =
-    e.sparkSession.createDataFrame(
-      blocks.flatMap(b => b.ids.indices.iterator.map(i => Row(b.ids(i), b.s(i), b.x(i)))),
-      StructType(Seq("node", "s", "x").map(StructField(_, LongType, nullable = false))))
+  /** (node, s, x) rows of `blocks` as one RDD relation; `rowCount`, when
+    * known, becomes its Catalyst statistics (default ones otherwise). */
+  private def rows(e: DataFrame, blocks: RDD[Block],
+      rowCount: Option[Long] = None): DataFrame = {
+    val spark = e.sparkSession.asInstanceOf[classic.SparkSession]
+    val out = Seq("node", "s", "x").map(AttributeReference(_, LongType, nullable = false)())
+    val stats = rowCount.map(n => Statistics(BigInt(n) * NodeRowBytes, Some(BigInt(n))))
+    val plan = LogicalRDD(out, blocks.flatMap(b =>
+      b.ids.indices.iterator.map(i => InternalRow(b.ids(i), b.s(i), b.x(i)))))(spark, stats)
+    new classic.Dataset[Row](spark, plan, ExpressionEncoder(plan.schema))
+  }
 
   private final class OnDriver(val edges: DataFrame, table: Array[Node])
       extends Graph {
     private var b: Block = _
+    /** The block's ids and words, broadcast once per graph. */
+    private var fixed: Broadcast[(Array[Long], Array[Long])] = _
     val n = table.count(inGraph).toLong
     val marks = table.count(_._4).toLong
-    def start(init: (Long, Long, Long, Boolean) => (Long, Long)): Unit =
+    def start(init: (Long, Long, Long, Boolean) => (Long, Long)): Unit = {
       b = block(table, init)
+      fixed = sc.broadcast((b.ids, b.x))
+    }
     def step[M](r: Round[M]): Long = {
       implicit val tag: ClassTag[M] = r.tag
-      val (bb, (a, c)) = (sc.broadcast(b), if (r.reverse) (1, 0) else (0, 1))
+      val (sb, fb, (a, c)) = (sc.broadcast(b.s), fixed, if (r.reverse) (1, 0) else (0, 1))
       // keyed by the gather end's index, so the driver folds without search
       val parts = try edges.queryExecution.toRdd.mapPartitions { it =>
-        val ids = bb.value.ids
-        Iterator.single(scatter(r, bb.value, f => it.foreach(row =>
+        val (ids, x) = fb.value
+        Iterator.single(scatter(r, sb.value, x, f => it.foreach(row =>
           f(idx(ids, row.getLong(a)), idx(ids, row.getLong(c))))).toArray.unzip)
-      }.collect() finally bb.destroy()
+      }.collect() finally sb.destroy()
       val in = fold(r, b.ids.length,
         parts.iterator.flatMap { case (v, m) => v.iterator.zip(m) }, _.toInt)
       val g = if (r.scalar) tally(r, b, in) else 0L
@@ -174,7 +200,8 @@ object GraphLoop {
     def nodes: DataFrame = {
       val (k, len) = (sc.defaultParallelism, b.ids.length)
       val cut = (j: Int) => (j.toLong * len / k).toInt
-      rows(edges, sc.parallelize((0 until k).map(j => b.slice(cut(j), cut(j + 1))), k))
+      rows(edges, sc.parallelize((0 until k).map(j => b.slice(cut(j), cut(j + 1))), k),
+        Some(len.toLong))
     }
   }
 
@@ -216,7 +243,7 @@ object GraphLoop {
     def step[M](r: Round[M]): Long =
       advance(r, edgeBlocks(r.reverse).zipPartitions(state) { (es, bs) =>
         val b = bs.next()
-        es.flatMap { case (u, c) => scatter(r, b, f => u.indices.foreach(k => f(u(k), c(k)))) }
+        es.flatMap { case (u, c) => scatter(r, b.s, b.x, f => u.indices.foreach(k => f(u(k), c(k)))) }
       })
 
     /** The pointer jump of connected components: every node folds in, as

@@ -275,6 +275,124 @@ class CorpusQaSpec extends AnyFunSuite {
       s"mean_p pos=$pm neg=$nm")
   }
 
+  /** A mixed corpus for the gradient-step specs: words from a 40-word
+    * vocabulary (so buckets collide), one doc id carried by two docs with
+    * different labels, a null label and a blank doc. */
+  private def mixedCorpus = {
+    val rnd = new scala.util.Random(5)
+    val vocab = (0 until 40).map(i => s"v$i")
+    val texts = (1L to 30L).map(i => (i,
+      Seq.fill(3 + rnd.nextInt(12))(vocab(rnd.nextInt(40))).mkString(" "),
+      if (rnd.nextBoolean()) "pos" else "neg"))
+    val relabelled = if (texts(6)._3 == "pos") "neg" else "pos"
+    docs(texts ++ Seq((7L, "v1 v2 v3", relabelled), (31L, "v4 v5", null),
+      (32L, "  ", "pos")): _*)
+  }
+
+  /** The gradient step as Catalyst aggregates (reference): per-doc
+    * margins, errors joined back onto the features, a per-bucket sum
+    * collected to the driver; nDocs counted distinct. */
+  private def catalystWeights(feat: org.apache.spark.sql.DataFrame,
+      numBuckets: Int, iters: Int, lr: Double): Array[Double] = {
+    import org.apache.spark.sql.functions._
+    val nDocs = feat.select(countDistinct(col("__id"))).head().getLong(0)
+    var w = Array.fill(numBuckets)(0.0)
+    for (_ <- 1 to iters) {
+      val wArr = array(w.toIndexedSeq.map(lit): _*)
+      val err = feat
+        .withColumn("__t",
+          round(element_at(wArr, (col("__b") + 1).cast("int")) * col("__x"),
+            12).cast("decimal(38,12)"))
+        .groupBy("__id", "__y").agg(sum(col("__t")).as("__z"))
+        .withColumn("__m", round(col("__z").cast("double"), 6))
+        .withColumn("__err", TextAnalysis.sigmoid6(col("__m")) - col("__y"))
+        .select("__id", "__err")
+      val g = feat.join(err, Seq("__id"))
+        .withColumn("__g",
+          round(col("__err") * col("__x"), 12).cast("decimal(38,12)"))
+        .groupBy("__b").agg(sum(col("__g")).as("__gs"))
+        .collect().map(r => r.getLong(0) -> r.getDecimal(1)).toMap
+      w = w.zipWithIndex.map { case (wj, j) =>
+        wj - lr * (g.get(j.toLong).map(_.doubleValue).getOrElse(0.0)
+          / nDocs) }
+    }
+    w
+  }
+
+  test("the gradient fold's weights are bit-identical to the Catalyst " +
+      "step at pin widths 1, 3 and 7") {
+    import org.apache.spark.sql.functions.col
+    val rows = TextAnalysis.featureRows(mixedCorpus, "doc_id", "text",
+      col("source") === "pos", 16)
+    for (width <- Seq(1, 3, 7)) {
+      val feat = TextAnalysis.pinFeatures(rows, width)
+      val bits = (w: Array[Double]) =>
+        w.map(java.lang.Double.doubleToRawLongBits).toSeq
+      val fold = TextAnalysis.trainWeights(feat, 16, 4, 0.7)
+      assert(fold.exists(_ != 0.0))
+      assert(bits(fold) == bits(catalystWeights(feat, 16, 4, 0.7)),
+        s"width $width")
+    }
+  }
+
+  test("an empty corpus trains zero weights and serves an empty report") {
+    import org.apache.spark.sql.functions.col
+    val target = col("source") === "pos"
+    for (d <- Seq(docs(), docs((1L, "", "pos"), (2L, "   ", "neg")))) {
+      val w = TextAnalysis.trainQualityClassifier(d, "doc_id", "text",
+        target).collect().map(_.getDouble(1))
+      assert(w.length == 64 && w.forall(_ == 0.0), w.take(3).mkString(","))
+      assert(TextAnalysis.qualityClassifierReport(d, "doc_id", "text",
+        target, "source").count() == 0)
+    }
+  }
+
+  /** The Spark jobs `body` starts. The listener counts the jobs between
+    * two marker jobs; events arrive in order, so once the second marker
+    * is seen every job of `body` has been counted. */
+  private def jobsOf(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val (marks, jobs) = (new java.util.concurrent.atomic.AtomicInteger,
+      new java.util.concurrent.atomic.AtomicInteger)
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(
+            _.getProperty("spark.job.description") == "marker")) {
+          if (marks.incrementAndGet() == 2) done.countDown()
+        } else if (marks.get == 1) jobs.incrementAndGet()
+    }
+    def marker(): Unit = {
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker(); body; marker()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("training runs one job per gradient step after the feature pin, " +
+      "and the served report from a persisted model runs no count job") {
+    import org.apache.spark.sql.functions.col
+    val (d, target) = (mixedCorpus, col("source") === "pos")
+    val rows = TextAnalysis.featureRows(d, "doc_id", "text", target, 64)
+    val pin = jobsOf(TextAnalysis.pinFeatures(rows, TextAnalysis.sizedWidth(rows)))
+    assert(pin > 0)
+    for (iters <- Seq(1, 3))
+      assert(jobsOf(TextAnalysis.trainQualityClassifier(d, "doc_id", "text",
+        target, iters = iters)) == pin + iters, s"iters $iters")
+    val path = java.nio.file.Files.createTempDirectory("graft_qc").toString +
+      "/weights"
+    TextAnalysis.writeClassifier(d, "doc_id", "text", target, path)
+    val read = jobsOf(TextAnalysis.readWeights(spark, path))
+    assert(jobsOf(TextAnalysis.qualityClassifierReportFrom(d, "doc_id",
+      "text", target, "source", path)) == read + pin)
+  }
+
   test("sizedWidth falls back to default parallelism when statistics " +
       "are unknown (RDD-backed input)") {
     import org.apache.spark.sql.Row
