@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -37,6 +39,10 @@ object Harness {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // a glob read logs "Assume no metadata directory" with a ~75-line
+    // FileNotFoundException stack at WARN; it is the expected path
+    Configurator.setLevel("org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
+      Level.ERROR)
     spark
   }
 

@@ -1,6 +1,6 @@
 package graft.core
 
-import scala.reflect.ClassTag
+import scala.collection.mutable.ArrayBuilder
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
@@ -35,13 +35,22 @@ import org.apache.spark.sql.functions._
   * BucketedKernelSpec demonstrates for Pan-Tompkins.
   *
   * Fan-out contract: kernel stages are CPU-bound with tiny rows, so the
-  * shuffle uses an EXPLICIT numbered repartition on the group key —
+  * shuffle uses an EXPLICIT numbered repartition of the group key —
   * which AQE respects — rather than `groupByKey`'s plain exchange. AQE's
   * partition coalescing optimizes for shuffle BYTES; on a kernel stage it
   * would fold a ~MB shuffle into one task and serialize minutes of CPU
   * (measured: q59's 1500 solver runs collapsed to a single task, 5x
   * wall-clock on 8 cores). Rows arrive sorted per group via
   * `sortWithinPartitions`, so kernels also skip the per-group sort.
+  *
+  * Placement: slice (subject, bucket) goes to partition
+  * (pmod(subject, parts) + pmod(bucket, parts)) mod parts
+  * (`repartitionById`), not to a hash of the key. Dense subject ids, and
+  * the consecutive buckets of one long recording, cycle through every
+  * partition, so a few large recordings get a core each (a hash put
+  * perfbench's 4 recordings on partitions [2,0,0,2]). Worst case: ids that
+  * all fall in one residue class mod `parts` (say, every id a multiple of
+  * `parts`) share one partition for each bucket.
   */
 object KernelRunner {
 
@@ -74,28 +83,12 @@ object KernelRunner {
   final class Slice(val subject: Long, val idx: Array[Long],
       val value: Array[Double], val core: Range)
 
-  /** Consecutive-run grouping over a partition iterator: emits one
-    * (key, rows) pair per maximal run of equal keys. Requires the
-    * partition to be sorted by the key (sortWithinPartitions upstream);
-    * buffers ONE group at a time — the same memory contract as
-    * flatMapGroups' sort-based grouping. */
-  private def runs[T: ClassTag, K](it: Iterator[T])(key: T => K): Iterator[(K, Array[T])] =
-    new Iterator[(K, Array[T])] {
-      private val buf = it.buffered
-      def hasNext: Boolean = buf.hasNext
-      def next(): (K, Array[T]) = {
-        val k = key(buf.head)
-        val acc = collection.mutable.ArrayBuilder.make[T]
-        while (buf.hasNext && key(buf.head) == k) acc += buf.next()
-        (k, acc.result())
-      }
-    }
-
   /** The slice source: every sample lands in its own bucket plus — within
     * `halo` of a boundary — the neighbor bucket (the bounded explode costs
-    * <= (1 + 2*halo/bucketLen)x rows). Rows are repartitioned on
-    * (subject, bucket) to a PINNED partition count and sorted by
-    * (subject, bucket, idx) within partitions, so each slice is one run. */
+    * <= (1 + 2*halo/bucketLen)x rows). Rows go to a PINNED partition count,
+    * slice (subject, bucket) to partition (subject + bucket) mod parts, and
+    * are sorted by (subject, bucket, idx) within partitions, so each slice
+    * is one run. */
   private def slices(rows: DataFrame, valueCol: Option[String], bucketLen: Long,
       halo: Int): Dataset[Sample] = {
     require(halo >= 0 && halo < bucketLen, "need 0 <= halo < bucketLen")
@@ -114,7 +107,9 @@ object KernelRunner {
       .select(Seq(col("subject").cast("long"), col("idx").cast("long")) ++
         valueCol.map(c => col(c).cast("double").as("value")): _*)
       .withColumn("bucket", bucket)
-      .repartition(parts, col("subject"), col("bucket"))
+      .repartitionById(parts,
+        pmod(pmod(col("subject"), lit(parts)) + pmod(col("bucket"), lit(parts)), lit(parts))
+          .cast("int"))
       .sortWithinPartitions("subject", "bucket", "idx")
     // an idx-only source carries no value through the shuffle
     (if (valueCol.isDefined) sorted else sorted.withColumn("value", lit(0.0)))
@@ -137,8 +132,20 @@ object KernelRunner {
       bucketLen: Long = Whole, halo: Int = 0)(f: Slice => Iterator[R]): Dataset[R] = {
     val hasValue = valueCol.isDefined
     slices(rows, valueCol, bucketLen, halo).mapPartitions { it =>
-      runs(it)(r => (r.subject, r.bucket)).flatMap { case ((subj, b), rs) =>
-        val idx = rs.map(_.idx)
+      // rows arrive sorted by (subject, bucket, idx): each slice is one run,
+      // read straight into its primitive arrays
+      val rs = it.buffered
+      Iterator.continually(rs).takeWhile(_.hasNext).flatMap { _ =>
+        val subj = rs.head.subject
+        val b = rs.head.bucket
+        val idxB = new ArrayBuilder.ofLong
+        val valueB = new ArrayBuilder.ofDouble
+        while (rs.hasNext && rs.head.subject == subj && rs.head.bucket == b) {
+          val r = rs.next()
+          idxB += r.idx
+          if (hasValue) valueB += r.value
+        }
+        val idx = idxB.result()
         // idx-sorted, so the core is one contiguous run of positions
         val from = idx.indexWhere(_ / bucketLen == b)
         // Phantom bucket: a recording ending within halo of the next
@@ -147,8 +154,7 @@ object KernelRunner {
         if (from < 0) Iterator.empty
         else {
           val until = idx.lastIndexWhere(_ / bucketLen == b) + 1
-          val value = if (hasValue) rs.map(_.value) else Array.emptyDoubleArray
-          f(new Slice(subj, idx, value, from until until))
+          f(new Slice(subj, idx, valueB.result(), from until until))
         }
       }
     }

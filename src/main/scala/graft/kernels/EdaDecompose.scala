@@ -27,12 +27,21 @@ object EdaDecompose {
   case class Result(phasic: Array[Double], driver: Array[Double],
       tonic: Array[Double])
 
-  /** One-recording decomposition kernel. */
-  /** Default iteration budget: 1200 puts the solution within ~3e-2 (phasic)
+  /** One-recording decomposition kernel.
+    *
+    * Default iteration budget: 1200 puts the solution within ~3e-2 (phasic)
     * / ~8e-3 (tonic) max-abs of the exact QP optimum on the spec's Bateman
     * trace (EdaDecomposeSpec quantifies this against a dense active-set
     * solver); the deterministic early exit usually stops well before the
-    * cap on converged recordings. */
+    * cap on converged recordings.
+    *
+    * Each FISTA step is two sweeps over the recording on buffers allocated
+    * once per solve: a forward sweep (A^-1 fused with M, the B spline at
+    * each sample, the residual, and the B^T, C^T and objective sums) and a
+    * backward sweep (M^T, A^-T and the projected p step). Every sum adds
+    * its terms in ascending sample order, exactly as the operator-at-a-time
+    * form did, so the output is bit-identical to it (EdaDecomposeSpec keeps
+    * that form as its reference). */
   def cvxEdaKernel(fs: Int, tau0: Double = 2.0, tau1: Double = 0.7,
       deltaKnot: Double = 10.0, alpha: Double = 8e-4, gamma: Double = 1e-2,
       iters: Int = 1200)(y: Array[Double]): Result = {
@@ -42,62 +51,52 @@ object EdaDecompose {
     val a1 = 1.0 / math.min(tau1, tau0)
     val a0 = 1.0 / math.max(tau1, tau0)
     val den = (a1 - a0) * delta * delta
-    val ar = Array(
-      (a1 * delta + 2.0) * (a0 * delta + 2.0) / den,
-      (2.0 * a1 * a0 * delta * delta - 8.0) / den,
-      (a1 * delta - 2.0) * (a0 * delta - 2.0) / den)
-    val ma = Array(1.0, 2.0, 1.0)
+    // A q = p  (rows 0,1 identity; row i>=2: ar0*q_i + ar1*q_{i-1} + ar2*q_{i-2});
+    // M is its MA counterpart with taps (ma0, ma1, ma2)
+    val ar0 = (a1 * delta + 2.0) * (a0 * delta + 2.0) / den
+    val ar1 = (2.0 * a1 * a0 * delta * delta - 8.0) / den
+    val ar2 = (a1 * delta - 2.0) * (a0 * delta - 2.0) / den
+    val ma0 = 1.0; val ma1 = 2.0; val ma2 = 1.0
 
-    // A q = p  (rows 0,1 identity; row i>=2: ar0*q_i + ar1*q_{i-1} + ar2*q_{i-2})
-    def solveA(p: Array[Double]): Array[Double] = {
-      val q = new Array[Double](n)
-      q(0) = p(0); if (n > 1) q(1) = p(1)
+    // H = M A^-1, one forward pass
+    def applyH(p: Array[Double], out: Array[Double]): Unit = {
+      var q1 = p(1); var q2 = p(0) // q_{i-1}, q_{i-2}
+      out(0) = p(0); out(1) = p(1)
       var i = 2
       while (i < n) {
-        q(i) = (p(i) - ar(1) * q(i - 1) - ar(2) * q(i - 2)) / ar(0)
+        val q = (p(i) - ar1 * q1 - ar2 * q2) / ar0
+        out(i) = ma0 * q + ma1 * q1 + ma2 * q2
+        q2 = q1; q1 = q
         i += 1
       }
-      q
     }
-    // A^T x = v (backward substitution)
-    def solveAT(v: Array[Double]): Array[Double] = {
-      val x = new Array[Double](n)
+    // H^T = A^-T M^T, one backward pass: row i of M^T v, then row i of the
+    // backward substitution A^T x = M^T v given x_{i+1} and x_{i+2}
+    def mtAt(v: Array[Double], i: Int): Double = {
+      var s = if (i < 2) v(i) else ma0 * v(i)
+      if (i + 1 < n && i + 1 >= 2) s += ma1 * v(i + 1)
+      if (i + 2 < n && i + 2 >= 2) s += ma2 * v(i + 2)
+      s
+    }
+    def atStep(s0: Double, i: Int, x1: Double, x2: Double): Double = {
+      var s = s0
+      if (i + 1 < n && i + 1 >= 2) s -= ar1 * x1
+      if (i + 2 < n && i + 2 >= 2) s -= ar2 * x2
+      if (i >= 2) s / ar0 else s
+    }
+    def applyHT(v: Array[Double], out: Array[Double]): Unit = {
+      var x1 = 0.0; var x2 = 0.0 // x_{i+1}, x_{i+2}
       var i = n - 1
       while (i >= 0) {
-        var s = v(i)
-        if (i + 1 < n && i + 1 >= 2) s -= ar(1) * x(i + 1)
-        if (i + 2 < n && i + 2 >= 2) s -= ar(2) * x(i + 2)
-        x(i) = if (i >= 2) s / ar(0) else s
+        val x = atStep(mtAt(v, i), i, x1, x2)
+        out(i) = x
+        x2 = x1; x1 = x
         i -= 1
       }
-      x
     }
-    def applyM(q: Array[Double]): Array[Double] = {
-      val out = new Array[Double](n)
-      out(0) = q(0); if (n > 1) out(1) = q(1)
-      var i = 2
-      while (i < n) {
-        out(i) = ma(0) * q(i) + ma(1) * q(i - 1) + ma(2) * q(i - 2)
-        i += 1
-      }
-      out
-    }
-    def applyMT(v: Array[Double]): Array[Double] = {
-      val out = new Array[Double](n)
-      var i = 0
-      while (i < n) {
-        var s = if (i < 2) v(i) else ma(0) * v(i)
-        if (i + 1 < n && i + 1 >= 2) s += ma(1) * v(i + 1)
-        if (i + 2 < n && i + 2 >= 2) s += ma(2) * v(i + 2)
-        out(i) = s
-        i += 1
-      }
-      out
-    }
-    def applyH(p: Array[Double]): Array[Double] = applyM(solveA(p))
-    def applyHT(v: Array[Double]): Array[Double] = solveAT(applyMT(v))
 
-    // order-1 spline basis, knots every deltaKnot seconds
+    // order-1 spline basis, knots every deltaKnot seconds: basis b covers
+    // samples b*dks - off until b*dks - off + spl.length
     val dks = math.max(1, math.round(deltaKnot / delta).toInt)
     val tri0 = (1 until dks).map(_.toDouble) ++ (dks to 1 by -1).map(_.toDouble)
     val spl0 = tri0.toArray
@@ -108,106 +107,94 @@ object EdaDecompose {
       val mx = out.max
       out.map(_ / mx)
     }
-    val knots = 0 until n by dks
-    val nB = knots.length
+    val nB = (n + dks - 1) / dks
     val off = spl.length / 2
-    def applyB(l: Array[Double]): Array[Double] = {
-      val out = new Array[Double](n)
-      var b = 0
-      while (b < nB) {
-        val base = knots(b)
-        var s = 0
-        while (s < spl.length) {
-          val i = base + s - off
-          if (i >= 0 && i < n) out(i) += spl(s) * l(b)
-          s += 1
-        }
-        b += 1
-      }
-      out
+    // the bases covering sample i are lo(i) to hi(i); both only grow with i
+    def hiAt(i: Int, hi: Int): Int = {
+      var b = hi
+      while (b + 1 < nB && (b + 1) * dks - off <= i) b += 1
+      b
     }
-    def applyBT(v: Array[Double]): Array[Double] = {
-      val out = new Array[Double](nB)
-      var b = 0
-      while (b < nB) {
-        val base = knots(b)
-        var acc = 0.0
-        var s = 0
-        while (s < spl.length) {
-          val i = base + s - off
-          if (i >= 0 && i < n) acc += spl(s) * v(i)
-          s += 1
-        }
-        out(b) = acc
-        b += 1
-      }
-      out
+    def loAt(i: Int, lo: Int): Int = {
+      var b = lo
+      while (b * dks - off + spl.length <= i) b += 1
+      b
     }
-    // trend: ones and ramp
-    def applyC(d: Array[Double]): Array[Double] =
-      Array.tabulate(n)(i => d(0) + d(1) * (i + 1.0) / n)
-    def applyCT(v: Array[Double]): Array[Double] = {
-      var s0 = 0.0; var s1 = 0.0
-      var i = 0
-      while (i < n) { s0 += v(i); s1 += v(i) * (i + 1.0) / n; i += 1 }
-      Array(s0, s1)
+    def applyB(l: Array[Double], i: Int, lo: Int, hi: Int): Double = {
+      var acc = 0.0
+      var b = lo
+      while (b <= hi) { acc += spl(i - b * dks + off) * l(b); b += 1 }
+      acc
     }
 
     // Lipschitz estimate by power iteration on the stacked operator
     var pw = Array.fill(n)(1.0)
     var lEst = 1.0
+    val hpw = new Array[Double](n)
     for (_ <- 0 until 12) {
-      val w = applyHT(applyH(pw))
+      val w = new Array[Double](n)
+      applyH(pw, hpw); applyHT(hpw, w)
       lEst = math.sqrt(w.map(x => x * x).sum)
-      val nrm = math.sqrt(pw.map(x => x * x).sum)
       if (lEst > 0) pw = w.map(_ / math.max(lEst, 1e-12))
       else pw = Array.fill(n)(1.0)
     }
     val bNormSq = spl.map(x => x * x).sum
     val step = 1.0 / (lEst + bNormSq + n + 1.0)
 
-    // FISTA on (p, l, d) — hot loop runs on preallocated buffers (the
-    // tabulate-per-iteration form allocated ~15 arrays x iters per
-    // recording and was GC-bound, not compute-bound).
+    // FISTA on (p, l, d)
     var p = new Array[Double](n)
     var l = new Array[Double](nB)
-    var d = new Array[Double](2)
-    var pv = p.clone(); var lv = l.clone(); var dv = d.clone()
+    val d = new Array[Double](2)
+    val pv = p.clone(); val lv = l.clone(); val dv = d.clone()
     var pNew = new Array[Double](n); var lNew = new Array[Double](nB)
     val dNew = new Array[Double](2)
     val resid = new Array[Double](n)
+    val gl = new Array[Double](nB)
     var tk = 1.0
     var it = 0
     var lastObj = Double.MaxValue
     var done = false
     while (it < iters && !done) {
-      val hp = applyH(pv)
-      val bl = applyB(lv)
-      var i = 0
+      // forward sweep: residual H pv + B lv + C dv - y, and the B^T, C^T
+      // and objective sums over it
       val c0 = dv(0); val c1 = dv(1)
+      val withObj = it % 25 == 24
+      var obj = 0.0
+      var gd0 = 0.0; var gd1 = 0.0
+      java.util.Arrays.fill(gl, 0.0)
+      var q1 = 0.0; var q2 = 0.0 // (A^-1 pv)_{i-1}, _{i-2}
+      var lo = 0; var hi = 0
+      var i = 0
       while (i < n) {
-        resid(i) = hp(i) + bl(i) + c0 + c1 * (i + 1.0) / n - y(i)
+        val q = if (i < 2) pv(i) else (pv(i) - ar1 * q1 - ar2 * q2) / ar0
+        val hp = if (i < 2) q else ma0 * q + ma1 * q1 + ma2 * q2
+        q2 = q1; q1 = q
+        hi = hiAt(i, hi); lo = loAt(i, lo)
+        val r = hp + applyB(lv, i, lo, hi) + c0 + c1 * (i + 1.0) / n - y(i)
+        resid(i) = r
+        if (withObj) obj += r * r
+        var b = lo
+        while (b <= hi) { gl(b) += spl(i - b * dks + off) * r; b += 1 }
+        gd0 += r; gd1 += r * (i + 1.0) / n
         i += 1
       }
       // deterministic early exit: same data -> same trajectory -> same stop
-      if (it % 25 == 24) {
-        var obj = 0.0
-        i = 0
-        while (i < n) { obj += resid(i) * resid(i); i += 1 }
+      if (withObj) {
         if (lastObj - obj < 1e-10 * math.max(obj, 1e-12)) done = true
         lastObj = obj
       }
-      val gp = applyHT(resid)
-      val gl = applyBT(resid)
-      val gd = applyCT(resid)
       val tNew = (1 + math.sqrt(1 + 4 * tk * tk)) / 2
       val mom = (tk - 1) / tNew
-      i = 0
-      while (i < n) {
-        val pn = math.max(0.0, pv(i) - step * (gp(i) + alpha))
+      // backward sweep: p gradient H^T resid, and the projected p step
+      var x1 = 0.0; var x2 = 0.0
+      i = n - 1
+      while (i >= 0) {
+        val gp = atStep(mtAt(resid, i), i, x1, x2)
+        x2 = x1; x1 = gp
+        val pn = math.max(0.0, pv(i) - step * (gp + alpha))
         pNew(i) = pn
         pv(i) = pn + mom * (pn - p(i))
-        i += 1
+        i -= 1
       }
       i = 0
       while (i < nB) {
@@ -216,7 +203,7 @@ object EdaDecompose {
         lv(i) = ln + mom * (ln - l(i))
         i += 1
       }
-      dNew(0) = dv(0) - step * gd(0); dNew(1) = dv(1) - step * gd(1)
+      dNew(0) = dv(0) - step * gd0; dNew(1) = dv(1) - step * gd1
       dv(0) = dNew(0) + mom * (dNew(0) - d(0))
       dv(1) = dNew(1) + mom * (dNew(1) - d(1))
       // swap current/new so no per-iteration allocation occurs
@@ -226,10 +213,15 @@ object EdaDecompose {
       tk = tNew
       it += 1
     }
-    val phasic = applyH(p)
-    val tonic = {
-      val bl = applyB(l); val cd = applyC(d)
-      Array.tabulate(n)(i => bl(i) + cd(i))
+    val phasic = new Array[Double](n)
+    applyH(p, phasic)
+    val tonic = new Array[Double](n)
+    var lo = 0; var hi = 0
+    var i = 0
+    while (i < n) {
+      hi = hiAt(i, hi); lo = loAt(i, lo)
+      tonic(i) = applyB(l, i, lo, hi) + (d(0) + d(1) * (i + 1.0) / n)
+      i += 1
     }
     Result(phasic, p, tonic)
   }

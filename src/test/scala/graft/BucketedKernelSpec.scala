@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.KernelRunner
@@ -227,6 +228,75 @@ class BucketedKernelSpec extends AnyFunSuite {
         }
       }
     } finally spark.conf.set(key, saved)
+  }
+
+  /** Slices placed by a Murmur3 hash of (subject, bucket) (reference): the
+    * runner's placement before slices went to (subject + bucket) mod parts.
+    * Same bucket explode, sort and core rule; emits f's values per core
+    * sample. */
+  private def hashPlaced(rows: DataFrame, bucketLen: Long, halo: Int)(
+      kernel: Array[Double] => Array[Double]): Seq[(Long, Long, Double)] = {
+    import spark.implicits._
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val b = (col("idx") / bucketLen).cast("long")
+    val pos = col("idx") % bucketLen
+    val bucket = explode(array_distinct(array(b,
+      when(pos < halo && b > 0, b - 1).otherwise(b),
+      when(pos >= bucketLen - halo, b + 1).otherwise(b))))
+    rows.select(col("subject").cast("long"), col("idx").cast("long"),
+        col("value").cast("double"))
+      .withColumn("bucket", bucket)
+      .repartition(parts, col("subject"), col("bucket"))
+      .sortWithinPartitions("subject", "bucket", "idx")
+      .as[KernelRunner.Sample]
+      .mapPartitions { it =>
+        val rs = it.buffered
+        Iterator.continually(rs).takeWhile(_.hasNext).flatMap { _ =>
+          val (s, bk) = (rs.head.subject, rs.head.bucket)
+          val run = collection.mutable.ArrayBuffer.empty[KernelRunner.Sample]
+          while (rs.hasNext && rs.head.subject == s && rs.head.bucket == bk) run += rs.next()
+          val out = kernel(run.map(_.value).toArray)
+          run.indices.iterator.filter(i => run(i).idx / bucketLen == bk)
+            .map(i => (s, run(i).idx, out(i)))
+        }
+      }.collect().toSeq.sorted
+  }
+
+  private def recordings(subjects: Seq[Long], n: Int) = {
+    import spark.implicits._
+    (for (s <- subjects; i <- 0 until n) yield
+      (s, i.toLong, math.sin(0.05 * i * s) + 0.3 * math.cos(0.7 * i) + s))
+      .toDF("subject", "idx", "value")
+  }
+
+  test("placement: whole recordings and the buckets of one recording each get a partition") {
+    import spark.implicits._
+    assert(spark.sessionState.conf.numShufflePartitions == 4)
+    // 4 whole recordings (a Murmur3 hash put them on partitions [2,0,0,2])
+    val whole = KernelRunner.perSlice(recordings(1L to 4L, 64)) { s =>
+      Iterator.single(s.subject)
+    }.toDF("subject").select(col("subject"), spark_partition_id().as("pid")).collect()
+    assert(whole.map(_.getLong(0)).sorted.toSeq == (1L to 4L))
+    assert(whole.map(_.getInt(1)).distinct.length == 4)
+    // one recording in 8 buckets touches every partition
+    val bucketLen = 100L
+    val split = KernelRunner.perSlice(recordings(Seq(7L), 800), Some("value"), bucketLen) { s =>
+      Iterator.single(s.idx(s.core.start) / bucketLen)
+    }.toDF("bucket").select(col("bucket"), spark_partition_id().as("pid")).collect()
+    assert(split.map(_.getLong(0)).sorted.toSeq == (0L until 8L))
+    assert(split.map(_.getInt(1)).toSet == Set(0, 1, 2, 3))
+  }
+
+  test("placement: slices by (subject + bucket) mod parts == hash-placed slices") {
+    val df = recordings(Seq(1L, 2L, 5L, 9L, 10L, 33L), 700)
+    val (b, a) = Iir.butter(2, Seq(0.5 / 16.0, 15.0 / 16.0), "bandpass")
+    val kernel = (v: Array[Double]) => Iir.filtfilt(b, a, v)
+    for ((bucketLen, halo) <- Seq((KernelRunner.Whole, 0), (256L, 60))) {
+      val got = KernelRunner.transformValues(df, "value", "y", bucketLen, halo)(kernel)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq.sorted
+      assert(got.length == 6 * 700)
+      assert(got == hashPlaced(df, bucketLen, halo)(kernel), s"bucketLen=$bucketLen")
+    }
   }
 
   test("production defaults satisfy the runner contract") {

@@ -4,6 +4,212 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.kernels.EdaDecompose
 
+/** The cvxEDA kernel in its operator-at-a-time form (reference): every
+  * operator allocates its output and makes its own pass, as the solver did
+  * before its FISTA step became one forward and one backward sweep. The
+  * sweeps must reproduce this bit for bit. */
+object CvxEdaReference {
+  import EdaDecompose.Result
+
+  def cvxEdaKernel(fs: Int, tau0: Double = 2.0, tau1: Double = 0.7,
+      deltaKnot: Double = 10.0, alpha: Double = 8e-4, gamma: Double = 1e-2,
+      iters: Int = 1200)(y: Array[Double]): Result = {
+    val n = y.length
+    if (n < 8) return Result(new Array[Double](n), new Array[Double](n), y.clone())
+    val delta = 1.0 / fs
+    val a1 = 1.0 / math.min(tau1, tau0)
+    val a0 = 1.0 / math.max(tau1, tau0)
+    val den = (a1 - a0) * delta * delta
+    val ar = Array(
+      (a1 * delta + 2.0) * (a0 * delta + 2.0) / den,
+      (2.0 * a1 * a0 * delta * delta - 8.0) / den,
+      (a1 * delta - 2.0) * (a0 * delta - 2.0) / den)
+    val ma = Array(1.0, 2.0, 1.0)
+
+    // A q = p  (rows 0,1 identity; row i>=2: ar0*q_i + ar1*q_{i-1} + ar2*q_{i-2})
+    def solveA(p: Array[Double]): Array[Double] = {
+      val q = new Array[Double](n)
+      q(0) = p(0); if (n > 1) q(1) = p(1)
+      var i = 2
+      while (i < n) {
+        q(i) = (p(i) - ar(1) * q(i - 1) - ar(2) * q(i - 2)) / ar(0)
+        i += 1
+      }
+      q
+    }
+    // A^T x = v (backward substitution)
+    def solveAT(v: Array[Double]): Array[Double] = {
+      val x = new Array[Double](n)
+      var i = n - 1
+      while (i >= 0) {
+        var s = v(i)
+        if (i + 1 < n && i + 1 >= 2) s -= ar(1) * x(i + 1)
+        if (i + 2 < n && i + 2 >= 2) s -= ar(2) * x(i + 2)
+        x(i) = if (i >= 2) s / ar(0) else s
+        i -= 1
+      }
+      x
+    }
+    def applyM(q: Array[Double]): Array[Double] = {
+      val out = new Array[Double](n)
+      out(0) = q(0); if (n > 1) out(1) = q(1)
+      var i = 2
+      while (i < n) {
+        out(i) = ma(0) * q(i) + ma(1) * q(i - 1) + ma(2) * q(i - 2)
+        i += 1
+      }
+      out
+    }
+    def applyMT(v: Array[Double]): Array[Double] = {
+      val out = new Array[Double](n)
+      var i = 0
+      while (i < n) {
+        var s = if (i < 2) v(i) else ma(0) * v(i)
+        if (i + 1 < n && i + 1 >= 2) s += ma(1) * v(i + 1)
+        if (i + 2 < n && i + 2 >= 2) s += ma(2) * v(i + 2)
+        out(i) = s
+        i += 1
+      }
+      out
+    }
+    def applyH(p: Array[Double]): Array[Double] = applyM(solveA(p))
+    def applyHT(v: Array[Double]): Array[Double] = solveAT(applyMT(v))
+
+    // order-1 spline basis, knots every deltaKnot seconds
+    val dks = math.max(1, math.round(deltaKnot / delta).toInt)
+    val tri0 = (1 until dks).map(_.toDouble) ++ (dks to 1 by -1).map(_.toDouble)
+    val spl0 = tri0.toArray
+    val spl = {
+      val m = spl0.length
+      val out = new Array[Double](2 * m - 1)
+      for (i <- 0 until m; j <- 0 until m) out(i + j) += spl0(i) * spl0(j)
+      val mx = out.max
+      out.map(_ / mx)
+    }
+    val knots = 0 until n by dks
+    val nB = knots.length
+    val off = spl.length / 2
+    def applyB(l: Array[Double]): Array[Double] = {
+      val out = new Array[Double](n)
+      var b = 0
+      while (b < nB) {
+        val base = knots(b)
+        var s = 0
+        while (s < spl.length) {
+          val i = base + s - off
+          if (i >= 0 && i < n) out(i) += spl(s) * l(b)
+          s += 1
+        }
+        b += 1
+      }
+      out
+    }
+    def applyBT(v: Array[Double]): Array[Double] = {
+      val out = new Array[Double](nB)
+      var b = 0
+      while (b < nB) {
+        val base = knots(b)
+        var acc = 0.0
+        var s = 0
+        while (s < spl.length) {
+          val i = base + s - off
+          if (i >= 0 && i < n) acc += spl(s) * v(i)
+          s += 1
+        }
+        out(b) = acc
+        b += 1
+      }
+      out
+    }
+    // trend: ones and ramp
+    def applyC(d: Array[Double]): Array[Double] =
+      Array.tabulate(n)(i => d(0) + d(1) * (i + 1.0) / n)
+    def applyCT(v: Array[Double]): Array[Double] = {
+      var s0 = 0.0; var s1 = 0.0
+      var i = 0
+      while (i < n) { s0 += v(i); s1 += v(i) * (i + 1.0) / n; i += 1 }
+      Array(s0, s1)
+    }
+
+    // Lipschitz estimate by power iteration on the stacked operator
+    var pw = Array.fill(n)(1.0)
+    var lEst = 1.0
+    for (_ <- 0 until 12) {
+      val w = applyHT(applyH(pw))
+      lEst = math.sqrt(w.map(x => x * x).sum)
+      if (lEst > 0) pw = w.map(_ / math.max(lEst, 1e-12))
+      else pw = Array.fill(n)(1.0)
+    }
+    val bNormSq = spl.map(x => x * x).sum
+    val step = 1.0 / (lEst + bNormSq + n + 1.0)
+
+    // FISTA on (p, l, d); every operator call allocates its output
+    var p = new Array[Double](n)
+    var l = new Array[Double](nB)
+    var d = new Array[Double](2)
+    var pv = p.clone(); var lv = l.clone(); var dv = d.clone()
+    var pNew = new Array[Double](n); var lNew = new Array[Double](nB)
+    val dNew = new Array[Double](2)
+    val resid = new Array[Double](n)
+    var tk = 1.0
+    var it = 0
+    var lastObj = Double.MaxValue
+    var done = false
+    while (it < iters && !done) {
+      val hp = applyH(pv)
+      val bl = applyB(lv)
+      var i = 0
+      val c0 = dv(0); val c1 = dv(1)
+      while (i < n) {
+        resid(i) = hp(i) + bl(i) + c0 + c1 * (i + 1.0) / n - y(i)
+        i += 1
+      }
+      // deterministic early exit: same data -> same trajectory -> same stop
+      if (it % 25 == 24) {
+        var obj = 0.0
+        i = 0
+        while (i < n) { obj += resid(i) * resid(i); i += 1 }
+        if (lastObj - obj < 1e-10 * math.max(obj, 1e-12)) done = true
+        lastObj = obj
+      }
+      val gp = applyHT(resid)
+      val gl = applyBT(resid)
+      val gd = applyCT(resid)
+      val tNew = (1 + math.sqrt(1 + 4 * tk * tk)) / 2
+      val mom = (tk - 1) / tNew
+      i = 0
+      while (i < n) {
+        val pn = math.max(0.0, pv(i) - step * (gp(i) + alpha))
+        pNew(i) = pn
+        pv(i) = pn + mom * (pn - p(i))
+        i += 1
+      }
+      i = 0
+      while (i < nB) {
+        val ln = lv(i) - step * (gl(i) + gamma * lv(i))
+        lNew(i) = ln
+        lv(i) = ln + mom * (ln - l(i))
+        i += 1
+      }
+      dNew(0) = dv(0) - step * gd(0); dNew(1) = dv(1) - step * gd(1)
+      dv(0) = dNew(0) + mom * (dNew(0) - d(0))
+      dv(1) = dNew(1) + mom * (dNew(1) - d(1))
+      // swap current/new so no per-iteration allocation occurs
+      val tp = p; p = pNew; pNew = tp
+      val tl = l; l = lNew; lNew = tl
+      d(0) = dNew(0); d(1) = dNew(1)
+      tk = tNew
+      it += 1
+    }
+    val phasic = applyH(p)
+    val tonic = {
+      val bl = applyB(l); val cd = applyC(d)
+      Array.tabulate(n)(i => bl(i) + cd(i))
+    }
+    Result(phasic, p, tonic)
+}
+}
+
 class EdaDecomposeSpec extends AnyFunSuite {
 
   private def bateman(t: Double): Double =
@@ -244,5 +450,46 @@ class EdaDecomposeSpec extends AnyFunSuite {
     info(f"long trace: max|dPhasic| = $dPhasic%.2e, max|dTonic| = $dTonic%.2e")
     assert(dPhasic < 0.1, s"phasic delta $dPhasic")
     assert(dTonic < 0.05, s"tonic delta $dTonic")
+  }
+
+  test("the two-sweep FISTA step is bit-identical to the operator-at-a-time form") {
+    def bits(a: Array[Double]) = a.map(java.lang.Double.doubleToRawLongBits).toSeq
+    // deterministic Weyl-sequence noise over a drifting baseline with SCRs
+    def trace(n: Int, fs: Int): Array[Double] = Array.tabulate(n) { i =>
+      val t = i.toDouble / fs
+      2.0 + 0.4 * i / n + 0.5 * bateman(t - 0.2 * n / fs) + 0.3 * bateman(t - 0.6 * n / fs) +
+        0.01 * (((i * 2654435761L) % 1000L) / 1000.0 - 0.5)
+    }
+    val bump = Array.tabulate(480) { i =>
+      val t = i.toDouble / 4
+      2.0 + 0.5 * i / 480 + 0.6 * bateman(t - 30) + 0.8 * bateman(t - 75)
+    }
+    val cases = Seq(
+      ("n=8 fs=4", 4, trace(8, 4)),
+      ("n=9 fs=4", 4, trace(9, 4)),
+      ("n=1001 fs=4", 4, trace(1001, 4)),
+      // at fs=32 one spline basis spans 1277 samples, past the recording
+      ("n=700 fs=32", 32, trace(700, 32)),
+      ("n=1001 fs=32", 32, trace(1001, 32)),
+      ("n=2100 fs=700", 700, trace(2100, 700)),
+      // both take the early exit
+      ("constant", 4, Array.fill(600)(3.25)),
+      ("zero", 4, new Array[Double](600)),
+      ("Bateman", 4, bump))
+    for ((name, fs, y) <- cases) {
+      val want = CvxEdaReference.cvxEdaKernel(fs)(y)
+      val got = EdaDecompose.cvxEdaKernel(fs)(y)
+      assert(bits(got.phasic) == bits(want.phasic), s"phasic differs: $name")
+      assert(bits(got.driver) == bits(want.driver), s"driver differs: $name")
+      assert(bits(got.tonic) == bits(want.tonic), s"tonic differs: $name")
+    }
+    // a short budget stops mid-trajectory, where no early exit hides a drift
+    val y = trace(1001, 4)
+    for (iters <- Seq(1, 2, 24, 25, 26)) {
+      val want = CvxEdaReference.cvxEdaKernel(4, iters = iters)(y)
+      val got = EdaDecompose.cvxEdaKernel(4, iters = iters)(y)
+      assert(bits(got.driver) == bits(want.driver), s"driver differs at iters=$iters")
+      assert(bits(got.tonic) == bits(want.tonic), s"tonic differs at iters=$iters")
+    }
   }
 }

@@ -158,7 +158,8 @@ class PlanContractSpec extends AnyFunSuite {
 
   private def shapeOf(plan: String): (Int, Int, Int) = (
     "(File)?Scan parquet".r.findAllIn(plan).size,
-    "Exchange (hash|range|Single)".r.findAllIn(plan).size,
+    // KernelRunner places its slices by partition id (repartitionById)
+    "Exchange (hash|range|Single|shufflepartitionidpassthrough)".r.findAllIn(plan).size,
     "BroadcastExchange".r.findAllIn(plan).size)
 
   test("golden plan shapes: per-query scan and exchange counts are pinned") {
