@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
 import graft.core.Tables
 import graft.ops.GraphLoop
 
@@ -375,12 +376,12 @@ object Dedup {
       idCol: String): DataFrame = {
     val candIds = cand.select(col("id_a").as(idCol))
       .union(cand.select(col("id_b").as(idCol))).distinct()
-      .localCheckpoint()
+      .pin()
     val gate = rows.sparkSession.conf
       .get("graft.dedup.broadcastIdsMax", BroadcastIdsMax.toString).toLong
     val prune =
       if (candIds.count() <= gate) broadcast(candIds) else candIds
-    rows.join(prune, Seq(idCol), "leftsemi").localCheckpoint()
+    rows.join(prune, Seq(idCol), "leftsemi").pin()
   }
 
   /** Exact Jaccard for given candidate pairs via shingle-equality joins:
@@ -393,7 +394,7 @@ object Dedup {
     // intersection base, the final left join) — materialize the bounded
     // (id_a, id_b) table once instead of re-running the band self-join
     // per consumer.
-    val cand = candRaw.localCheckpoint()
+    val cand = candRaw.pin()
     val candRows = confineToCandidates(rows, cand, idCol)
     val inter = cand
       .join(candRows.select(col(idCol).as("id_a"), col("shingle")), Seq("id_a"))
@@ -433,7 +434,7 @@ object Dedup {
     // lookups, and candidate generation all read the tiny table instead of
     // re-deriving it per consumer. (Per-doc state is the thing that is
     // always safe to pin at 100 TB; per-shingle state is not.)
-    val sigs = signaturesFromRows(rows, idCol, numHashes).localCheckpoint()
+    val sigs = signaturesFromRows(rows, idCol, numHashes).pin()
     val bands = sigs
       .withColumn("band_keys", TextOps.bandKeys(col("mh"), numBands, rowsPerBand))
       .select(col(idCol), col("__set_size"),
@@ -525,7 +526,7 @@ object Dedup {
     val rows = shingleRows(tagged, idCol, textCol, shingleN,
       extraCols = Seq("__side"))
     val sigs = signaturesFromRows(rows, idCol, numHashes,
-      extraKeys = Seq("__side")).localCheckpoint()
+      extraKeys = Seq("__side")).pin()
     def bandsOf(side: Int, as: String) = sigs
       .filter(col("__side") === side)
       .withColumn("band_keys", TextOps.bandKeys(col("mh"), numBands, rowsPerBand))
@@ -612,7 +613,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, maxDf: Int = 10, threshold: Double = 0.5,
       prefixK: Int = 5): DataFrame = {
-    val rows = shingleRows(docs, idCol, textCol, shingleN).localCheckpoint()
+    val rows = shingleRows(docs, idCol, textCol, shingleN).pin()
     val sizes = shingleSetSizes(rows, idCol)
     val dfs = rows.groupBy("shingle").agg(count(lit(1)).as("__df"))
     val rare = rows.join(dfs.filter(col("__df") <= maxDf), Seq("shingle"))
@@ -627,7 +628,7 @@ object Dedup {
       .distinct()
       // Read twice below (id derivation + intersection base) and bounded
       // by N·prefixK·maxDf by the blocking algebra — pin it once.
-      .localCheckpoint()
+      .pin()
     // Confine the exact-intersection join to candidate documents' shingles
     // (semi-join prune), mirroring verifyJaccard: size-gated broadcast of
     // the id set (see [[BroadcastIdsMax]] — on the duplication-saturated
@@ -751,7 +752,7 @@ object Dedup {
     // the df table, and both join sides read it, and recomputing the
     // hash+window subtree per consumer quadrupled q203's cost.
     val fps = winnowingFingerprints(docs, idCol, textCol, k, w)
-      .select(col(idCol), col("h")).distinct().localCheckpoint()
+      .select(col(idCol), col("h")).distinct().pin()
     val sizes = fps.groupBy(col(idCol)).agg(count(lit(1)).as("__sz"))
     val dfTab = fps.groupBy(col("h")).agg(count(lit(1)).as("__df"))
     val rare = fps.join(dfTab, Seq("h")).filter(col("__df") <= maxDf)
@@ -804,7 +805,7 @@ object Dedup {
     // One row per document: localCheckpoint the 60-sum fingerprint
     // aggregation so banding and the two verification re-joins read it
     // instead of re-running the word explosion three times.
-    val fps = simhashFingerprints(docs, idCol, textCol).localCheckpoint()
+    val fps = simhashFingerprints(docs, idCol, textCol).pin()
     fingerprintPairs(fps, idCol, "simhash", numBands, maxHamming)
   }
 
@@ -954,7 +955,7 @@ object Dedup {
     // the slot-match joins (calling minhashPairs + minhashSignatures
     // separately would derive the pipeline twice)
     val rowsR = shingleRows(docs, idCol, textCol, shingleN)
-    val sigsFull = signaturesFromRows(rowsR, idCol, numHashes).localCheckpoint()
+    val sigsFull = signaturesFromRows(rowsR, idCol, numHashes).pin()
     val bandRows = sigsFull
       .withColumn("band_keys",
         TextOps.bandKeys(col("mh"), numBands, numHashes / numBands))
@@ -1080,7 +1081,7 @@ object Dedup {
       threshold: Double = 0.3): DataFrame = {
     val e = minhashPairs(docs, idCol, textCol, shingleN, numHashes,
       numBands, threshold)
-      .select(col("id_a").as("u"), col("id_b").as("v")).localCheckpoint()
+      .select(col("id_a").as("u"), col("id_b").as("v")).pin()
     val nodes = e.select(col("u").as("n")).union(e.select(col("v").as("n")))
       .distinct().agg(count(lit(1)).as("n_nodes"))
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
@@ -1145,9 +1146,9 @@ object Dedup {
       textCol: String, sourceCol: String, gramN: Int = 8): DataFrame = {
     val toks = tokenRows(docs, idCol, textCol,
         Seq(col(sourceCol).as("source")))
-      .localCheckpoint() // token totals + the gram build share one scan
+      .pin() // token totals + the gram build share one scan
     val grams = gramKeys(toks, idCol, gramN)
-      .localCheckpoint() // key census + flag-back share the gram pass
+      .pin() // key census + flag-back share the gram pass
     val spans = spanWalk(grams.join(dupKeys(grams, idCol, Census.Corpus),
       Seq("gk"), "left_semi"), idCol, gramN)
     sourceDupMass(toks, spans, idCol, "n_docs_dup", col("__dup") > 0)
@@ -1178,12 +1179,12 @@ object Dedup {
     val grams = gramKeys(
       tokenRows(docs, idCol, textCol, Seq(col(sourceCol).as("source"))),
       idCol, gramN, carry = Seq("source"))
-      .localCheckpoint() // key census + flag-back share the gram pass
+      .pin() // key census + flag-back share the gram pass
     val sl = spanWalk(grams.join(dupKeys(grams, idCol, census), Seq("gk"),
         "left_semi"), idCol, gramN, carry = Seq("source"))
       .withColumn("len", (col("__e") - col("__s")).cast("long"))
       .withColumn("bucket", length(bin(col("len"))).cast("long"))
-      .localCheckpoint() // span-grain rows feed BOTH rollups
+      .pin() // span-grain rows feed BOTH rollups
     val h = sl.groupBy("source", "bucket")
       .agg(count(lit(1)).as("n_spans"), sum(col("len")).as("span_tokens"),
         max(col("len")).as("max_span_len"))
@@ -1249,10 +1250,10 @@ object Dedup {
       gramN: Int = 8, minSpanLen: Int = 0,
       census: Census = Census.Corpus): DataFrame = {
     val toks = tokenRows(docs, idCol, textCol)
-      .localCheckpoint() // token totals + gram build + rebuild share it
+      .pin() // token totals + gram build + rebuild share it
     val grams =
       if (census == Census.Corpus) gramKeys(toks, idCol, gramN)
-      else gramKeys(toks, idCol, gramN).localCheckpoint()
+      else gramKeys(toks, idCol, gramN).pin()
     val spans = spanWalk(grams.join(dupKeys(grams, idCol, census),
         Seq("gk"), "left_semi"), idCol, gramN)
       .filter(col("__e") - col("__s") >= math.max(minSpanLen, gramN))
@@ -1305,14 +1306,14 @@ object Dedup {
       textCol: String, gramN: Int = 8, minSpanLen: Int = 0,
       maxPasses: Int = 8): DataFrame = {
     var total = removeDupSpans(docs, idCol, textCol, gramN, minSpanLen)
-      .localCheckpoint()
+      .pin()
     var removed = total.agg(coalesce(sum(col("n_removed")), lit(0L)))
       .head().getLong(0)
     var pass = 1
     while (removed > 0 && pass < maxPasses) {
       val nxt = removeDupSpans(
         total.select(col(idCol), col("text_clean").as(textCol)),
-        idCol, textCol, gramN, minSpanLen).localCheckpoint()
+        idCol, textCol, gramN, minSpanLen).pin()
       removed = nxt.agg(coalesce(sum(col("n_removed")), lit(0L)))
         .head().getLong(0)
       pass += 1
@@ -1328,7 +1329,7 @@ object Dedup {
             col("text_clean")), Seq(idCol))
           .select(col(idCol), col("n_tokens"),
             (col("__r0") + col("__r1")).as("n_removed"), col("text_clean"))
-          .localCheckpoint()
+          .pin()
     }
     total
   }
@@ -1356,7 +1357,7 @@ object Dedup {
       flagNum: Int = 1, flagDen: Int = 5): DataFrame = {
     val toks = tokenRows(docs, idCol, textCol,
         Seq(col(sourceCol).as("source")))
-      .localCheckpoint() // token totals + the gram build share one scan
+      .pin() // token totals + the gram build share one scan
     val wk = Window.partitionBy(col(idCol), col("gk"))
     val spans = spanWalk(gramKeys(toks, idCol, gramN)
       .withColumn("__c", count(lit(1)).over(wk))
@@ -1386,7 +1387,7 @@ object Dedup {
       numShards: Int = 4): DataFrame = {
     val grams = gramKeys(tokenRows(docs, idCol, textCol), idCol, gramN)
       .select(col(idCol), col("gk"))
-      .localCheckpoint() // shard censuses + direct census + flag-back
+      .pin() // shard censuses + direct census + flag-back
     writeShardedCensus(grams, idCol, path, numShards)
     val shards = Tables.readStable(docs.sparkSession, path)
     val merged = shards.groupBy("gk").agg(sum(col("c")).as("cm"))
@@ -1540,7 +1541,7 @@ object Dedup {
       Seq(col(sourceCol).as("source")))
     val sg = gramKeys(toks, idCol, gramN, carry = Seq("source"))
       .select(col("source"), col("gk")).distinct()
-      .localCheckpoint() // totals + both sides of the pair join
+      .pin() // totals + both sides of the pair join
     val totals = sg.groupBy("source").agg(count(lit(1)).as("n"))
     sg.as("a")
       .join(sg.as("b"),
@@ -1579,7 +1580,7 @@ object Dedup {
       gramN: Int = 8, dfMax: Int = 8, minShared: Int = 2): DataFrame = {
     val dg = gramKeys(tokenRows(docs, idCol, textCol), idCol, gramN)
       .select(col(idCol), col("gk")).distinct()
-      .localCheckpoint() // df census + both sides of the pair join
+      .pin() // df census + both sides of the pair join
     val rare = dg.groupBy("gk").agg(count(lit(1)).as("__df"))
       .filter(col("__df") >= 2 && col("__df") <= dfMax)
       .select("gk")
@@ -1657,7 +1658,7 @@ object Dedup {
       numBands: Int = 4, threshold: Double = 0.3): DataFrame = {
     val e = minhashPairs(docs, idCol, textCol, shingleN, numHashes,
       numBands, threshold)
-      .select(col("id_a").as("u"), col("id_b").as("v")).localCheckpoint()
+      .select(col("id_a").as("u"), col("id_b").as("v")).pin()
     val deg = e.select(col("u").as("id")).unionAll(e.select(col("v").as("id")))
       .groupBy("id").agg(count(lit(1)).as("deg"))
     val triCorners = e.as("e1")
@@ -1690,7 +1691,7 @@ object Dedup {
       numBands, threshold)
       .select(col("id_a").as("u"), col("id_b").as("v"))
     val dir = e.unionAll(e.select(col("v").as("u"), col("u").as("v")))
-      .localCheckpoint()
+      .pin()
     val deg = dir.groupBy("u").agg(count(lit(1)).as("d"))
     val xy = dir
       .join(deg.select(col("u"), col("d").as("__dx")), Seq("u"))
@@ -1811,7 +1812,7 @@ object Dedup {
     // so pinning its per-shingle rows is per-block-bounded by contract —
     // unlike the unbounded corpus-wide paths, which only pin per-doc state.
     val rows = shingleRows(docs, idCol, textCol, n, extraCols = Seq(blockCol))
-      .localCheckpoint()
+      .pin()
     // Identical a/b subtrees share their shuffle stage under AQE; the size
     // lookups stay separate small aggregations joined post-aggregation (a
     // window-carried count was measured slower — it forces a full sort of
@@ -1858,7 +1859,7 @@ object Dedup {
       concat_ws("\u0001", col(blockCol),
         substring(col(textCol), 1, blockPrefix)).as("block"),
       col(idCol).as("id"), substring(col(textCol), 1, cmpPrefix).as("t"))
-      .localCheckpoint()
+      .pin()
     val okBlocks = keyed.groupBy("block").agg(count(lit(1)).as("__n"))
       .filter(col("__n") > 1 && col("__n") <= maxBlock)
       .select("block")

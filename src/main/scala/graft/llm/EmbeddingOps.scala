@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pin.Syntax
+
 /** Embedding-matrix operators beyond similarity search: storage
   * quantization and spectral diagnostics. Everything here follows the
   * engine's cross-engine determinism discipline — no `round()` on
@@ -168,7 +170,7 @@ object EmbeddingOps {
       // pinned: the mirror union references the triangle twice, and the
       // triangle IS the corpus-scan aggregate — without the barrier the
       // union would run it twice and the halving would be a doubling
-      .localCheckpoint()
+      .pin()
     tri.unionAll(tri.filter(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("cov")))
   }
@@ -309,7 +311,7 @@ object EmbeddingOps {
     graft.functions.VectorExpressions.register(emb.sparkSession)
     val n = emb.select(col(idCol).as("id"), col(embCol).as("emb"))
       .withColumn("n2", VectorOps.normSq(col("emb")))
-      .localCheckpoint() // scanned k times
+      .pin() // scanned k times
     val seed = n.orderBy("id").limit(1).collect().head
     // chosen: (id, coords as exact doubles, n2)
     var chosen = Vector((seed.getLong(0),

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
+
 /** Training-data pipeline operators beyond dedup/similarity: term
   * weighting, retrieval scoring, sequence packing, stratified sampling,
   * repetition filtering, and deterministic sharding.
@@ -74,14 +76,11 @@ object Pipeline {
     // rows are scanned exactly once.
     val perDoc = words.groupBy(col(idCol))
       .agg(count(lit(1)).as("dl"), tfAggs: _*)
-      // NOTE eager materialization: localCheckpoint() runs a job at plan-
-      // construction time and its blocks are not fault-tolerant (executor
-      // loss = unrecomputable). Accepted here, as in Dedup, because the
-      // per-doc table is re-read by the corpus-stats aggregate AND the
-      // scoring join — recomputing the word-row scan twice costs more than
-      // the checkpoint. Not usable from a streaming plan for the same
-      // reason (streaming parity specs cover the stateless ops only).
-      .localCheckpoint()
+      // pinned: the per-doc table is re-read by the corpus-stats aggregate
+      // AND the scoring join, and recomputing the word-row scan twice
+      // costs more than the pin. Not usable from a streaming plan
+      // (streaming parity specs cover the stateless ops only).
+      .pin()
     val statAggs = Seq(count(lit(1)).as("__n"), sum(col("dl")).as("__sum_dl")) ++
       terms.indices.map(i =>
         sum(when(col(s"__tf$i") > 0, 1L).otherwise(0L)).as(s"__df$i"))
@@ -785,7 +784,7 @@ object Pipeline {
     // a token-stream-sized table trades storage for the same q85-shaped
     // second pass the scoring join costs anyway.
     val counts = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("__c12"))
-      .localCheckpoint()
+      .pin()
     val ctx = counts.groupBy("w1")
       .agg(sum(col("__c12")).as("__c1"), count(lit(1)).as("__t1"))
     val cont = counts.groupBy("w2").agg(count(lit(1)).as("__n2"))
@@ -896,7 +895,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_docs"),
         round(graft.core.Det.sumDet(col("__ex"), 6) / count(lit(1)), 6)
           .as("excess_nll"))
-      .localCheckpoint()
+      .pin()
     val mx = perSrc.agg(max(col("excess_nll")).as("__mx"))
     val numbered = perSrc.crossJoin(broadcast(mx))
       .withColumn("__num", round(exp(col("excess_nll") - col("__mx")), 8))
@@ -1183,7 +1182,7 @@ object Pipeline {
     }
     val perDoc = words.groupBy(col(idCol))
       .agg(count(lit(1)).as("dl"), tfAggs: _*)
-      .localCheckpoint()
+      .pin()
     val statAggs = Seq(sum(col("dl")).as("__ct")) ++
       terms.indices.map(i => sum(col(s"__tf$i")).as(s"__cf$i"))
     val corpus = perDoc.agg(statAggs.head, statAggs.tail: _*)
@@ -1217,7 +1216,7 @@ object Pipeline {
         posexplode(TextOps.words(col(textCol))).as(Seq("pos", "w1")))
       .withColumn("w2", lead(col("w1"), 1).over(byPos))
       .filter(col("w2").isNotNull)
-      .localCheckpoint()
+      .pin()
     val top = bg.groupBy("w1", "w2").agg(count(lit(1)).as("__c"))
       .agg(min_by(struct(col("w1"), col("w2")),
         struct(-col("__c"), col("w1"), col("w2"))).as("__p"))
@@ -1243,8 +1242,8 @@ object Pipeline {
     * round r's objective depends on rounds 1..r−1), like the k-center
     * coreset: each round is one anti-join + one map-side-combinable
     * count aggregate + an argmax reduced to a SINGLE collected row; the
-    * covered-word set (≤ vocabulary) is pinned per round. Output per
-    * round: pick, marginal gain, cumulative coverage fraction. */
+    * covered-word set (≤ vocabulary) is pinned per round but the last.
+    * Output per round: pick, marginal gain, cumulative coverage fraction. */
   def maxCoverage(docs: DataFrame, idCol: String, textCol: String,
       k: Int = 5, shingleN: Int = 3): DataFrame = {
     require(k >= 1 && k <= 50, "fixed small round count")
@@ -1257,7 +1256,7 @@ object Pipeline {
       if (shingleN <= 1) array_distinct(TextOps.words(col(textCol)))
       else TextOps.shingles(TextOps.words(col(textCol)), shingleN)
     val dw = docs.select(col(idCol).as("doc"), explode(units).as("word"))
-      .localCheckpoint()
+      .pin()
     val totalWords = dw.select("word").distinct().count()
     var covered: DataFrame = null
     val picks = collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
@@ -1275,9 +1274,12 @@ object Pipeline {
       if (best.isNullAt(0)) exhausted = true
       else {
         picks += ((r, best.getLong(0), best.getLong(1)))
-        val newWords = dw.filter(col("doc") === best.getLong(0)).select("word")
-        covered = (if (covered == null) newWords
-          else covered.union(newWords).distinct()).localCheckpoint()
+        // the k-th pick's covered set is never read: not pinned
+        if (r < k) {
+          val newWords = dw.filter(col("doc") === best.getLong(0)).select("word")
+          covered = (if (covered == null) newWords
+            else covered.union(newWords).distinct()).pin()
+        }
         r += 1
       }
     }

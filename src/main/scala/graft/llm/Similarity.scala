@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
+
 /** Nearest-neighbor search over an `array<float>` embedding column.
   *
   * Every top-k entry point composes the same stages, each defined once
@@ -345,7 +347,7 @@ object Similarity {
       bitsPerBand: Int = 8, dim: Int = 64): DataFrame = {
     val bands = VectorOps.bandDims(numBands, bitsPerBand, dim)
     val candK = bandKeys(candidates, idCol, embCol, "cand_id", bands)
-      .localCheckpoint()
+      .pin()
     val qBase = bandKeys(queries, idCol, embCol, "query_id", bands)
     val probes = qBase
       .select(col("query_id"), col("band_idx"), col("band_key"),
@@ -377,7 +379,7 @@ object Similarity {
       // referenced three times below (lo, sims, final select): pin the
       // one-row-per-doc assignment once, like Dedup.signaturesFromRows,
       // instead of recomputing the centroid fan-out per reference
-      .localCheckpoint()
+      .pin()
     val lo = cells.select(col("cell"), col("id").as("lo_id"),
       col("emb").as("lo_emb"), col("n2").as("lo_n2"))
     val sims = cells.join(lo, Seq("cell"))
@@ -413,7 +415,7 @@ object Similarity {
       .select(col("cell"), col("id").as("idx_id"),
         col("emb").as("idx_emb"), col("n2").as("idx_n2"))
     val newCells = assign(side(newDocs, idCol, embCol, Corpus))
-      .localCheckpoint()
+      .pin()
     val sims = newCells.join(idxCells, Seq("cell"))
       .groupBy(col("cell"), col("id"))
       .agg(max(cos6("emb", "idx_emb", "n2", "idx_n2")).as("max_sim"))
@@ -468,7 +470,7 @@ object Similarity {
       nList: Int = 0, saltCells: Int = 1, targetCellSize: Int = 0): DataFrame = {
     val n = side(emb, idCol, embCol, Corpus)
     val cents = cellSeeds(n, resolveNList(nList, targetCellSize, n.count()))
-    val cells = assignCells(n, cents, col("emb"), col("n2")).localCheckpoint()
+    val cells = assignCells(n, cents, col("emb"), col("n2")).pin()
     val mates = cells.select(col("cell"), col("id").as("nbr_id"),
       col("emb").as("nbr_emb"), col("n2").as("nbr_n2"))
     val joined =
@@ -543,7 +545,7 @@ object Similarity {
       .groupBy(col(idCol), col("nbr_label"))
       .agg(count(lit(1)).as("__c"))
       .withColumn("frac", round(col("__c").cast("double") / k, 6))
-      .localCheckpoint()
+      .pin()
     val lbl = emb.select(col(idCol), col(labelCol).as("label"))
     val nJ = lbl.groupBy("label").agg(count(lit(1)).as("__nj"))
     val sumSelf = frac.join(lbl, Seq(idCol))
@@ -562,7 +564,7 @@ object Similarity {
     val cj = lbl.join(assign, Seq(idCol))
       .groupBy(col("label"), col("pred_label"))
       .agg(count(lit(1)).as("n_confident"))
-      .localCheckpoint()
+      .pin()
     val rowTot = cj.groupBy("label").agg(sum(col("n_confident")).as("__rt"))
     cj.join(broadcast(rowTot), Seq("label"))
       .join(broadcast(tj), Seq("pred_label"))
@@ -939,7 +941,7 @@ object Similarity {
       .join(newCells, Seq("cell"), "left")
       .na.fill(0L, Seq("n_old", "n_new"))
       .withColumn("n_total", col("n_old") + col("n_new"))
-      .localCheckpoint() // nLists rows: totals + the per-cell verdicts
+      .pin() // nLists rows: totals + the per-cell verdicts
     // products in decimal (the q274 discipline): a skewed cell's
     // n_total·nLists wraps in long at N ≳ 4e12 while the DuckDB
     // HUGEINT mirror raises — widen BEFORE the multiply on both engines
@@ -1114,7 +1116,7 @@ object Similarity {
     // nLists rows, read by the broadcast assignment array AND the
     // survivor-centroid side of the search — pinned once
     val cents = cellSeeds(n0.withColumnRenamed("vid", "id"), lists)
-      .localCheckpoint()
+      .pin()
     val centsRow = centArray(cents)
     val all = n0.unionByName(splitSide(newBatch, idCol, embCol))
     // step 1: frozen-quantizer assignment of the full corpus (q305's
@@ -1124,7 +1126,7 @@ object Similarity {
       .join(asg.groupBy("cell").agg(count(lit(1)).as("n_total")),
         Seq("cell"), "left")
       .na.fill(0L, Seq("n_total"))
-      .localCheckpoint() // nLists rows
+      .pin() // nLists rows
     ivfSplitFinish(asg.select("vid", "cell"), all, byCell, cents, lists,
       thrNum, thrDen)
   }
@@ -1161,7 +1163,7 @@ object Similarity {
       .join(embSrc, Seq("vid"))
       .withColumn("mx", fixedPoint(col("emb")))
       .withColumn("mn2", dotLong("mx", "mx"))
-      .localCheckpoint()
+      .pin()
     // step 3b: deterministic seeds — the two lowest-vid members
     val seeds = topK(mem.select(col("cell"), col("vid"), col("mx"), col("mn2")),
         2, "__rn", "cell")(col("vid"))
@@ -1190,7 +1192,7 @@ object Similarity {
       transform(array_sort(collect_list(struct(col("d"), col("sv")))),
         x => x.getField("sv")).as("sv"),
       sum(col("sv") * col("sv")).as("cn2"))
-      .localCheckpoint() // ≤ 2·|flagged| rows
+      .pin() // ≤ 2·|flagged| rows
     // step 3e: Lloyd reassignment against the child centroids
     val re = sub1.join(broadcast(childPivot(children)), Seq("cell"))
       .select(col("vid"), col("cell"), nearerChild.as("sub"))
@@ -1232,7 +1234,7 @@ object Similarity {
     // arrivals assign against the frozen quantizer — the only
     // assignment scan the update runs
     val arrAsg = foldAssignCellPre(splitSide(arrivals, idCol, embCol), "emb",
-      centArray(st.cents)).localCheckpoint()
+      centArray(st.cents)).pin()
     // merged census: persisted totals + one arrival aggregate
     val byCell = st.cells
       .select(col("cell"), col("n_total").as("__n0"))
@@ -1240,7 +1242,7 @@ object Similarity {
         Seq("cell"), "left")
       .na.fill(0L, Seq("__n1"))
       .select(col("cell"), (col("__n0") + col("__n1")).as("n_total"))
-      .localCheckpoint() // nLists rows
+      .pin() // nLists rows
     val asgIds = st.assign.select("vid", "cell")
       .unionByName(arrAsg.select("vid", "cell"))
     val embSrc = splitSide(corpus, idCol, embCol)
@@ -1652,10 +1654,10 @@ object Similarity {
     // is scanned once, not four times.
     val counts = projected.select(col("__g"), cell.cast("long").as("cell"))
       .groupBy("__g", "cell").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .pin()
     val totals = counts.groupBy("__g").agg(sum(col("__c")).as("__n"))
-    // The checkpointed table carries no stats, so hint the broadcasts
-    // explicitly — everything below is groups × 2^bits sized.
+    // Everything below is groups × 2^bits sized: hint the broadcasts, so
+    // they hold also with auto-broadcast off.
     val full = totals
       .withColumn("cell", explode(sequence(lit(0L), lit(nCells - 1L))))
       .join(broadcast(counts), Seq("__g", "cell"), "left")
@@ -1739,7 +1741,7 @@ object Similarity {
     val g = knnGraph(emb, idCol, embCol, k, nList)
       .select(col(idCol).as("p"), col("nbr_id").as("o"),
         (lit(1.0) - col("cos")).as("d"))
-      .localCheckpoint()
+      .pin()
     val kdist = g.groupBy("p").agg(max(col("d")).as("kd"))
     val lrd = g
       .join(kdist.select(col("p").as("o"), col("kd").as("__kdo")), Seq("o"))
@@ -1749,7 +1751,7 @@ object Similarity {
           .as("__sr"))
       .withColumn("lrd", when(col("__sr") > 0.0,
         round(col("__n").cast("double") / col("__sr"), 8)))
-      .localCheckpoint()
+      .pin()
     g.join(lrd.select(col("p").as("o"), col("lrd").as("__lo")), Seq("o"))
       .groupBy("p")
       .agg(count(col("__lo")).as("n_nbrs"),

@@ -10,6 +10,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, Decimal}
 
+import graft.core.Pin.Syntax
+import graft.ops.Hll
+
 /** Text-analysis operators: language ID, quality scoring, token counting.
   * All expression-only (whole-stage codegen), mirrored 1:1 in the DuckDB
   * oracle. Heuristics are the engine's own documented definitions — the
@@ -486,58 +489,24 @@ object TextAnalysis {
   }
 
   /** HyperLogLog distinct-word estimate per source (Flajolet et al. 2007)
-    * — completes the sketch trio (Count-Min q121, Bloom q118): m = 64
-    * registers addressed by the low 6 bits of the portable 60-bit md5
-    * word hash, register value = max leading-zero rank of the remaining
-    * 54 bits, bias-corrected harmonic-mean estimate with the small-range
-    * linear-counting branch.
-    *
-    * Cross-engine EXACT where it matters: ranks come from bin()-length
-    * integer math (no float log2), the harmonic sum is Σ 2^(60-M_j) — one
-    * power-of-two long shift per register, summed through exact decimal —
-    * and only the final estimate touches libm (one ln / one division,
-    * pinned to 4 digits). Scale shape: word-level max collapses map-side
-    * into ≤ m rows per source, then one tiny per-source fold — the
-    * canonical distributed-sketch plan, constant state per source no
-    * matter the corpus size. Exact distinct included for accuracy
-    * reporting (it is the expensive path the sketch replaces at 100 TB).
+    * — completes the sketch trio (Count-Min q121, Bloom q118): the
+    * [[Hll]] registers of the portable 60-bit md5 word hash. Scale shape:
+    * word-level max collapses map-side into ≤ m rows per source, then one
+    * tiny per-source fold — constant state per source no matter the
+    * corpus size. Exact distinct included for accuracy reporting (it is
+    * the expensive path the sketch replaces at 100 TB).
     * Output: (source, n_distinct_exact, zeros, est_distinct). */
   def hllDistinctWords(docs: DataFrame, textCol: String,
       sourceCol: String): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val m = 64
-    val two60 = 1152921504606846976L // 2^60
     val words = docs.select(col(sourceCol).as("source"),
       explode(TextOps.words(col(textCol))).as("__w"))
-    val hashed = words
-      .withColumn("__h", TextOps.wordHash60(col("__w")))
-      .withColumn("__bucket", col("__h").bitwiseAND(lit(m - 1L)))
-      .withColumn("__rest", shiftright(col("__h"), 6))
-      // rank = leading zeros of the 54-bit remainder + 1 = 55 - bitlen
-      .withColumn("__rho", when(col("__rest") === 0L, lit(55))
-        .otherwise(lit(55) - length(bin(col("__rest")))))
-    val regs = hashed.groupBy("source", "__bucket")
-      .agg(max(col("__rho")).as("__m"))
-    val agg = regs.groupBy("source")
-      .agg(count(lit(1)).as("__n_present"),
-        sum(expr("shiftleft(CAST(1 AS BIGINT), 60 - __m)")
-          .cast(DecimalType(38, 0))).as("__psum"))
-      .withColumn("zeros", (lit(m.toLong) - col("__n_present")))
-      .withColumn("__sum_d",
-        (col("__psum") + col("zeros").cast(DecimalType(38, 0)) *
-          lit(two60).cast(DecimalType(38, 0))).cast("double"))
-      // alpha_64 * m^2 = 0.709 * 4096; both factors written as doubles in
-      // the same order on both engines
-      .withColumn("__raw",
-        lit(2904.064) * lit(two60).cast("double") / col("__sum_d"))
-      .withColumn("est_distinct",
-        when(col("__raw") <= lit(2.5 * m) && col("zeros") > 0L,
-          round(lit(m.toDouble) * log(lit(64.0) / col("zeros").cast("double")), 4))
-          .otherwise(round(col("__raw"), 4)))
+    val est = Hll.estimate(Hll.registers(words, Seq("source"),
+      TextOps.wordHash60(col("__w"))), Seq("source"))
     val exact = words.groupBy("source")
       .agg(countDistinct(col("__w")).as("n_distinct_exact"))
-    agg.join(exact, Seq("source"))
-      .select("source", "n_distinct_exact", "zeros", "est_distinct")
+    est.join(exact, Seq("source"))
+      .select(col("source"), col("n_distinct_exact"), col("zeros"),
+        col("est").as("est_distinct"))
   }
 
   def piiScan(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
@@ -770,7 +739,7 @@ object TextAnalysis {
     * and never affects any aggregated value. */
   private[graft] def pinFeatures(rows: DataFrame, width: Int): DataFrame =
     rows.repartition(width, col("__id")).sortWithinPartitions("__id")
-      .localCheckpoint()
+      .pin()
 
   /** Partition width from Catalyst's size estimate: ceil(bytes/32 MB),
     * clamped to [1, 1 << 20]. The estimate is crude (it propagates the
@@ -930,7 +899,7 @@ object TextAnalysis {
       .withColumn("gap", round(abs(col("conf") - col("acc")), 6))
       // ≤ groups·nBins rows over a corpus-scan subtree with two consumers
       // (the ECE rollup and the final join) — materialize once.
-      .localCheckpoint()
+      .pin()
     val ece = perBin.groupBy("source")
       .agg(sum(col("n")).as("__N"),
         graft.core.Det.sumDet(round(col("n") * col("gap"), 6), 6)
@@ -966,7 +935,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("label"), 1L).otherwise(0L)).as("n_keep"))
       .withColumn("__rate", col("n_keep").cast("double") / col("n_docs"))
-      .localCheckpoint()
+      .pin()
     val mx = rates.agg(max(col("__rate")).as("__mx"))
     rates.crossJoin(broadcast(mx))
       .select(col("grp").as(groupCol), col("n_docs"), col("n_keep"),
@@ -1000,7 +969,7 @@ object TextAnalysis {
       .filter(col("prob").isNotNull)
       .withColumn("bin",
         least(floor(col("prob") * nBins), lit(nBins - 1L)).cast("long"))
-      .localCheckpoint()
+      .pin()
     val perBin = rows.groupBy("source", "bin")
       .agg(count(lit(1)).as("n"),
         graft.core.Det.sumDet(col("prob"), 6).as("__sp"),
@@ -1052,7 +1021,7 @@ object TextAnalysis {
     val c = docs.select(col(groupCol).as("grp"),
         explode(TextOps.words(col(textCol))).as("word"))
       .groupBy("grp", "word").agg(count(lit(1)).as("y"))
-      .localCheckpoint()
+      .pin()
     val w = c.groupBy("word").agg(sum(col("y")).as("__yw"))
       .filter(col("__yw") >= minCount)
     val g = c.groupBy("grp").agg(sum(col("y")).as("__ni"))
@@ -1113,7 +1082,7 @@ object TextAnalysis {
         col("__w"))
       .groupBy(col(idCol), col("__b"), col("__w"))
       .agg(count(lit(1)).as("__c"))
-      .localCheckpoint() // gap join + norms share one token scan
+      .pin() // gap join + norms share one token scan
     val norms = counts.groupBy(col(idCol), col("__b"))
       .agg(sum(col("__c") * col("__c")).as("__n2"))
     val dots = counts.as("a")
@@ -1171,7 +1140,7 @@ object TextAnalysis {
       .filter(col("w2").isNotNull)
       .groupBy(col("grp"), col("word").as("w1"), col("w2"))
       .agg(count(lit(1)).as("c12"))
-      .localCheckpoint()
+      .pin()
     val ctx = bg.groupBy("grp", "w1").agg(sum(col("c12")).as("__c1"))
     val bn = bg.groupBy("grp").agg(sum(col("c12")).as("n_bigrams"))
     val hCond = bg.join(ctx, Seq("grp", "w1"))
@@ -1488,7 +1457,7 @@ object TextAnalysis {
       pmod(col(idCol), lit(numShards.toLong)).as("shard"),
       explode(TextOps.words(col(textCol))).as("word"))
     val counts = words.groupBy("shard", "word")
-      .agg(count(lit(1)).as("c")).localCheckpoint()
+      .agg(count(lit(1)).as("c")).pin()
     def summarize(df: DataFrame, grpCol: Option[String], est: Column,
         word: Column): DataFrame = {
       val part = grpCol.map(g => Window.partitionBy(g))
@@ -1539,7 +1508,7 @@ object TextAnalysis {
       .filter(col("__c") >= minCount)
       .withColumn("nid",
         row_number().over(Window.orderBy("word")).cast("long"))
-      .localCheckpoint()
+      .pin()
     val byPos = Window.partitionBy(idCol).orderBy("pos")
     val adj = words
       .withColumn("w2", lead(col("word"), 1).over(byPos))
@@ -1638,7 +1607,7 @@ object TextAnalysis {
     // and the scalars — checkpointed so the corpus scans stay at the
     // 2-scan floor (per-occurrence hashes + this count pass)
     val truth = toks.groupBy("word").agg(count(lit(1)).as("true_count"))
-      .localCheckpoint()
+      .pin()
     val stats = truth.agg(sort_array(collect_list(col("word"))).as("__v"),
       count(lit(1)).as("__vn"), sum(col("true_count")).as("__n"))
     val reported = toks.crossJoin(broadcast(stats))
@@ -1680,7 +1649,7 @@ object TextAnalysis {
       .select(col(idCol), col("margin"))
       .filter(col("margin").isNotNull)
       .withColumn("__cal", pmod(col(idCol), lit(5L)) =!= 0L)
-      .localCheckpoint()
+      .pin()
     val cal = scored.filter(col("__cal"))
       .withColumn("__rn", row_number().over(
         Window.orderBy(col("margin"), col(idCol))))

@@ -2,6 +2,7 @@ package graft.ops
 
 import scala.collection.mutable.{ArrayBuilder, HashMap, LongMap}
 import scala.reflect.ClassTag
+import scala.util.chaining._
 
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
@@ -9,18 +10,19 @@ import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.serializer.KryoSerializer
 import org.apache.spark.sql.{classic, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+
+import graft.core.Pin
+import graft.core.Pin.Syntax
 
 /** The one loop behind the iterative graph algorithms (PageRank and HITS
   * here; label propagation, the k-core peel and connected components in
   * [[graft.llm.Dedup]]). It owns every decision those loops share:
   *
-  *  - The edge pin: ONE eager `localCheckpoint` of the (src, dst) longs,
+  *  - The edge pin: ONE [[graft.core.Pin]] of the (src, dst) longs,
   *    repartitioned by `dst`, the gather key, to `defaultParallelism`
   *    (a fixed width, not AQE-coalesced: the q203 trap).
   *  - The node gate: one bounded collect (`limit(gate + 1)`) of every node
@@ -41,9 +43,8 @@ import org.apache.spark.sql.types.LongType
   *    message shuffle. It applies the one pin cadence: a table a round
   *    reads twice (its scalar, then its update) is pinned; otherwise the
   *    state is pinned every 2nd round, when the next round starts, so the
-  *    final round's state is never pinned. Keyed pins are eager RDD
-  *    `localCheckpoint`s: the job that fills each one runs on the calling
-  *    thread, never on a broadcast-exchange thread (the r17 deadlock).
+  *    final round's state is never pinned. Keyed pins are
+  *    [[graft.core.Pin.fill]]s, one job each on the calling thread.
   *
   * An algorithm is written once, as its [[Round]], and both executors run
   * that round. Results leave either executor as RDD rows, never as an
@@ -106,7 +107,7 @@ object GraphLoop {
   def open(edges: DataFrame, gate: Long, marks: DataFrame = null): Graph = {
     val e = edges.select(col("src").cast("long"), col("dst").cast("long"))
       .repartition(edges.sparkSession.sparkContext.defaultParallelism,
-        col("dst")).localCheckpoint()
+        col("dst")).pin()
     val ends = e.select(col("src").as("node"), lit(1L).as("o"),
         lit(0L).as("i"), lit(0).as("m"))
       .unionAll(e.select(col("dst"), lit(0L), lit(1L), lit(0)))
@@ -165,10 +166,9 @@ object GraphLoop {
       rowCount: Option[Long] = None): DataFrame = {
     val spark = e.sparkSession.asInstanceOf[classic.SparkSession]
     val out = Seq("node", "s", "x").map(AttributeReference(_, LongType, nullable = false)())
-    val stats = rowCount.map(n => Statistics(BigInt(n) * NodeRowBytes, Some(BigInt(n))))
-    val plan = LogicalRDD(out, blocks.flatMap(b =>
-      b.ids.indices.iterator.map(i => InternalRow(b.ids(i), b.s(i), b.x(i)))))(spark, stats)
-    new classic.Dataset[Row](spark, plan, ExpressionEncoder(plan.schema))
+    Pin.relation(spark, LogicalRDD(out, blocks.flatMap(b =>
+      b.ids.indices.iterator.map(i => InternalRow(b.ids(i), b.s(i), b.x(i)))))(spark),
+      rowCount.map(n => (n, n * NodeRowBytes)))
   }
 
   private final class OnDriver(val edges: DataFrame, table: Array[Node])
@@ -212,15 +212,14 @@ object GraphLoop {
     /** Hash-partitions by node, the placement of every keyed table. */
     private def shuffle[V: ClassTag](rdd: RDD[(Long, V)]): RDD[(Long, V)] =
       new ShuffledRDD[Long, V, V](rdd, part).setSerializer(kryo)
-    private val ends = pin(shuffle(table.rdd.map(r => (r.getLong(0), node(r)))).values)
+    private val ends = shuffle(table.rdd.map(r => (r.getLong(0), node(r)))).values
+      .tap(Pin.fill(_)(_.size))
     lazy val n = ends.filter(inGraph).count()
     lazy val marks = ends.filter(_._4).count()
     private val byScatter = HashMap.empty[Boolean, RDD[(Array[Int], Array[Long])]]
     private var state: RDD[Block] = _
     private var steps = 0
     private var cheap = true // the state is a map over a pinned table
-
-    private def pin[T](rdd: RDD[T]): RDD[T] = { rdd.localCheckpoint().count(); rdd }
 
     def start(init: (Long, Long, Long, Boolean) => (Long, Long)): Unit =
       state = ends.mapPartitions(it => Iterator.single(block(it.toArray, init)))
@@ -231,13 +230,13 @@ object GraphLoop {
     private def edgeBlocks(reverse: Boolean) =
       byScatter.getOrElseUpdate(reverse, {
         val (a, c) = if (reverse) (1, 0) else (0, 1)
-        pin(shuffle(edges.queryExecution.toRdd.map(row => (row.getLong(a), row.getLong(c))))
+        shuffle(edges.queryExecution.toRdd.map(row => (row.getLong(a), row.getLong(c))))
           .zipPartitions(state) { (it, bs) =>
             val ids = bs.next().ids
             val (u, d) = (new ArrayBuilder.ofInt, new ArrayBuilder.ofLong)
             it.foreach { case (x, y) => u += idx(ids, x); d += y }
             Iterator.single((u.result(), d.result()))
-          })
+          }.tap(Pin.fill(_)(_.size))
       })
 
     def step[M](r: Round[M]): Long =
@@ -258,15 +257,15 @@ object GraphLoop {
 
     private def advance[M](r: Round[M], msgs: RDD[(Long, M)]): Long = {
       implicit val tag: ClassTag[M] = r.tag
-      if (!cheap && steps % 2 == 0) pin(state)
+      if (!cheap && steps % 2 == 0) Pin.fill(state)(_.size)
       val joined = state.zipPartitions(shuffle(msgs)) { (bs, ms) =>
         val b = bs.next()
         Iterator.single((b, fold(r, b.ids.length, ms, idx(b.ids, _))))
       }
       // a scalar round reads `joined` twice; its tally job fills the pin
       val g = if (!r.scalar) 0L
-        else joined.localCheckpoint().map { case (b, in) => tally(r, b, in) }
-          .fold(0L)((t, u) => Math.addExact(t, u))
+        else Pin.fill(joined)(_.foldLeft(0L) { case (t, (b, in)) =>
+          Math.addExact(t, tally(r, b, in)) }).foldLeft(0L)(Math.addExact(_, _))
       state = joined.map { case (b, in) => update(r, b, in, g) }
       steps += 1
       cheap = r.scalar

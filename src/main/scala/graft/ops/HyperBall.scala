@@ -2,7 +2,9 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+
+import graft.core.Pin.Syntax
+import graft.llm.TextOps
 
 /** HyperBall (Boldi & Vigna, "In-Core Computation of Geometric
   * Centralities with HyperBall", 2013): the neighborhood function N(t)
@@ -23,44 +25,22 @@ import org.apache.spark.sql.types.DecimalType
   * The audit joins each HLL ball estimate against the exact ball size
   * (iterated distinct expansion — affordable on the sparse bounded dup
   * graph; the register side is the 100 TB path). Iteration state is
-  * localCheckpoint-pinned: flat lineage.
+  * pinned: flat lineage.
   */
 object HyperBall {
 
-  private val M = 64L
-  private val Two60 = 1152921504606846976L // 2^60
+  /** The 60-bit hash each node observes itself with. */
+  private val selfHash = TextOps.wordHash60(concat(lit("hb:"), col("v").cast("string")))
 
-  /** (v, bucket, m) initial registers: each node observes itself. */
-  private def regsOf(nodes: DataFrame): DataFrame = {
-    val hv = conv(substr(md5(concat(lit("hb:"), col("v").cast("string"))),
-      lit(1), lit(15)), 16, 10).cast("long")
-    nodes.withColumn("__hv", hv)
-      .select(col("v"), col("__hv").bitwiseAND(lit(M - 1L)).as("bucket"),
-        when(shiftright(col("__hv"), 6) === 0L, lit(55))
-          .otherwise(lit(55) - length(bin(shiftright(col("__hv"), 6))))
-          .as("m"))
-  }
+  /** (v, bucket, m) initial registers of the `v` rows: each node observes
+    * itself. */
+  private def regsOf(nodes: DataFrame): DataFrame =
+    Hll.registers(nodes, Seq("v"), selfHash)
 
-  /** Per-node HLL estimate from register rows — q139's estimator
-    * (alpha_64·m² = 2904.064, small-range linear counting), association
-    * order identical to the oracle SQL. */
-  private def estimate(regs: DataFrame): DataFrame =
-    regs.groupBy("v")
-      .agg(count(lit(1)).as("__np"),
-        sum(expr("shiftleft(CAST(1 AS BIGINT), 60 - m)")
-          .cast(DecimalType(38, 0))).as("__psum"))
-      .withColumn("__zeros", lit(M) - col("__np"))
-      .withColumn("__sum_d",
-        (col("__psum") + col("__zeros").cast(DecimalType(38, 0)) *
-          lit(Two60).cast(DecimalType(38, 0))).cast("double"))
-      .withColumn("__raw",
-        lit(2904.064) * lit(Two60).cast("double") / col("__sum_d"))
-      .withColumn("est",
-        when(col("__raw") <= lit(160.0) && col("__zeros") > 0L,
-          round(lit(64.0) *
-            log(lit(64.0) / col("__zeros").cast("double")), 4))
-          .otherwise(round(col("__raw"), 4)))
-      .select(col("v"), col("est"))
+  /** Both directions of every (id_a, id_b) pair as (s, d) edges. */
+  private def dirEdges(pairs: DataFrame): DataFrame =
+    pairs.select(col("id_a").as("s"), col("id_b").as("d"))
+      .unionByName(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
 
   /** One register-propagation round: every node folds its in-neighbors'
     * registers in by MAX — the HyperBall iteration step, shared by the
@@ -75,17 +55,14 @@ object HyperBall {
     * exact ball size, and the mean absolute per-node error. */
   def neighborhoodFunction(s: SparkSession, pairs: DataFrame,
       iters: Int = 2): DataFrame = {
-    val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-      .unionByName(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
-      .localCheckpoint()
-    val nodes = edges.select(col("s").as("v")).distinct().localCheckpoint()
-
-    var regs = regsOf(nodes).localCheckpoint()
-    var ball = nodes.select(col("v"), col("v").as("u")).localCheckpoint()
+    val edges = dirEdges(pairs).pin()
+    // one register row per node: the registers are also the node set
+    var regs = regsOf(edges.select(col("s").as("v"))).pin()
+    var ball = regs.select(col("v"), col("v").as("u")).pin()
 
     def snapshot(t: Int): DataFrame = {
       val exact = ball.groupBy("v").agg(count(lit(1)).as("__c"))
-      estimate(regs).join(exact, Seq("v"))
+      Hll.estimate(regs, Seq("v")).join(exact, Seq("v"))
         .withColumn("__err",
           round(abs(col("est") - col("__c").cast("double")), 4))
         .agg(count(lit(1)).as("n_nodes"),
@@ -108,12 +85,12 @@ object HyperBall {
       // with zero recompute (r20 session 2, guide §2.4).
       val last = t == iters
       val regsNext = step(regs, edges)
-      regs = if (last) regsNext else regsNext.localCheckpoint()
+      regs = if (last) regsNext else regsNext.pin()
       val ballNext = ball
         .unionByName(edges.join(ball, edges("s") === ball("v"))
           .select(edges("d").as("v"), ball("u")))
         .distinct()
-      ball = if (last) ballNext else ballNext.localCheckpoint()
+      ball = if (last) ballNext else ballNext.pin()
       snaps += snapshot(t)
     }
     snaps.reduce(_ unionByName _)
@@ -142,12 +119,9 @@ object HyperBall {
         pmod(conv(substr(md5(concat(col("id_a").cast("string"), lit(":"),
           col("id_b").cast("string"))), lit(1), lit(8)), 16, 10)
           .cast("long"), lit(2L)))
-    def dirEdges(pp: DataFrame) =
-      pp.select(col("id_a").as("s"), col("id_b").as("d"))
-        .unionByName(pp.select(col("id_b").as("s"), col("id_a").as("d")))
-    val e1 = dirEdges(p.filter(col("__batch") === 0L)).localCheckpoint()
-    val e2 = dirEdges(p.filter(col("__batch") === 1L)).localCheckpoint()
-    val eAll = e1.unionByName(e2).localCheckpoint()
+    val e1 = dirEdges(p.filter(col("__batch") === 0L)).pin()
+    val e2 = dirEdges(p.filter(col("__batch") === 1L)).pin()
+    val eAll = e1.unionByName(e2).pin()
     def r1Of(e: DataFrame) =
       step(regsOf(e.select(col("s").as("v")).distinct()), e)
     // batch 1: t=1 registers → parquet (the crawl checkpoint)
@@ -155,8 +129,8 @@ object HyperBall {
     // batch 2 arrives: reload + register-MAX merge of ITS t=1 registers,
     // then one more propagation round on the full union edge set
     val merged1 = graft.core.Tables.readStable(s, persistPath).unionByName(r1Of(e2))
-      .groupBy("v", "bucket").agg(max(col("m")).as("m")).localCheckpoint()
-    val incr2 = step(merged1, eAll).localCheckpoint()
+      .groupBy("v", "bucket").agg(max(col("m")).as("m")).pin()
+    val incr2 = step(merged1, eAll).pin()
     val direct2 = step(step(
       regsOf(eAll.select(col("s").as("v")).distinct()), eAll), eAll)
     val cmp = incr2.select(col("v"), col("bucket"), col("m").as("__mi"))
@@ -167,7 +141,7 @@ object HyperBall {
         sum(when(col("__mi") <=> col("__md"), 1L).otherwise(0L))
           .as("n_eq_registers"),
         sum(when(col("__mi").isNotNull, 1L).otherwise(0L)).as("__n_incr"))
-    cmp.crossJoin(broadcast(estimate(incr2)
+    cmp.crossJoin(broadcast(Hll.estimate(incr2, Seq("v"))
         .agg(count(lit(1)).as("n_nodes"),
           round(graft.core.Det.avgDet(col("est"), 4), 4).as("avg_est_t2"))))
       .select(col("n_nodes"), col("n_registers"), col("n_eq_registers"),

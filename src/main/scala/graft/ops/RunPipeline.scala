@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.core.KernelRunner
+import graft.core.Pin.Syntax
 import graft.io.{Edf, Readers}
 import graft.io.Readers.FileSource
 import graft.kernels.{BeatDetectors, Decimate, Iir, PpgDetectors}
@@ -65,7 +66,7 @@ object RunPipeline {
         }
       } else // PPG/BVP: van Gent adaptive-threshold detection (PPG.py)
         PpgDetectors.vanGent(signal, fs).select("subject", "idx")
-      ).localCheckpoint()
+      ).pin()
     val annotated = signal
       .join(beats.withColumn("beat", lit(1)), Seq("subject", "idx"), "left")
       .withColumn("artifact", lit(null).cast("int"))

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
 import graft.core.Tables
 import graft.llm.{Dedup, EmbeddingOps, Multimodal, Pipeline, Similarity, TextAnalysis, TextOps, VectorOps}
 
@@ -280,12 +281,12 @@ object LlmDedupQueries {
         .select(col("source"), substring(md5(col("g")), 1, 16).as("gk"))
         .distinct()
         .withColumn("__h", TextOps.wordHash60(col("gk")))
-        .localCheckpoint() // sketch side and exact side share one scan
+        .pin() // sketch side and exact side share one scan
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("__h"), col("gk"))
       val ret = sh.withColumn("__rnk", row_number().over(w))
         .filter(col("__rnk") <= k)
-        .localCheckpoint() // bounded sources x k rows; three consumers
+        .pin() // bounded sources x k rows; three consumers
       val kth = ret.filter(col("__rnk") === k)
         .select(col("source"), col("__h").as("__kth"))
       val pairsSrc = broadcast(kth.select(col("source").as("src_a"),
@@ -603,14 +604,14 @@ object LlmDedupQueries {
           substring(md5(col("g")), 1, 16).as("gk"))
         .distinct()
         .withColumn("__h", TextOps.wordHash60(col("gk")))
-        .localCheckpoint() // shard sketches + direct side share one scan
+        .pin() // shard sketches + direct side share one scan
       val ws = org.apache.spark.sql.expressions.Window
         .partitionBy("shard", "source").orderBy(col("__h"), col("gk"))
       graft.core.Tables.writeSmall(
         sh.withColumn("__rnk", row_number().over(ws))
           .filter(col("__rnk") <= k)
           .select("shard", "source", "gk", "__h"), path)
-      val shards = graft.core.Tables.readStable(s, path).localCheckpoint()
+      val shards = graft.core.Tables.readStable(s, path).pin()
       val wm = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("__h"), col("gk"))
       def bottomK(df: DataFrame) = df.select("source", "gk", "__h")

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
 import graft.core.Tables
 import graft.llm.{Dedup, EmbeddingOps, Multimodal, Pipeline, Similarity, TextAnalysis, TextOps, VectorOps}
 
@@ -120,7 +121,7 @@ object LlmGovernanceQueries {
       val base = Tables.documents(s, dir).select(col("source"), col("doc_id"),
         length(col("text")).cast("double").as("len"),
         md5(concat(lit("bk1"), col("doc_id").cast("string"))).as("__h"))
-        .localCheckpoint()
+        .pin()
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("source").orderBy(col("__h"), col("doc_id"))
       val samp = base.withColumn("__rnk", row_number().over(w))
@@ -157,7 +158,7 @@ object LlmGovernanceQueries {
       val freq = Tables.documents(s, dir)
         .select(explode(TextOps.words(col("text"))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n_exact"))
-        .localCheckpoint() // sketch build + top-20 probe share one scan
+        .pin() // sketch build + top-20 probe share one scan
       val base =
         conv(substr(md5(col("word")), lit(1), lit(8)), 16, 10).cast("long")
       def bucketOf(j: Int) =
@@ -264,7 +265,7 @@ object LlmGovernanceQueries {
         .withColumn("__sat",
           col("cap_tokens") * (col("__k") - col("__i") + lit(1L)) <=
             col("__B") - (col("__pref") - col("cap_tokens")))
-        .localCheckpoint() // bounded |sources| rows; two consumers
+        .pin() // bounded |sources| rows; two consumers
       val mrow = ranked.agg(
         max(when(col("__sat"), col("__i")).otherwise(0L)).as("__m"),
         max(when(col("__sat"), col("__pref")).otherwise(0L)).as("__pm"))
@@ -292,7 +293,7 @@ object LlmGovernanceQueries {
       val freq = Tables.documents(s, dir)
         .select(col("source"), explode(TextOps.words(col("text"))).as("w"))
         .groupBy("source", "w").agg(count(lit(1)).as("c"))
-        .localCheckpoint() // sketch and exact sides share the vocab scan
+        .pin() // sketch and exact sides share the vocab scan
       val signs = freq.select(col("source"), col("c"), posexplode(
         array((0 until nEst).map { j =>
           (lit(1L) - lit(2L) * TextOps.wordHash60(
@@ -648,7 +649,7 @@ object LlmGovernanceQueries {
         .withColumn("__t2", round(col("__t") * col("__t"), 8))
         .withColumn("__t3", round(col("__t2") * col("__t"), 8))
         .withColumn("__t4", round(col("__t3") * col("__t"), 8))
-        .localCheckpoint() // shard side + direct side share one scan
+        .pin() // shard side + direct side share one scan
       def dsum8(c: org.apache.spark.sql.Column) =
         sum(c.cast(DecimalType(24, 8)))
       graft.core.Tables.writeSmall(

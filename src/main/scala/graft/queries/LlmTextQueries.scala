@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Pin.Syntax
 import graft.core.Tables
 import graft.llm.{Dedup, EmbeddingOps, Multimodal, Pipeline, Similarity, TextAnalysis, TextOps, VectorOps}
 
@@ -167,7 +168,7 @@ object LlmTextQueries {
       val scored = Pipeline.bigramLmScore(docs, "doc_id", "text")
         .join(docs.select("doc_id", "lang"), Seq("doc_id"))
         .filter(col("avg_nll").isNotNull)
-        .localCheckpoint()
+        .pin()
       val th = scored.groupBy("lang")
         .agg(graft.ops.Quantiles.pcts(s, col("avg_nll"),
           Seq(1.0 / 3, 2.0 / 3)).as("__t"))
@@ -202,7 +203,7 @@ object LlmTextQueries {
           length(col("text")).cast("double").as("len"))
         .withColumn("__rnk", row_number().over(w))
         .filter(col("__rnk") <= k + 1)
-        .localCheckpoint() // the threshold row and the top-k share it
+        .pin() // the threshold row and the top-k share it
       val thr = ranked.filter(col("__rnk") === k + 1)
         .select(col("source"), col("len").as("__xk"))
       ranked.filter(col("__rnk") <= k)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Pin.Syntax
 import graft.core.{Det, Tables}
-import graft.ops.{AsofJoin, Quantiles}
+import graft.ops.{AsofJoin, Hll, Quantiles}
 
 /** Relational operator suite over the driver tables — each entry implements
   * one declared query class from SURVEY §5.2 / BASELINE.md and has a
@@ -586,39 +587,19 @@ object Relational {
     // report.
     "q168_hll_merge" -> ((s, dir) => {
       val ev = Tables.events(s, dir)
-      val two60 = 1152921504606846976L // 2^60
-      val h = conv(substr(md5(concat(lit("u:"),
-        col("user_id").cast("string"))), lit(1), lit(15)), 16, 10)
-        .cast("long")
+      val h = graft.llm.TextOps.wordHash60(concat(lit("u:"), col("user_id").cast("string")))
       val base = ev
         .select(expr(s"ts_us div $DAY_US").as("day"), col("user_id"))
         .withColumn("week", expr("day div 7"))
-        .withColumn("__h", h)
-        .withColumn("__bucket", col("__h").bitwiseAND(lit(63L)))
-        .withColumn("__rho", when(shiftright(col("__h"), 6) === 0L, lit(55))
-          .otherwise(lit(55) - length(bin(shiftright(col("__h"), 6)))))
-      val daily = base.groupBy("week", "day", "__bucket")
-        .agg(max("__rho").as("__m"))
-      val weekly = daily.groupBy("week", "__bucket").agg(max("__m").as("__m"))
-      val est = weekly.groupBy("week")
-        .agg(count(lit(1)).as("__n_present"),
-          sum(expr("shiftleft(CAST(1 AS BIGINT), 60 - __m)")
-            .cast(DecimalType(38, 0))).as("__psum"))
-        .withColumn("zeros", lit(64L) - col("__n_present"))
-        .withColumn("__sum_d",
-          (col("__psum") + col("zeros").cast(DecimalType(38, 0)) *
-            lit(two60).cast(DecimalType(38, 0))).cast("double"))
-        .withColumn("__raw",
-          lit(2904.064) * lit(two60).cast("double") / col("__sum_d"))
-        .withColumn("est_distinct",
-          when(col("__raw") <= lit(160.0) && col("zeros") > 0L,
-            round(lit(64.0) * log(lit(64.0) / col("zeros").cast("double")), 4))
-            .otherwise(round(col("__raw"), 4)))
+      val daily = Hll.registers(base, Seq("week", "day"), h)
+      val weekly = daily.groupBy("week", "bucket").agg(max("m").as("m"))
+      val est = Hll.estimate(weekly, Seq("week"))
       val exact = base.groupBy("week")
         .agg(countDistinct(col("user_id")).as("n_users_exact"),
           countDistinct(col("day")).as("n_days"))
       est.join(exact, Seq("week"))
-        .select("week", "n_days", "n_users_exact", "zeros", "est_distinct")
+        .select(col("week"), col("n_days"), col("n_users_exact"), col("zeros"),
+          col("est").as("est_distinct"))
     }),
 
     // New-vs-returning split per day: an event is "new" iff its user's
@@ -862,7 +843,7 @@ object Relational {
       val daily = ev
         .groupBy(col("event_type"), expr(s"ts_us div $DAY_US").as("day"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint()
+        .pin()
       val pairs = daily
         .select(col("event_type"), col("day").as("di"), col("n").as("vi"))
         .join(daily.select(col("event_type"), col("day").as("dj"),
@@ -1069,7 +1050,7 @@ object Relational {
           col("source"))
         .groupBy("lang", "size_bucket", "source")
         .agg(count(lit(1)).as("__ncs"))
-        .localCheckpoint() // class totals + source totals + grid side
+        .pin() // class totals + source totals + grid side
       val cls = cs.groupBy("lang", "size_bucket")
         .agg(sum(col("__ncs")).as("__nc"))
       val src = cs.groupBy("source").agg(sum(col("__ncs")).as("__ns"))
@@ -1105,12 +1086,12 @@ object Relational {
       // two-level-median floor — instead of 4)
       val med = d.groupBy("source")
         .agg(Quantiles.pct(s, col("n_chars"), 0.5).as("__med"))
-        .localCheckpoint()
+        .pin()
       val mad = d.join(broadcast(med), Seq("source"))
         .groupBy("source")
         .agg(Quantiles.pct(s, abs(col("n_chars") - col("__med")), 0.5)
           .as("__mad"))
-        .localCheckpoint()
+        .pin()
       d.join(broadcast(med), Seq("source"))
         .join(broadcast(mad), Seq("source"))
         .withColumn("__mz", when(col("__mad") > 0.0,
@@ -1258,7 +1239,7 @@ object Relational {
       val g = Tables.documents(s, dir)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("__s"))
-        .localCheckpoint()
+        .pin()
       val tot = g.agg(sum(col("n_docs")).as("__tn"),
         sum(col("__s")).as("__ts"), count(lit(1)).as("__g"))
       g.crossJoin(broadcast(tot))

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.core.Pin.Syntax
+
 /** Structured Streaming variant of the sliding-window SQA aggregation
   * (SURVEY §2.8 — the reference is pure batch; this is the engine's
   * incremental extension, same window expressions + a watermark).
@@ -815,7 +817,7 @@ object StreamingSqa {
         "writeSpanCensusShard (gk, c) layout")
     val dupKeys = graft.llm.Dedup.mergedDupKeys(census)
       .withColumn("__hit", lit(1))
-      .localCheckpoint()
+      .pin()
     val w = col("__w")
     // one struct per token: the word + the gram key of the window
     // STARTING here (null for the last gramN-1 positions)

@@ -13,12 +13,19 @@ class HarnessSpec extends AnyFunSuite {
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("an RDD persisted before isolated survives it") {
+    // only this case's own RDDs are compared: isolated's clearCache drops
+    // CacheManager persists an earlier suite may have left behind
+    val start = persisted
     val kept = spark.range(100).localCheckpoint()
     val cached = spark.sparkContext.parallelize(1 to 10).cache()
     cached.count()
-    val before = persisted
-    Harness.isolated(spark)(spark.range(50).localCheckpoint().count())
-    assert(persisted == before)
+    val ours = persisted -- start
+    val (pin, made) = Harness.isolated(spark) {
+      val pin = spark.range(50).localCheckpoint()
+      (pin, persisted -- start -- ours)
+    }
+    assert(ours.size == 2 && ours.contains(cached.id) && ours.subsetOf(persisted))
+    assert(pin.columns.nonEmpty && made.size == 1 && (persisted & made).isEmpty)
     assert(kept.count() == 100 && cached.count() == 10)
     cached.unpersist(blocking = true)
   }
